@@ -56,15 +56,15 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    # deliberately NOT lowering coalescePartitions.minPartitionSize here:
-    # a blanket floor change reorders FP aggregation (it flipped
-    # agg_global_summary's rounded avg vs the oracle in r10 opt). CPU-dense
-    # Python stages get explicit repartition() at the operator instead; the
-    # env knob below exists for experiments only.
-    spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"),
-    )
+    # AQE coalescing targets max(shuffleBytes/parallelism, minPartitionSize),
+    # so the stock 1 MB floor coalesces byte-cheap / CPU-dense shuffles
+    # (token streams, candidate pairs, archive groups) down to 1-2 tasks.
+    # The floor stays at Spark's 1 MB anyway: lowering it changes
+    # post-shuffle partition counts globally, which reorders floating-point
+    # aggregation and flipped agg_global_summary's 6-decimal rounding vs the
+    # oracle (r10 opt). CPU-dense Python stages get explicit repartition()
+    # at the operator instead.
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
 
 
 # Memoized (session → {(sf_dir, table) → DataFrame}). A DataFrame is just an

@@ -236,20 +236,6 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE coalescing targets max(shuffleBytes/parallelism, minPartitionSize)
-        # and the stock 1 MB floor coalesces byte-cheap / CPU-dense shuffles
-        # (token streams, candidate pairs, archive groups: ~0.5-3 MB
-        # compressed but seconds of md5/codec work) down to 1-2 tasks. A
-        # blanket lower floor was measured in r10 opt and REJECTED: it
-        # changes post-shuffle partition counts globally, which reorders
-        # floating-point aggregation and flipped agg_global_summary's
-        # 6-decimal rounding vs the oracle (result identity > parallelism).
-        # CPU-dense Python stages get explicit repartition() at the operator
-        # instead; the env knob stays for experiments only.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"),
-        )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # PySpark 4's DataFrame-debugging wrapper decorates every DataFrame/

@@ -5,7 +5,6 @@ upsert sink (reference R16/R17), and the JSON event sink (R20).
 
 from .readers import read_csv, read_json, read_parquet, stream_from_dir, stream_rate
 from .sinks import (
-    IngestEvent,
     emit_ingest_events,
     upsert_partitioned_parquet,
     write_partitioned_parquet,
@@ -20,5 +19,4 @@ __all__ = [
     "write_partitioned_parquet",
     "upsert_partitioned_parquet",
     "emit_ingest_events",
-    "IngestEvent",
 ]

@@ -10,7 +10,7 @@ plain parquet has no MERGE, so we reproduce exactly-once-by-key with
 
 Re-running the same batch rewrites the same partitions with the same rows —
 idempotent (tests/test_ingest.py proves run-twice ⇒ same counts). The
-Delta-format upgrade path is ``MERGE INTO`` keyed the same way.
+transactional form of the same merge is ``tableformat.merge_into``.
 
 Scale notes: dynamic overwrite touches only partitions present in the batch
 (a day of data rewrites a day, not the table); the dedup shuffles the batch +
@@ -20,8 +20,6 @@ partition natively; file sizing is controlled with maxRecordsPerFile.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -65,13 +63,21 @@ def write_partitioned_parquet(
 def _dedup_last_wins(
     df: DataFrame, key_cols: list[str], order_col: str
 ) -> DataFrame:
-    """Keep the newest row per key (deterministic: order_col desc, then the
-    full key as tiebreak) — the reference's merge=True last-writer-wins."""
-    w = W.partitionBy(*key_cols).orderBy(F.col(order_col).desc_nulls_last(), *key_cols)
+    """Keep the newest row per key — the reference's merge=True
+    last-writer-wins. Ties on ``order_col`` go to the batch row over the
+    existing row when ``df`` carries ``_prio`` (1 = batch, 0 = existing:
+    MERGE's ``WHEN MATCHED AND s.order >= t.order``), then to the least
+    remaining columns, so tied rows keep the same winner in any arrival
+    order."""
+    prio = [F.col("_prio").desc()] if "_prio" in df.columns else []
+    rest = [c for c in df.columns if c not in (*key_cols, order_col, "_prio")]
+    w = W.partitionBy(*key_cols).orderBy(
+        F.col(order_col).desc_nulls_last(), *prio, *rest
+    )
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .drop("_rn")
+        .drop("_rn", "_prio")
     )
 
 
@@ -89,136 +95,36 @@ def upsert_partitioned_parquet(
     1. read existing rows of only the partitions the batch touches
        (partition pruning via semi-join on partition values);
     2. union with the batch, dedup last-wins on ``key_cols``;
-    3. dynamic-partition-overwrite those partitions only.
+    3. dynamic-partition-overwrite those partitions only (a per-write
+       option: the session's own overwrite mode is never touched).
 
-    Delta/Iceberg upgrade path (no table-format jars in this sandbox, so
-    plain parquet + dynamic overwrite is the implementation here). With a
-    Delta table the whole function collapses to one statement — Delta's
-    transaction log makes the swap atomic for concurrent readers and
-    removes the read-own-input staging:
-
-        batch.dropDuplicates(key_cols)  # or _dedup_last_wins for true
-                                        # last-writer-wins within a batch
-        batch.createOrReplaceTempView("batch")
-        spark.sql(f'''
-            MERGE INTO delta.`{path}` AS t
-            USING batch AS s
-            ON  {' AND '.join(f't.{k} = s.{k}' for k in key_cols)}
-            WHEN MATCHED AND s.{order_col} >= t.{order_col}
-                THEN UPDATE SET *
-            WHEN NOT MATCHED THEN INSERT *
-        ''')
-
-    Partition pruning still applies when ``key_cols`` include the partition
-    columns (Delta derives file-level pruning from the ON clause).
+    No transaction log, so atomicity is per partition; the transactional
+    form with the same key semantics is ``tableformat.merge_into``.
     """
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged = batch
-        if _table_exists(spark, path):
-            current = spark.read.parquet(path)
-            touched = batch.select(*partition_cols).distinct()
-            affected_old = current.join(
-                F.broadcast(touched), partition_cols, "left_semi"
-            )
-            merged = affected_old.unionByName(batch)
-        deduped = _dedup_last_wins(merged, key_cols, order_col)
-        # The merged plan READS the same path the write overwrites.
-        # Materialize the deduped rows (executor-local blocks) before the
-        # overwrite starts, so no task can observe the table mid-rewrite —
-        # staging without the extra write+read round-trip of a temp
-        # directory. (Previously this was safe only by the accident of the
-        # window's shuffle boundary.)
-        deduped = deduped.localCheckpoint(eager=True)
-        (
-            deduped.repartition(*partition_cols)
-            .write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .parquet(path)
+    merged = batch
+    if _table_exists(spark, path):
+        current = spark.read.parquet(path)
+        touched = batch.select(*partition_cols).distinct()
+        affected_old = current.join(
+            F.broadcast(touched), partition_cols, "left_semi"
         )
-    finally:
-        # restore the session's overwrite semantics — leaving "dynamic" set
-        # silently changes every later overwrite in the session
-        if prev_mode is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-
-
-def upsert(
-    spark: SparkSession,
-    batch: DataFrame,
-    path: str,
-    key_cols: list[str],
-    partition_cols: list[str],
-    order_col: str,
-    provider: str = "parquet",
-    batch_id: str | None = None,
-) -> None:
-    """Provider seam for the keyed upsert (round 8, VERDICT r7 #4 — the
-    Kafka treatment applied to R16): ONE call site, swappable storage
-    backends, so moving a deployment from plain parquet to a
-    transactional table format changes an argument, not the pipeline.
-
-    - ``parquet``   — dedup + dynamic-partition-overwrite
-                      (:func:`upsert_partitioned_parquet`; no transaction
-                      log, partition-grain atomicity).
-    - ``txnlog``    — the emulated transaction-log table
-                      (tableformat.py): real ``MERGE INTO`` semantics,
-                      snapshot isolation, file-stats pruning, time
-                      travel, exactly-once ``batch_id`` replay.
-    - ``delta``     — real Delta Lake ``MERGE INTO`` (requires the
-                      delta-spark jars, absent in this sandbox; the SQL
-                      composed here is the production statement).
-
-    ``partition_cols`` shape the parquet provider's overwrite grain; the
-    log-based providers prune at file level from key stats instead.
-    """
-    if provider == "parquet":
-        upsert_partitioned_parquet(
-            spark, batch, path, key_cols, partition_cols, order_col
+        merged = affected_old.withColumn("_prio", F.lit(0)).unionByName(
+            batch.withColumn("_prio", F.lit(1))
         )
-        return
-    if provider == "txnlog":
-        from .tableformat import merge_into
-
-        merge_into(spark, batch, path, key_cols, order_col, batch_id=batch_id)
-        return
-    if provider == "delta":
-        view = f"_upsert_batch_{abs(hash(path)) % 10**8}"
-        _dedup_last_wins(batch, key_cols, order_col).createOrReplaceTempView(view)
-        on = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
-        try:
-            spark.sql(
-                f"""
-                MERGE INTO delta.`{path}` AS t
-                USING {view} AS s
-                ON {on}
-                WHEN MATCHED AND s.{order_col} >= t.{order_col}
-                    THEN UPDATE SET *
-                WHEN NOT MATCHED THEN INSERT *
-                """
-            )
-        except Exception as exc:  # jar-less container: fail with guidance
-            raise RuntimeError(
-                "provider='delta' needs the delta-spark jars on the "
-                "cluster (spark.jars.packages=io.delta:delta-spark_2.13:…, "
-                "spark.sql.extensions=io.delta.sql.DeltaSparkSessionExtension); "
-                "use provider='txnlog' for the jar-free transactional table"
-            ) from exc
-        finally:
-            spark.catalog.dropTempView(view)
-        return
-    raise ValueError(f"unknown upsert provider: {provider!r}")
-
-
-@dataclass
-class IngestEvent:
-    """Schema of the per-batch summary event (reference R20 payload,
-    ``app/alpaca_service.py:239-250``)."""
-
-    event_type: str = "HistoricalDataUpdated"
+    deduped = _dedup_last_wins(merged, key_cols, order_col)
+    # The merged plan READS the same path the write overwrites.
+    # Materialize the deduped rows (executor-local blocks) before the
+    # overwrite starts, so no task can observe the table mid-rewrite —
+    # staging without the extra write+read round-trip of a temp
+    # directory.
+    deduped = deduped.localCheckpoint(eager=True)
+    (
+        deduped.repartition(*partition_cols)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
 
 
 def emit_ingest_events(batch: DataFrame, group_cols: list[str], ts_col: str) -> DataFrame:
@@ -360,48 +266,41 @@ def delete_keys_partitioned_parquet(
     rejected rather than mis-targeted). The emptied-partition list is
     bounded by the takedown batch's partition count, never data-sized.
     """
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        current = spark.read.parquet(path)
-        touched = keys.select(*partition_cols).distinct()
-        scoped_keys = keys.select(*key_cols, *partition_cols).distinct()
-        affected = current.join(F.broadcast(touched), partition_cols, "left_semi")
-        remaining = affected.join(
-            F.broadcast(scoped_keys), key_cols + partition_cols, "left_anti"
+    current = spark.read.parquet(path)
+    touched = keys.select(*partition_cols).distinct()
+    scoped_keys = keys.select(*key_cols, *partition_cols).distinct()
+    affected = current.join(F.broadcast(touched), partition_cols, "left_semi")
+    remaining = affected.join(
+        F.broadcast(scoped_keys), key_cols + partition_cols, "left_anti"
+    )
+    remaining = remaining.localCheckpoint(eager=True)
+    (
+        remaining.repartition(*partition_cols)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
+    emptied = touched.exceptAll(remaining.select(*partition_cols).distinct())
+    jvm = spark._jvm
+    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
+        spark._jsc.hadoopConfiguration()
+    )
+    for row in emptied.collect():  # bounded by batch partition count
+        parts = []
+        for c in partition_cols:
+            v = str(row[c])
+            if any(ch in v for ch in '/\\:=#%\n\r'):
+                raise ValueError(
+                    f"partition value {v!r} needs Hive escaping; refusing "
+                    "to build a raw directory path for deletion"
+                )
+            parts.append(f"{c}={v}")
+        pdir = jvm.org.apache.hadoop.fs.Path(
+            path.rstrip("/") + "/" + "/".join(parts)
         )
-        remaining = remaining.localCheckpoint(eager=True)
-        (
-            remaining.repartition(*partition_cols)
-            .write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-        emptied = touched.exceptAll(remaining.select(*partition_cols).distinct())
-        jvm = spark._jvm
-        fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
-        for row in emptied.collect():  # bounded by batch partition count
-            parts = []
-            for c in partition_cols:
-                v = str(row[c])
-                if any(ch in v for ch in '/\\:=#%\n\r'):
-                    raise ValueError(
-                        f"partition value {v!r} needs Hive escaping; refusing "
-                        "to build a raw directory path for deletion"
-                    )
-                parts.append(f"{c}={v}")
-            pdir = jvm.org.apache.hadoop.fs.Path(
-                path.rstrip("/") + "/" + "/".join(parts)
-            )
-            if fs.exists(pdir):
-                fs.delete(pdir, True)
-    finally:
-        if prev_mode is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+        if fs.exists(pdir):
+            fs.delete(pdir, True)
 
 
 def seed_if_absent(

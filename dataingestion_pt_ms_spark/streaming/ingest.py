@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources.sinks import emit_ingest_events, upsert_partitioned_parquet
+from ..sources.tableformat import merge_into
 
 RAW_BAR_SCHEMA = T.StructType(
     [
@@ -52,6 +53,11 @@ ASSET_SCHEMA = T.StructType(
 )
 
 TIMEFRAMES = ("Minute", "Hour", "Day", "Week", "Month")  # app/config.py:62-71
+
+# The bar upsert key (R14, ``app/alpaca_service.py:194``) and its
+# last-writer-wins order column (R15's audit stamp).
+BAR_KEY = ["symbol", "timeframe", "ts"]
+BAR_ORDER = "updated_at"
 
 
 def normalize_bars(raw: DataFrame, assets: DataFrame) -> DataFrame:
@@ -107,12 +113,7 @@ def run_batch_ingest(
 ) -> IngestResult:
     bars = normalize_bars(raw, assets)
     upsert_partitioned_parquet(
-        spark,
-        bars,
-        table_path,
-        key_cols=["symbol", "timeframe", "ts"],
-        partition_cols=["bar_date"],
-        order_col="updated_at",
+        spark, bars, table_path, BAR_KEY, ["bar_date"], BAR_ORDER
     )
     written = spark.read.parquet(table_path)
     # Driver-side collect is SINK-side only and bounded by the ingest
@@ -164,14 +165,20 @@ def streaming_ingest(
             return
         bars = normalize_bars(batch_df, assets)
         upsert_partitioned_parquet(
-            spark,
-            bars,
-            table_path,
-            key_cols=["symbol", "timeframe", "ts"],
-            partition_cols=["bar_date"],
-            order_col="updated_at",
+            spark, bars, table_path, BAR_KEY, ["bar_date"], BAR_ORDER
         )
 
+    return _start_foreach_batch(raw_stream, sink, checkpoint_path, processing_time)
+
+
+def _start_foreach_batch(
+    raw_stream: DataFrame,
+    sink,
+    checkpoint_path: str,
+    processing_time: str | None,
+):
+    """Start ``sink`` as a foreachBatch query: ``availableNow`` by default,
+    or an interval trigger when ``processing_time`` is given."""
     writer = raw_stream.writeStream.foreachBatch(sink).option(
         "checkpointLocation", checkpoint_path
     )
@@ -220,8 +227,6 @@ def streaming_ingest_txnlog(
     circuits on the committed batch_id before any write happens. Readers
     additionally get snapshot isolation DURING the upsert and time travel
     across micro-batches for free."""
-    from ..sources.tableformat import merge_into
-
     ckpt_tag = _txn_app_id(checkpoint_path, app_id)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
@@ -232,16 +237,9 @@ def streaming_ingest_txnlog(
             spark,
             bars,
             table_path,
-            key_cols=["symbol", "timeframe", "ts"],
-            order_col="updated_at",
+            BAR_KEY,
+            BAR_ORDER,
             batch_id=f"{ckpt_tag}-{epoch_id}",
         )
 
-    writer = raw_stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(raw_stream, sink, checkpoint_path, processing_time)

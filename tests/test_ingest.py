@@ -270,10 +270,10 @@ def test_delete_keys_is_partition_scoped(spark, tmp_path):
 
 
 def test_sinks_restore_partition_overwrite_mode(spark, tmp_path):
-    """Both partition-rewriting sinks must save/restore the session's
-    partitionOverwriteMode instead of leaving 'dynamic' behind (ADVICE r2,
-    low): later overwrites in the same session would silently change
-    semantics."""
+    """Both partition-rewriting sinks must leave the session's
+    partitionOverwriteMode as they found it (ADVICE r2, low): they set
+    dynamic overwrite on their own writer only, so later overwrites in the
+    same session keep their semantics."""
     import datetime as dt
 
     from dataingestion_pt_ms_spark.sources.sinks import (

@@ -1,8 +1,7 @@
 """Transaction-log table format tests (round 8, VERDICT r7 #4): MERGE
 semantics, exactly-once replay, snapshot isolation / time travel, file
-pruning with untouched-file byte identity, the RTBF delete, and the
-provider seam (txnlog vs parquet parity; delta fails with guidance in
-this jar-less container)."""
+pruning with untouched-file byte identity, the RTBF delete, and parity
+with the parquet upsert sink (same contents, same tie winners)."""
 
 from __future__ import annotations
 
@@ -11,7 +10,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from dataingestion_pt_ms_spark.sources import tableformat as TF
-from dataingestion_pt_ms_spark.sources.sinks import upsert
+from dataingestion_pt_ms_spark.sources.sinks import upsert_partitioned_parquet
 
 
 def _batch(spark, rows):
@@ -138,17 +137,19 @@ def test_concurrent_commit_raises(spark, tmp_path):
 
 
 def test_upsert_provider_parity(spark, tmp_path):
-    """txnlog and parquet providers converge to the same table contents
-    for the same batch sequence."""
+    """The txn-log MERGE and the parquet upsert converge to the same table
+    contents for the same batch sequence, including a batch whose order
+    value ties an existing row (the batch row wins in both)."""
     pq, tx = str(tmp_path / "pq"), str(tmp_path / "tx")
     batches = [
         [(1, 10, "a"), (2, 10, "b")],
         [(1, 20, "a2"), (3, 10, "c")],
+        [(2, 10, "b2")],
     ]
     for rows in batches:
         b = _batch(spark, rows).withColumn("part", F.col("k") % 2)
-        upsert(spark, b, pq, ["k"], ["part"], "ts", provider="parquet")
-        upsert(spark, b, tx, ["k"], ["part"], "ts", provider="txnlog")
+        upsert_partitioned_parquet(spark, b, pq, ["k"], ["part"], "ts")
+        TF.merge_into(spark, b, tx, ["k"], "ts")
     left = {
         r.k: (r.ts, r.v, r.part)
         for r in spark.read.parquet(pq).collect()
@@ -159,30 +160,26 @@ def test_upsert_provider_parity(spark, tmp_path):
     }
     assert left == right == {
         1: (20, "a2", 1),
-        2: (10, "b", 0),
+        2: (10, "b2", 0),
         3: (10, "c", 1),
     }
 
 
-def test_upsert_delta_provider_fails_with_guidance(spark, tmp_path):
-    b = _batch(spark, [(1, 10, "a")])
-    with pytest.raises(RuntimeError, match="delta-spark jars"):
-        upsert(
-            spark, b, str(tmp_path / "d"), ["k"], [], "ts", provider="delta"
-        )
-
-
-def test_upsert_unknown_provider(spark, tmp_path):
-    with pytest.raises(ValueError, match="unknown upsert provider"):
-        upsert(
-            spark,
-            _batch(spark, [(1, 10, "a")]),
-            str(tmp_path / "x"),
-            ["k"],
-            [],
-            "ts",
-            provider="iceberg-nope",
-        )
+def test_upsert_tie_winner_independent_of_arrival_order(spark, tmp_path):
+    """Two batch rows with the same key and order value keep the same
+    winner whichever arrives first — a replayed batch (every row of a
+    batch shares one ``current_timestamp()``) must store what the first
+    run stored."""
+    rows = [(1, 5, "x"), (1, 5, "y")]
+    kept = set()
+    for i, order in enumerate((rows, rows[::-1])):
+        b = _batch(spark, order).coalesce(1).withColumn("part", F.lit(0))
+        pq, tx = str(tmp_path / f"pq{i}"), str(tmp_path / f"tx{i}")
+        upsert_partitioned_parquet(spark, b, pq, ["k"], ["part"], "ts")
+        TF.merge_into(spark, b, tx, ["k"], "ts")
+        kept |= {r.v for r in spark.read.parquet(pq).collect()}
+        kept |= {r.v for r in TF.read_snapshot(spark, tx).collect()}
+    assert len(kept) == 1, kept
 
 
 def test_checkpoint_compacts_and_preserves_state(spark, tmp_path):
