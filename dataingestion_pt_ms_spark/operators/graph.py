@@ -28,8 +28,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -43,16 +41,14 @@ from pyspark.sql import functions as F
 # is already trusted to hold; above it the distributed loop runs exactly
 # as before (this is a size-adaptive strategy choice, not a local tune —
 # the gating count reads an already-checkpointed RDD, one cheap job).
-_CC_DRIVER_MAX_SYM_ROWS = int(
-    os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX_SYM_ROWS", str(4_000_000))
-)
+_CC_DRIVER_MAX_SYM_ROWS = 4_000_000
 
 
 def _driver_sym_rows_cap(node_type) -> int:
     """Row cap for the driver mirrors, derated for wide key types: the 4 M
-    default is sized for 16 B/row long pairs (~64 MB in toPandas). String
+    cap is sized for 16 B/row long pairs (~64 MB in toPandas). String
     doc-id keys are an order of magnitude wider per row in pandas (object
-    header + the bytes), so gate those at 1/8th of the configured cap."""
+    header + the bytes), so gate those at 1/8th of the cap."""
     from pyspark.sql import types as T
 
     if isinstance(

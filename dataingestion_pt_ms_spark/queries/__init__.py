@@ -18,10 +18,7 @@ Conventions that make the differential comparison well-defined:
 
 from __future__ import annotations
 
-import glob
-import json
 from dataclasses import dataclass, field
-from pathlib import Path
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,29 +32,19 @@ class QuerySpec:
     fn: QueryFn
     oracle: Optional[str]  # DuckDB SQL; None => rows-only check
     tags: tuple[str, ...] = field(default_factory=tuple)
-    since: int = 0  # build round that added the query (0 = rounds 1-6)
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
 _LOADED = False
 
 
-def register(
-    name: str,
-    oracle: str | None = None,
-    tags: tuple[str, ...] = (),
-    since: int = 0,
-):
-    """Decorator: register ``fn`` as the named query ``name``. ``since``
-    (the round that added the query) keys the attestation ordering:
-    newer registrations join the BACK of the never-attested queue so a
-    new row never displaces a longer-waiting one from the driver's
-    50-query round sample (VERDICT r6 #4/#8)."""
+def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
+    """Decorator: register ``fn`` as the named query ``name``."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = QuerySpec(name, fn, oracle, tuple(tags), since)
+        _REGISTRY[name] = QuerySpec(name, fn, oracle, tuple(tags))
         return fn
 
     return deco
@@ -95,40 +82,10 @@ def _load_all() -> None:
     _LOADED = True
 
 
-def _driver_attested() -> frozenset[str]:
-    """Query names that already have a row in any past driver CORRECTNESS
-    artifact. The driver walks ``queries()`` in dict order and may stop early
-    (round 1 attested only 50/132), so ``registry()`` orders never-attested
-    queries first — across rounds every query accumulates an external
-    driver-verified row."""
-    names: set[str] = set()
-    root = Path(__file__).resolve().parents[2]
-    for p in glob.glob(str(root / "CORRECTNESS_r*.json")):
-        try:
-            with open(p) as fh:
-                names |= set(json.load(fh))
-        except (OSError, ValueError):
-            continue
-    return frozenset(names)
-
-
 def registry() -> dict[str, QuerySpec]:
+    """Every registered query, in registration order."""
     _load_all()
-    seen = _driver_attested()
-    # Stable sort: never-attested first so each driver round's 50-row sample
-    # is all-new; within never-attested, rows-only (no-oracle) names last so
-    # a structurally-unattestable row never burns a driver slot while an
-    # oracled query is still waiting (r5: ``sample_seeded_fraction``), and
-    # newer registrations (``since``) after longer-waiting ones (r6 #4).
-    ordered = sorted(
-        _REGISTRY,
-        key=lambda n: (
-            n in seen,
-            _REGISTRY[n].oracle is None,
-            _REGISTRY[n].since,
-        ),
-    )
-    return {name: _REGISTRY[name] for name in ordered}
+    return dict(_REGISTRY)
 
 
 def queries() -> dict[str, QueryFn]:

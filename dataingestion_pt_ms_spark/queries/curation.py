@@ -1150,7 +1150,6 @@ def _web_curation_tail(docs: DataFrame, extracted: DataFrame) -> DataFrame:
     "pipeline_web_curation",
     oracle=WEB_CURATION_ORACLE,
     tags=("llm", "text", "pipeline", "udf"),
-    since=7,
 )
 def pipeline_web_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
@@ -1310,7 +1309,6 @@ def _warc_inventory_oracle() -> str:
     "warc_record_inventory",
     oracle=_warc_inventory_oracle(),
     tags=("llm", "source", "warc", "udf", "audit"),
-    since=8,
 )
 def warc_record_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Record-grain audit of the WARC container walk: per (warc-type,
@@ -1347,7 +1345,6 @@ def warc_record_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pipeline_web_curation_warc",
     oracle=WEB_CURATION_ORACLE,
     tags=("llm", "text", "pipeline", "warc", "udf"),
-    since=8,
 )
 def pipeline_web_curation_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The web-curation pipeline fed from WARC containers instead of a
@@ -1391,7 +1388,6 @@ ORDER BY bucket
     "archive_tar_members_audit",
     oracle=TAR_MEMBERS_ORACLE,
     tags=("llm", "source", "tar", "udf", "audit"),
-    since=8,
 )
 def archive_tar_members_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TAR-container round-trip audit: pack each corpus segment's raw
@@ -1458,7 +1454,6 @@ def _member_bucket_rollup(members: DataFrame) -> DataFrame:
     "archive_zip_members_audit",
     oracle=TAR_MEMBERS_ORACLE,
     tags=("llm", "source", "zip", "udf", "audit"),
-    since=10,
 )
 def archive_zip_members_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ZIP-container round-trip audit (round 10 — the third container

@@ -1612,7 +1612,6 @@ ORDER BY j_decile
     "dedup_minhash_lsh_pairs_counts",
     oracle=MINHASH_COUNTS_ORACLE,
     tags=("llm", "dedup", "lsh", "audit"),
-    since=8,
 )
 def dedup_minhash_lsh_pairs_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-grain twin of ``dedup_minhash_lsh_pairs_md5``: the complete
@@ -1658,7 +1657,6 @@ ORDER BY direction
     "dedup_containment_pairs_counts",
     oracle=CONTAINMENT_COUNTS_ORACLE,
     tags=("llm", "dedup", "lsh", "audit"),
-    since=8,
 )
 def dedup_containment_pairs_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-grain twin of ``dedup_containment_pairs``: the asymmetric
@@ -1709,7 +1707,6 @@ ORDER BY ov_decile
     "dedup_winnowing_overlap_counts",
     oracle=WINNOW_COUNTS_ORACLE,
     tags=("llm", "dedup", "fingerprint", "audit"),
-    since=8,
 )
 def dedup_winnowing_overlap_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-grain twin of ``dedup_winnowing_overlap``: the winnowing
@@ -1752,7 +1749,6 @@ ORDER BY probe_key
     "dedup_cross_corpus_minhash_counts",
     oracle=CROSS_MINHASH_COUNTS_ORACLE,
     tags=("llm", "dedup", "lsh", "contamination", "audit"),
-    since=8,
 )
 def dedup_cross_corpus_minhash_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-grain twin of ``dedup_cross_corpus_minhash_md5``: the

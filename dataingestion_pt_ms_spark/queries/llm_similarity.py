@@ -1370,7 +1370,6 @@ ORDER BY e.vec_id
     "sim_dbscan_capped",
     oracle=DBSCAN_CAPPED_ORACLE,
     tags=("llm", "clustering", "graph"),
-    since=7,
 )
 def sim_dbscan_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import density_clusters_capped
@@ -1457,7 +1456,6 @@ ORDER BY grain
     "sim_dbscan_capped_counts",
     oracle=DBSCAN_COUNTS_ORACLE,
     tags=("llm", "clustering", "graph", "audit"),
-    since=8,
 )
 def sim_dbscan_capped_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import density_clusters_capped
@@ -2445,7 +2443,6 @@ ORDER BY doc_id
     "multimodal_png_decode",
     oracle=PNG_DECODE_ORACLE,
     tags=("llm", "multimodal", "udf"),
-    since=7,
 )
 def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
@@ -2515,7 +2512,6 @@ ORDER BY doc_id
     "multimodal_gif_decode",
     oracle=GIF_DECODE_ORACLE,
     tags=("llm", "multimodal", "udf"),
-    since=7,
 )
 def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
@@ -2608,7 +2604,6 @@ ORDER BY doc_id
     "multimodal_jpeg_decode",
     oracle=JPEG_DECODE_ORACLE,
     tags=("llm", "multimodal", "udf"),
-    since=7,
 )
 def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
@@ -2772,7 +2767,6 @@ ORDER BY doc_id, frame_idx
     "multimodal_animated_gif_shots",
     oracle=ANIMATED_GIF_SHOTS_ORACLE,
     tags=("llm", "multimodal", "udf"),
-    since=7,
 )
 def multimodal_animated_gif_shots(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
@@ -3089,7 +3083,6 @@ _TRIAGE_OUT_SCHEMA = "doc_id long, media_kind string, codec string, metric doubl
     "multimodal_media_triage",
     oracle=MEDIA_TRIAGE_ORACLE,
     tags=("llm", "multimodal", "udf"),
-    since=7,
 )
 def multimodal_media_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
@@ -3180,7 +3173,6 @@ _WARC_TRIAGE_ORACLE = (
     "pipeline_warc_media_triage",
     oracle=_WARC_TRIAGE_ORACLE,
     tags=("llm", "multimodal", "pipeline", "warc", "udf"),
-    since=9,
 )
 def pipeline_warc_media_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
@@ -3339,7 +3331,6 @@ ORDER BY media_kind, codec, bucket
     "pipeline_warc_triage_scaled",
     oracle=_WARC_SCALED_ORACLE,
     tags=("llm", "multimodal", "pipeline", "warc", "udf"),
-    since=10,
 )
 def pipeline_warc_triage_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
@@ -3553,7 +3544,6 @@ ORDER BY key_a, key_b
     "multimodal_cross_format_dedup",
     oracle=CROSS_FORMAT_ORACLE,
     tags=("llm", "multimodal", "dedup", "udf"),
-    since=7,
 )
 def multimodal_cross_format_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
@@ -3711,7 +3701,6 @@ ORDER BY doc_id
     "multimodal_g711_roundtrip",
     oracle=G711_ORACLE,
     tags=("llm", "multimodal", "udf"),
-    since=7,
 )
 def multimodal_g711_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
@@ -3834,7 +3823,6 @@ ORDER BY doc_id
     "multimodal_adpcm_roundtrip",
     oracle=ADPCM_ORACLE,
     tags=("llm", "multimodal", "udf"),
-    since=7,
 )
 def multimodal_adpcm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator

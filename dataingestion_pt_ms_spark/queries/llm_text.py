@@ -2733,7 +2733,6 @@ ORDER BY doc_id
     "text_html_extraction",
     oracle=HTML_EXTRACTION_ORACLE,
     tags=("llm", "text", "udf"),
-    since=7,
 )
 def text_html_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
@@ -2828,7 +2827,6 @@ ORDER BY doc_id
     "multimodal_pdf_extract",
     oracle=PDF_EXTRACTION_ORACLE,
     tags=("llm", "multimodal", "text", "udf"),
-    since=9,
 )
 def multimodal_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
@@ -2925,7 +2923,6 @@ ORDER BY status
     "multimodal_pdf_error_audit",
     oracle=PDF_ERROR_AUDIT_ORACLE,
     tags=("llm", "multimodal", "text", "udf"),
-    since=10,
 )
 def multimodal_pdf_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator

@@ -2372,7 +2372,6 @@ ORDER BY 1, 2
     "kafka_wire_events_parse",
     oracle=KAFKA_WIRE_ORACLE,
     tags=("source", "kafka", "streaming"),
-    since=7,
 )
 def kafka_wire_events_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.kafka import kafka_records, parse_kafka_envelope
@@ -2437,7 +2436,6 @@ SELECT * FROM ok UNION ALL SELECT * FROM dead ORDER BY bucket
     "events_dead_letter_audit",
     oracle=DEAD_LETTER_ORACLE,
     tags=("warehouse", "dq", "source"),
-    since=7,
 )
 def events_dead_letter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
@@ -2517,7 +2515,6 @@ ORDER BY snapshot
     "warehouse_txnlog_time_travel",
     oracle=TXNLOG_TT_ORACLE,
     tags=("warehouse", "merge", "sink", "audit"),
-    since=8,
 )
 def warehouse_txnlog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
@@ -2613,7 +2610,6 @@ ORDER BY snapshot_label
     "warehouse_txnlog_checkpoint_travel",
     oracle=TXNLOG_CKPT_ORACLE,
     tags=("warehouse", "merge", "sink", "audit"),
-    since=9,
 )
 def warehouse_txnlog_checkpoint_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil

@@ -8,16 +8,19 @@ pushdown flags) snapshotted to ``tools/plan_baseline.json``. A later
 code or config change that silently flips a broadcast join to
 sort-merge, adds an exchange, or drops pushdown now FAILS
 ``tests/test_plan_snapshots.py`` with a readable diff instead of
-surfacing as an unexplained bench regression three rounds later.
+surfacing as an unexplained slowdown later.
 
-Regenerate intentionally with::
+The snapshot set is the key set of the reviewed baseline file. Add a
+query to it, or regenerate intentionally, with::
 
-    python tools/plan_snapshot.py --write
+    python tools/plan_snapshot.py --write [name ...]
 
-after reviewing the printed diff. Fingerprints are computed at sf0.001
-(plan shape is data-size independent under fixed confs; AQE nodes are
-fingerprinted from the initial plan, which is deterministic for a fixed
-input and session config).
+after reviewing the printed diff. With names, only those entries are
+written and the rest of the baseline is kept; without, every entry is
+rewritten. Fingerprints are computed at sf0.001 (plan shape is data-size
+independent under fixed confs; AQE nodes are fingerprinted from the
+initial plan, which is deterministic for a fixed input and session
+config).
 """
 
 from __future__ import annotations
@@ -30,48 +33,6 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 BASELINE_PATH = Path(__file__).resolve().parent / "plan_baseline.json"
-
-# Round 6 (VERDICT r5 #4): the fingerprint set is no longer a hand-picked
-# shortlist — it is EVERY query in bench.py's guard table (BASELINE_SEC),
-# so a bench guard and a plan fingerprint always travel together: adding
-# a query to the bench without snapshotting its plan fails
-# tests/test_plan_snapshots.py, and a silent broadcast→sort-merge flip
-# (or new exchange, or lost pushdown) anywhere hot fails with a readable
-# diff. The original 22 hand-picked scale-critical queries are kept as a
-# documented core subset (they'd be in BASELINE_SEC anyway).
-CORE_QUERIES = [
-    "flagship_region_monthly_revenue",
-    "q3_shipping_priority",
-    "q9_product_type_profit",
-    "q18_large_volume_customers",
-    "join_left_outer_order_counts",
-    "join_bloom_runtime_filter",
-    "dedup_minhash_lsh_pairs",
-    "dedup_prefix_filter_pairs",
-    "dedup_winnowing_overlap",
-    "sim_ann_ivf_topk",
-    "sim_pq_adc_topk",
-    "text_tf_idf_topk",
-    "events_sessionize_gap30m",
-    "pipeline_curation_v3",
-    "sketch_kmv_distinct",
-    "lineitem_kfold_cv_ols",
-    "lineitem_histogram_split_finder",
-    "orders_target_encoding_oof",
-    "dedup_blocking_quality_audit",
-    "orders_wasserstein_drift",
-    "graph_lp_training_set",
-    "sim_margin_alignment_mining",
-]
-
-
-def _guarded_queries() -> list[str]:
-    from bench import BASELINE_SEC
-
-    return sorted(set(BASELINE_SEC) | set(CORE_QUERIES))
-
-
-SNAPSHOT_QUERIES = _guarded_queries()
 
 _FEATURES = [
     "BroadcastHashJoin",
@@ -99,34 +60,39 @@ def fingerprint(df) -> dict:
     return {k: v for k, v in fp.items() if v}
 
 
-def compute_all(spark, sf_dir: str) -> dict:
+def load_baseline() -> dict:
+    return json.loads(BASELINE_PATH.read_text())
+
+
+def compute_all(spark, sf_dir: str, names) -> dict:
     from dataingestion_pt_ms_spark.queries import registry
 
     reg = registry()
-    return {name: fingerprint(reg[name].fn(spark, sf_dir)) for name in SNAPSHOT_QUERIES}
+    return {name: fingerprint(reg[name].fn(spark, sf_dir)) for name in sorted(names)}
 
 
 def main() -> int:
     from dataingestion_pt_ms_spark.session import get_spark
 
     write = "--write" in sys.argv
+    named = [a for a in sys.argv[1:] if a != "--write"]
     sf_dir = "/root/testdata/sf0.001"
+    baseline = load_baseline()
     spark = get_spark("plan-snapshot")
-    current = compute_all(spark, sf_dir)
-    if BASELINE_PATH.exists():
-        baseline = json.loads(BASELINE_PATH.read_text())
-        diffs = {
-            n: {"baseline": baseline.get(n), "current": current[n]}
-            for n in current
-            if baseline.get(n) != current[n]
-        }
-        if diffs:
-            print(json.dumps(diffs, indent=2))
-            print(f"{len(diffs)} plan(s) changed")
-        else:
-            print("all plans match baseline")
+    current = compute_all(spark, sf_dir, set(baseline) | set(named))
+    diffs = {
+        n: {"baseline": baseline.get(n), "current": current[n]}
+        for n in current
+        if baseline.get(n) != current[n]
+    }
+    if diffs:
+        print(json.dumps(diffs, indent=2))
+        print(f"{len(diffs)} plan(s) changed")
+    else:
+        print("all plans match baseline")
     if write:
-        BASELINE_PATH.write_text(json.dumps(current, indent=2, sort_keys=True) + "\n")
+        baseline.update({n: current[n] for n in named} if named else current)
+        BASELINE_PATH.write_text(json.dumps(baseline, indent=2, sort_keys=True) + "\n")
         print(f"wrote {BASELINE_PATH}")
     return 0
 

@@ -18,9 +18,6 @@ and RocksDB state stores on the stateful-operator jobs (the
 foreachBatch jobs keep no engine state, so the provider is inert
 there and they run once).
 
-Wall-clock guards live in ``bench.py:STREAM_BASELINE_SEC`` (sf0.1,
-heap) with the same 2× GUARD_FACTOR discipline as the batch table.
-
 Usage:
     python tools/stream_bench.py [--sf-dir /root/testdata/sf0.1]
                                  [--triggers 8] [--provider heap|rocksdb|both]
@@ -39,7 +36,6 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-import bench
 from dataingestion_pt_ms_spark.catalog import load_table
 from dataingestion_pt_ms_spark.session import get_spark
 
@@ -222,9 +218,9 @@ def main() -> None:
     label = Path(args.sf_dir.rstrip("/")).name
     print(
         "| job | sf | provider | rows | wall s | rows/s | trigger p50/max ms "
-        "| state rows | state MB | verdict |"
+        "| state rows | state MB |"
     )
-    print("|---|---|---|---|---|---|---|---|---|---|")
+    print("|---|---|---|---|---|---|---|---|---|")
     results = []
     for name in names:
         for prov in providers:
@@ -240,19 +236,12 @@ def main() -> None:
             finally:
                 spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
                 shutil.rmtree(tmp, ignore_errors=True)
-            guard = bench.STREAM_BASELINE_SEC.get(name)
-            verdict = "—"
-            if prov == "heap" and guard and label == "sf0.1":
-                verdict = (
-                    "ok" if m["wall_s"] <= bench.GUARD_FACTOR * guard
-                    else f"SLOW (guard {guard}s)"
-                )
-            m.update(sf=label, provider=prov, verdict=verdict)
+            m.update(sf=label, provider=prov)
             results.append(m)
             print(
                 f"| {name} | {label} | {prov} | {m['rows']} | {m['wall_s']} "
                 f"| {m['rows_per_s']} | {m['trigger_p50_ms']:.0f}/{m['trigger_max_ms']:.0f} "
-                f"| {m['state_rows']} | {m['state_bytes'] / 1e6:.2f} | {verdict} |"
+                f"| {m['state_rows']} | {m['state_bytes'] / 1e6:.2f} |"
             )
             sys.stdout.flush()
     Path("/tmp/stream_bench_last.json").write_text(json.dumps(results, indent=1))

@@ -1,10 +1,11 @@
 """sf1 stress sweep for the heavy dedup / graph / similarity family
 (VERDICT r4 #6): synthesize a ~10× dataset from sf0.1 (the driver ships
-no sf1 and /root/testdata is read-only), run the top guard-table queries
-on it, and compare each wall time against 10× its sf0.1 guard — any
-query whose cost grows faster than input is a candidate-bill bug, the
-exact class the round-4 posting-geometry lessons (178 s prefix filter,
-11.7 s ER) were caught by.
+no sf1 and the test data is read-only), run the heavy queries on it,
+and compare each wall time against 10× the same query's sf0.1 wall,
+timed in the same run with the same ``--repeats`` — any query whose
+cost grows faster than input is a candidate-bill bug, the exact class
+the round-4 posting-geometry lessons (178 s prefix filter, 11.7 s ER)
+were caught by.
 
 Synthesis preserves the structures the heavy family actually measures:
 
@@ -32,7 +33,7 @@ round-5 synthesis) or .benchdata/sf10x/ (factor 100: the third char-map
 band and the modulo embedding rotation only engage for replicas ≥ 25 /
 ≥ dim, so the first 10 replicas of both factors coincide) and prints a
 markdown table ready for BENCH.md §13; the acceptance bar scales with
-the factor (wall ≤ factor × the sf0.1 guard).
+the factor (wall ≤ factor × the sf0.1 wall).
 """
 
 from __future__ import annotations
@@ -104,7 +105,7 @@ SPEC: dict[str, dict[str, tuple]] = {
     "embeddings": {"vec_id": ("shift", 10**7), "embedding": ("rotate",)},
 }
 
-# the heavy family: top guard-table entries (sec at sf0.1, min-of-3 hot)
+# the heavy family: the slowest queries at sf0.1 (min-of-3 hot) when drawn
 HEAVY = [
     "dedup_cluster_near_dups",
     "pipeline_curation_v3",
@@ -133,7 +134,7 @@ HEAVY = [
     "sql_recursive_cte_reachability",
     "orders_spearman_rank_corr",
     "lineitem_conformal_intervals",
-    # §13c next tier (round 6, VERDICT r5 #8): the 1-2 s guard band —
+    # §13c next tier (round 6, VERDICT r5 #8): the 1-2 s band —
     # graph/copurchase remainder, the rest of the pair-dedup family, the
     # AMS sketch, and the band-join count twin added this round
     "join_fuzzy_name_match_counts",
@@ -240,6 +241,17 @@ def synthesize(spark, factor: int) -> None:
         print(f"# {table}: {factor} replicas written", file=sys.stderr)
 
 
+def _best_wall(fn, spark, sf_dir: str, repeats: int) -> tuple[float, int]:
+    """Best-of-``repeats`` wall of ``count()`` on ``sf_dir``, and the count."""
+    best = n = None
+    for _ in range(repeats):
+        t0 = time.perf_counter()
+        n = fn(spark, sf_dir).count()
+        dt = time.perf_counter() - t0
+        best = dt if best is None else min(best, dt)
+    return best, n
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--regen", action="store_true")
@@ -263,31 +275,23 @@ def main() -> None:
         shutil.rmtree(dst, ignore_errors=True)
     synthesize(spark, args.factor)
 
-    import bench
-
     specs = registry()
     names = args.names or HEAVY
     print(
-        f"| query | sf0.1 guard (s) | {label} wall (s) | ratio "
+        f"| query | sf0.1 wall (s) | {label} wall (s) | ratio "
         f"| rows sf0.1 → {label} | rows ratio | verdict |"
     )
     print("|---|---|---|---|---|---|---|")
     for name in names:
         fn = specs[name].fn
         fn(spark, "/root/testdata/sf0.001").count()  # plan/codegen warmup
-        n01 = fn(spark, "/root/testdata/sf0.1").count()
-        best = None
-        for _ in range(args.repeats):
-            t0 = time.perf_counter()
-            n = fn(spark, dst).count()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        ref = bench.BASELINE_SEC.get(name)
-        ratio = best / ref if ref else float("nan")
+        ref, n01 = _best_wall(fn, spark, SRC, args.repeats)
+        best, n = _best_wall(fn, spark, dst, args.repeats)
+        ratio = best / ref
         rows_ratio = f"{n / n01:.1f}x" if n01 else "n/a"
-        verdict = "ok" if ref and ratio <= args.factor else "SUPERLINEAR"
+        verdict = "ok" if ratio <= args.factor else "SUPERLINEAR"
         print(
-            f"| {name} | {ref} | {best:.2f} | {ratio:.1f}x "
+            f"| {name} | {ref:.2f} | {best:.2f} | {ratio:.1f}x "
             f"| {n01} → {n} | {rows_ratio} | {verdict} |"
         )
         sys.stdout.flush()

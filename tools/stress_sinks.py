@@ -20,8 +20,7 @@ day-partitions, the same replica geometry as the query rungs.
 Usage:
     python tools/stress_sinks.py [--factor 10|100] [--keep]
 
-Prints the §13f markdown rows and WARNs when a wall exceeds
-GUARD_FACTOR x its ``bench.SINK_BASELINE_SEC`` record.
+Prints the §13f markdown rows with each pass's measured wall.
 """
 
 from __future__ import annotations
@@ -37,7 +36,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F
 
-from bench import GUARD_FACTOR, SINK_BASELINE_SEC
 from dataingestion_pt_ms_spark.session import get_spark
 from dataingestion_pt_ms_spark.sources.sinks import (
     delete_keys_partitioned_parquet,
@@ -239,12 +237,6 @@ def main() -> None:
     print("|---|---|---|---|")
     for r in rows:
         print(r)
-    for name, wall in walls.items():
-        ref = SINK_BASELINE_SEC.get(f"{name}_{args.factor}x")
-        if ref is not None and wall > GUARD_FACTOR * ref:
-            print(
-                f"WARN {name}: {wall:.1f}s > {GUARD_FACTOR}x recorded {ref:.1f}s"
-            )
 
 
 if __name__ == "__main__":
