@@ -9,7 +9,7 @@ No reference analog ([NS] north-star operator). Design:
   centroid updates are codegen'd hash aggregations over (key × k × dim)
   rows — no interpreted array lambdas in the hot path, no collect();
 - centroids live in a tiny (cluster, dim, c) frame broadcast into the
-  assignment join; state per iteration is localCheckpoint'd (constant-size
+  assignment join; state per iteration is materialized (constant-size
   lineage, same discipline as operators/graph.py);
 - determinism across engines/runs: init is the k smallest keys; distances
   and updated centroids are rounded (6 dp) before comparison so
@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+
+from ..session import materialize
 
 
 def _dims(df: DataFrame, vec_col: str, key_col: str) -> DataFrame:
@@ -53,7 +55,7 @@ def kmeans_lloyd(
         raise ValueError(f"iters must be >= 1, got {iters}")
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    dims = _dims(df, vec_col, key_col).localCheckpoint()
+    dims = materialize(_dims(df, vec_col, key_col), eager=True)
     seeds = (
         df.select(key_col)
         .orderBy(key_col)
@@ -63,10 +65,10 @@ def kmeans_lloyd(
             (F.row_number().over(W.orderBy(key_col)) - 1).cast("long").alias("cluster"),
         )
     )
-    cent = (
+    cent = materialize(
         seeds.join(dims, seeds["_seed"] == dims[key_col])
-        .select("cluster", "d", F.col("x").alias("c"))
-        .localCheckpoint()
+        .select("cluster", "d", F.col("x").alias("c")),
+        eager=True,
     )
 
     assign = None
@@ -81,17 +83,17 @@ def kmeans_lloyd(
             )
         )
         w = W.partitionBy(key_col).orderBy("dist", "cluster")
-        assign = (
+        assign = materialize(
             dist.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .select(key_col, "cluster", "dist")
-            .localCheckpoint()
+            .select(key_col, "cluster", "dist"),
+            eager=True,
         )
-        cent = (
+        cent = materialize(
             assign.join(dims, key_col)
             .groupBy("cluster", "d")
-            .agg(F.round(F.avg("x"), 6).alias("c"))
-            .localCheckpoint()
+            .agg(F.round(F.avg("x"), 6).alias("c")),
+            eager=True,
         )
     return assign
 
@@ -135,7 +137,7 @@ def pq_codebooks(
     """
     if train_mod > 1:
         df = df.filter(F.col(key_col) % train_mod == 0)
-    dims = _sub_dims(df, vec_col, key_col, sub_dim).localCheckpoint()
+    dims = materialize(_sub_dims(df, vec_col, key_col, sub_dim), eager=True)
     seeds = (
         df.select(key_col)
         .orderBy(key_col)
@@ -212,9 +214,10 @@ def pq_adc_topk(
 
     Returns (key, approx_l2sq) for the k nearest by quantized L2.
     """
-    cb = pq_codebooks(
-        corpus, vec_col, key_col, codes, sub_dim, train_mod
-    ).localCheckpoint()
+    cb = materialize(
+        pq_codebooks(corpus, vec_col, key_col, codes, sub_dim, train_mod),
+        eager=True,
+    )
     enc = pq_encode(corpus, cb, vec_col, key_col, sub_dim)
     qd = _sub_dims(query, vec_col, key_col, sub_dim).drop(key_col)
     dt = (
@@ -285,15 +288,12 @@ def density_clusters_capped(
     )
     # capped ε-adjacency: a → b, b among a's k_max nearest AND inside the
     # rounded-cosine radius (round-first keeps the boundary engine-stable)
-    adj = (
+    adj = materialize(
         knn.filter(F.col("cosine_sim") >= eps_cosine)
         .select(F.col(key_col).alias("k"), F.col("nb").alias("n"))
-        .localCheckpoint(eager=False)  # degree, sym, core-edge branches
-    )
+    )  # degree, sym, core-edge branches
     deg = adj.groupBy("k").agg(F.count(F.lit(1)).alias("n_neigh"))
-    cores = (
-        deg.filter(F.col("n_neigh") >= min_pts).select("k").localCheckpoint(eager=False)
-    )
+    cores = materialize(deg.filter(F.col("n_neigh") >= min_pts).select("k"))
     sym = (
         adj.unionByName(adj.select(F.col("n").alias("k"), F.col("k").alias("n")))
         .distinct()
@@ -354,7 +354,7 @@ def density_clusters(
     # per-cell cosine matrices via the numpy-GEMM pair operator (identical
     # 6-dp rounded cosines to the expression/oracle path; ~5× faster than
     # the interpreted HOF at |cell| in the hundreds)
-    pairs = (
+    pairs = materialize(
         blocked_cosine_pairs(
             corpus, eps_cosine, block_col=block_col, key_col=key_col, vec_col=vec_col
         )
@@ -363,8 +363,7 @@ def density_clusters(
             F.col("key_b").alias("kb"),
             F.col("cosine_sim").alias("c"),
         )
-        .localCheckpoint(eager=False)  # counts, core edges, border join
-    )
+    )  # counts, core edges, border join
     neigh = (
         pairs.select(F.col("ka").alias("k"), F.col("kb").alias("n"))
         .unionByName(pairs.select(F.col("kb").alias("k"), F.col("ka").alias("n")))
@@ -379,7 +378,7 @@ def density_clusters(
         F.coalesce("n_neigh", F.lit(0)).alias("n_neigh"),
     )
     cores = roles.filter(F.col("n_neigh") >= min_pts).select("k")
-    cores = cores.localCheckpoint(eager=False)
+    cores = materialize(cores)
     core_edges = (
         pairs.join(cores.withColumnRenamed("k", "ka"), "ka", "left_semi")
         .join(cores.withColumnRenamed("k", "kb"), "kb", "left_semi")

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.textfns import distinct_tokens, shingles, tokens
+from ..session import materialize
 
 _MERSENNE31 = 2_147_483_647  # 2^31 - 1, prime
 
@@ -361,13 +362,12 @@ def minhash_lsh_rep_pairs(
     reps, members = collapse_exact(df, text_col, key_col)
     # Both frames feed 3+ plan branches (signature, verify, expansion);
     # without materialization every branch re-runs the collapse shuffle
-    # (measured 1.8× at sf0.1). localCheckpoint stores the blocks AND
+    # (measured 1.8× at sf0.1). materialize stores the blocks AND
     # truncates the lineage so downstream plans start from the blocks;
     # plain persist() keeps the full plan in every branch and measured
-    # slower than no caching at all. On a multi-node cluster where
-    # executor loss must be survivable, swap for reliable checkpoint().
-    reps = reps.localCheckpoint(eager=False)
-    members = members.localCheckpoint(eager=False)
+    # slower than no caching at all.
+    reps = materialize(reps)
+    members = materialize(members)
     rows = num_perm // bands
     sig = minhash_signature(reps, text_col, key_col, num_perm, shingle_k, base_hash)
     cands = lsh_candidate_pairs(sig, key_col, bands, rows, bucket_cap)
@@ -404,7 +404,7 @@ def minhash_lsh_near_dups(
     # rep_pairs is near-dup-density-sized (tiny); materialize it so the
     # expansion joins and the final orderBy's range-partitioning sample pass
     # don't each re-run the whole signature/verify subtree.
-    rep_pairs = rep_pairs.localCheckpoint(eager=False)
+    rep_pairs = materialize(rep_pairs)
     ma = members.select(F.col("rep").alias("key_a"), F.col("member").alias("ma"))
     mb = members.select(F.col("rep").alias("key_b"), F.col("member").alias("mb"))
     cross = (
@@ -496,7 +496,7 @@ def cross_corpus_near_dups(
         # the (rep, member) map is two longs per doc and column pruning keeps
         # its collapse shuffle text-free — checkpointing it stops the hit
         # expansion from re-running the collapse join
-        members = members.localCheckpoint(eager=False)
+        members = materialize(members)
         sig_c = minhash_signature(reps, text_col, key_col, num_perm, shingle_k, base_hash)
     else:
         members = None
@@ -507,7 +507,7 @@ def cross_corpus_near_dups(
     sig_p = minhash_signature(probe, text_col, key_col, num_perm, shingle_k, base_hash)
     b_c = _banded(sig_c, key_col, bands, rows)
     b_p = _banded(sig_p, key_col, bands, rows)
-    cands = (
+    cands = materialize(
         b_c.select(
             F.col("k").alias("corpus_key"), "band_idx", "band_hash"
         )
@@ -519,8 +519,7 @@ def cross_corpus_near_dups(
         )
         .select("corpus_key", "probe_key")
         .distinct()
-        .localCheckpoint(eager=False)  # feeds both the semi-join and verify
-    )
+    )  # feeds both the semi-join and verify
     # verify with exact Jaccard — shingle ONLY candidate docs (semi-join
     # prunes the corpus scan; candidate count tracks contamination density,
     # not corpus size)
@@ -669,7 +668,7 @@ def simhash_banded_pairs(
     """
     width = 64 // bands
     mask = (1 << width) - 1
-    sim = simhash63(df, text_col, key_col, base_hash).localCheckpoint(eager=False)
+    sim = materialize(simhash63(df, text_col, key_col, base_hash))
     # Exact-collapse first (round-3 perf; same hazard fix as the MinHash
     # family): a near-dup-dense corpus puts hundreds of IDENTICAL simhash
     # values in one (band_idx, chunk) bucket, and banding raw doc keys then
@@ -678,9 +677,7 @@ def simhash_banded_pairs(
     # distinct sims), verify rep pairs, then re-expand: identical sims band
     # identically, so the expanded pair set is bit-for-bit the same as
     # doc-level banding — the DuckDB oracle keeps the naive formulation.
-    groups = sim.groupBy("simhash").agg(F.min(key_col).alias("rep")).localCheckpoint(
-        eager=False
-    )
+    groups = materialize(sim.groupBy("simhash").agg(F.min(key_col).alias("rep")))
     banded = groups.select(
         F.col("rep").alias("k"),
         F.col("simhash"),
@@ -818,9 +815,11 @@ def incremental_minhash_dedup(
     sig_new = (
         new_sigs
         if new_sigs is not None
-        else minhash_signature(
-            new_docs, text_col, key_col, num_perm, shingle_k, base_hash
-        ).localCheckpoint(eager=False)
+        else materialize(
+            minhash_signature(
+                new_docs, text_col, key_col, num_perm, shingle_k, base_hash
+            )
+        )
     )
     b_new = _banded(sig_new, key_col, bands, rows).select(
         F.col("k").alias("new_key"), "band_idx", "band_hash"
@@ -953,15 +952,17 @@ def containment_near_dups(
     ``threshold`` in EITHER direction (orientation-independent gate)."""
     df = df.select(key_col, text_col)
     reps, members = collapse_exact(df, text_col, key_col)
-    reps = reps.localCheckpoint(eager=False)
-    members = members.localCheckpoint(eager=False)
+    reps = materialize(reps)
+    members = materialize(members)
     rows = num_perm // bands
     sig = minhash_signature(reps, text_col, key_col, num_perm, shingle_k, base_hash)
     cands = lsh_candidate_pairs(sig, key_col, bands, rows, bucket_cap)
     cont = containment_pairs(reps, cands, text_col, key_col, shingle_k)
-    rep_pairs = cont.filter(
-        (F.col("c_a_in_b") >= threshold) | (F.col("c_b_in_a") >= threshold)
-    ).localCheckpoint(eager=False)
+    rep_pairs = materialize(
+        cont.filter(
+            (F.col("c_a_in_b") >= threshold) | (F.col("c_b_in_a") >= threshold)
+        )
+    )
     ma = members.select(F.col("rep").alias("key_a"), F.col("member").alias("ma"))
     mb = members.select(F.col("rep").alias("key_b"), F.col("member").alias("mb"))
     swapped = F.col("ma") > F.col("mb")
@@ -1071,7 +1072,7 @@ def prefix_filter_jaccard_pairs(
         .select("k", "g")
         .distinct()
     )
-    gram = gram.localCheckpoint(eager=False)  # m / freq / prefix / verify
+    gram = materialize(gram)  # m / freq / prefix / verify
     m = gram.groupBy("k").agg(F.count(F.lit(1)).alias("m"))
     freq = gram.groupBy("g").agg(F.count(F.lit(1)).alias("c"))
     rk = (
@@ -1099,7 +1100,7 @@ def prefix_filter_jaccard_pairs(
         .select("key_a", "key_b", "m_a", "m_b")
         .distinct()
     )
-    cand = cand.localCheckpoint(eager=False)  # keys + final join branches
+    cand = materialize(cand)  # keys + final join branches
     keys = (
         cand.select(F.col("key_a").alias("k"))
         .unionByName(cand.select(F.col("key_b").alias("k")))
@@ -1238,9 +1239,7 @@ def winnowing_overlap_pairs(
     # materialize it once instead of re-running the whole collapse + gram
     # + winnow pipeline per branch (32 parquet scans in the before-plan
     # of dedup_winnowing_overlap)
-    fps = winnowing_fingerprints(df, text_col, key_col, k=k, w=w).localCheckpoint(
-        eager=False
-    )
+    fps = materialize(winnowing_fingerprints(df, text_col, key_col, k=k, w=w))
     kept = (
         fps.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -1352,7 +1351,7 @@ def winnowing_match_spans(
         )
         .distinct()
     )
-    sel = sel.localCheckpoint(eager=False)  # cap + pair branches
+    sel = materialize(sel)  # cap + pair branches
     kept = (
         sel.select("k", "fp").distinct()
         .groupBy("fp")

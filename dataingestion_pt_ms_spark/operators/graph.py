@@ -18,10 +18,9 @@ Scale notes:
 - state per round is one (node, label) table partitioned by node — each
   round is two shuffles (neighbor-min groupBy + label-jump join), both on
   keys Catalyst can reuse;
-- ``localCheckpoint(eager)`` truncates the growing lineage each round
-  (plan-depth blowup, not data blowup, is the failure mode of iterative
-  DataFrame algorithms); on a cluster use a reliable checkpoint dir
-  instead if executor loss must be survivable;
+- ``session.materialize(eager=True)`` truncates the growing lineage each
+  round (plan-depth blowup, not data blowup, is the failure mode of
+  iterative DataFrame algorithms);
 - the convergence probe is a ``LIMIT 1`` count on the changed-rows frame —
   an action per round, but it scans only until the first hit.
 """
@@ -30,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import materialize
 
 # Adaptive small-graph fast path (r10 opt, guide §1.2 #1 / §5): below this
 # many SYMMETRIZED edge rows the component computation runs as a vectorized
@@ -150,11 +151,11 @@ def connected_components(
     # materialize the edge set once: every round runs actions (probe +
     # checkpoint), and without this the whole upstream lineage (e.g. a
     # MinHash-LSH pair pipeline) would re-execute per round
-    sym = (
+    sym = materialize(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=True,
     )
     # Size-adaptive strategy (see _CC_DRIVER_MAX_SYM_ROWS): the count scans
     # the just-checkpointed blocks, so the gate costs one cheap job. NOTE:
@@ -180,7 +181,7 @@ def connected_components(
         labels = labels.union(
             nodes.select(F.col(node_col).alias("node"))
         ).distinct()
-    labels = labels.withColumn("label", F.col("node")).localCheckpoint()
+    labels = materialize(labels.withColumn("label", F.col("node")), eager=True)
 
     for _ in range(max_iter):
         # neighbor-min: the smallest label among each node's neighbors
@@ -206,15 +207,18 @@ def connected_components(
         parents = stepped.select(
             F.col("node").alias("p_node"), F.col("label").alias("p_label")
         )
-        jumped = stepped.join(
-            parents, stepped["label"] == parents["p_node"], "left"
-        ).select(
-            "node",
-            F.least(F.col("label"), F.coalesce("p_label", F.col("label"))).alias(
-                "label"
+        jumped = materialize(
+            stepped.join(
+                parents, stepped["label"] == parents["p_node"], "left"
+            ).select(
+                "node",
+                F.least(F.col("label"), F.coalesce("p_label", F.col("label"))).alias(
+                    "label"
+                ),
+                "_old",
             ),
-            "_old",
-        ).localCheckpoint()
+            eager=True,
+        )
 
         changed = (
             jumped.filter(F.col("label") != F.col("_old")).limit(1).count()
@@ -267,7 +271,7 @@ def pagerank(
     sums plus broadcast of the O(nodes-per-partition) rank table join — at
     real graph scale the rank table shuffles too (it is node-partitioned,
     and Catalyst reuses the (src)/(dst) partitionings across rounds).
-    Lineage discipline for big ``iters``: localCheckpoint each round, as
+    Lineage discipline for big ``iters``: materialize each round, as
     ``connected_components`` does; unnecessary for the unrolled-few-rounds
     analytical form here.
     """
@@ -281,7 +285,7 @@ def pagerank(
     # caller's (possibly expensive) edge-build lineage once per reference
     # (plan audit: 5 copies of the trade-graph star join). Lazy local
     # checkpoint materializes it once on first use.
-    e = e.localCheckpoint(eager=False)
+    e = materialize(e)
     nodes = (
         e.select(F.col("_s").alias("node"))
         .unionByName(e.select(F.col("_t").alias("node")))
@@ -340,12 +344,10 @@ def triangle_counts(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFra
     # three branches (both wedge sides + the closing semi-join) — without
     # materialization the edge-build lineage re-executed ~30× per
     # invocation (60 parquet scans in the before-plan of
-    # graph_copurchase_triangles). Two lazy localCheckpoints collapse that
+    # graph_copurchase_triangles). Two lazy materializations collapse that
     # to one edge build + one orientation pass; counts are unchanged
     # (checkpointing only truncates lineage).
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
-        eager=False
-    )
+    e = materialize(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -357,11 +359,13 @@ def triangle_counts(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFra
         .join(deg.withColumnsRenamed({"node": "v", "deg": "deg_v"}), "v")
     )
     u_first = F.struct(F.col("deg_u"), F.col("u")) < F.struct(F.col("deg_v"), F.col("v"))
-    oriented = with_deg.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("d"),
-        F.when(u_first, F.col("deg_v")).otherwise(F.col("deg_u")).alias("deg_d"),
-    ).localCheckpoint(eager=False)
+    oriented = materialize(
+        with_deg.select(
+            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
+            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("d"),
+            F.when(u_first, F.col("deg_v")).otherwise(F.col("deg_u")).alias("deg_d"),
+        )
+    )
     e1 = oriented.select("s", F.col("d").alias("b"), F.col("deg_d").alias("deg_b"))
     e2 = oriented.select("s", F.col("d").alias("c"), F.col("deg_d").alias("deg_c"))
     wedges = e1.join(e2, "s").filter(
@@ -393,18 +397,17 @@ def bfs_hops(
     frontier against the edge table and anti-joins out already-settled
     nodes, so total work is O(edges touched by the expansion), and each
     round is one shuffle join + one anti-join on node id. State per round
-    (settled + frontier) is localCheckpoint'd — same lineage discipline as
+    (settled + frontier) is materialized — same lineage discipline as
     ``connected_components``. Early-exits when the frontier drains (a
     LIMIT-1 probe, scans until first hit).
 
     Deterministic for any edge/seed set, so a fixed ``max_hops`` is exactly
     reproducible by a bounded recursive CTE (the oracle strategy).
     """
-    sym = (
+    sym = materialize(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     # Size-adaptive driver BFS (r10 opt; see _CC_DRIVER_MAX_SYM_ROWS): the
     # loop below costs (eager checkpoint + LIMIT-1 probe) jobs per hop.
@@ -463,11 +466,10 @@ def bfs_hops(
             ).withColumn("hops", F.lit(0))
         )
         return reached_df.unionByName(outside)
-    dist = (
+    dist = materialize(
         seeds.select(F.col(node_col).alias("node"))
         .distinct()
         .withColumn("hops", F.lit(0))
-        .localCheckpoint(eager=False)
     )
     frontier = dist.select("node")
     for h in range(1, max_hops + 1):
@@ -476,14 +478,14 @@ def bfs_hops(
             .select(F.col("b").alias("node"))
             .distinct()
         )
-        new = (
+        new = materialize(
             reached.join(dist.select("node"), "node", "left_anti")
-            .withColumn("hops", F.lit(h))
-            .localCheckpoint()
+            .withColumn("hops", F.lit(h)),
+            eager=True,
         )
         if not new.take(1):
             break
-        dist = dist.unionByName(new).localCheckpoint(eager=False)
+        dist = materialize(dist.unionByName(new))
         frontier = new.select("node")
     return dist
 
@@ -506,17 +508,16 @@ def label_propagation(
     oracle strategy as ``pagerank``. Per round: one groupBy(node, label)
     count shuffle + a per-node row_number window (partitioned by node,
     never global) + a left join back for keep-own-label fallbacks. The
-    label table is localCheckpoint'd per round to truncate lineage.
+    label table is materialized per round to truncate lineage.
     """
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     from pyspark.sql import Window
 
-    sym = (
+    sym = materialize(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     # Size-adaptive driver rounds (r10 opt; see _CC_DRIVER_MAX_SYM_ROWS):
     # synchronous LP is integer counting with a (max count, min label)
@@ -585,10 +586,9 @@ def label_propagation(
             .filter(F.col("rn") == 1)
             .select("node", F.col("lab").alias("new_lab"))
         )
-        labels = (
+        labels = materialize(
             labels.join(winner, "node", "left")
             .select("node", F.coalesce("new_lab", "lab").alias("lab"))
-            .localCheckpoint(eager=False)
         )
     return labels.select("node", F.col("lab").alias("community"))
 
@@ -607,13 +607,12 @@ def k_core_peel(
     oracle strategy) AND an early-converged run returns the same answer as
     one that executes all rounds — the convergence probe is purely a cost
     optimization. Per round: one degree groupBy + two semi-joins on node
-    id; the shrinking edge table is localCheckpoint'd each round.
+    id; the shrinking edge table is materialized each round.
     """
-    cur = (
+    cur = materialize(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     n_edges = cur.count()
     # Size-adaptive driver peel (r10 opt; see _CC_DRIVER_MAX_SYM_ROWS): the
@@ -657,11 +656,11 @@ def k_core_peel(
             .filter(F.col("deg") >= k)
             .select("a")
         )
-        cur = (
+        cur = materialize(
             cur.join(keep, "a", "left_semi")
             .join(keep.withColumnRenamed("a", "b"), "b", "left_semi")
-            .select("a", "b")
-            .localCheckpoint()
+            .select("a", "b"),
+            eager=True,
         )
         n_next = cur.count()
         if n_next == n_edges:
@@ -690,11 +689,13 @@ def personalized_pagerank(
     simplification, and unrolled-CTE oracle strategy as ``pagerank``."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    e = edges.select(
-        F.col(src).alias("_s"),
-        F.col(dst).alias("_t"),
-        F.col(weight).cast("double").alias("_w"),
-    ).localCheckpoint(eager=False)
+    e = materialize(
+        edges.select(
+            F.col(src).alias("_s"),
+            F.col(dst).alias("_t"),
+            F.col(weight).cast("double").alias("_w"),
+        )
+    )
     sd = seeds.select("node").distinct()
     # Seeds are unioned into the node set: an isolated seed (no edges) still
     # holds its 1/|S| teleport share instead of silently vanishing while
@@ -707,7 +708,7 @@ def personalized_pagerank(
     )
     ns = sd.agg(F.count("*").cast("double").alias("_ns"))
     outw = e.groupBy("_s").agg(F.sum("_w").alias("_wout")).filter(F.col("_wout") != 0)
-    t = (
+    t = materialize(
         nodes.join(sd.withColumn("_is_seed", F.lit(1)), "node", "left")
         .crossJoin(F.broadcast(ns))
         .select(
@@ -716,7 +717,6 @@ def personalized_pagerank(
             .otherwise(0.0)
             .alias("t"),
         )
-        .localCheckpoint(eager=False)
     )
     pr = t.select("node", F.col("t").alias("pr"))
     for _ in range(iters):
@@ -757,9 +757,7 @@ def jaccard_link_prediction(
     # LeftAnti). sym is a narrow union over the checkpointed blocks, so
     # every consumer (degrees, both wedge sides, anti-join) now starts from
     # one materialized build.
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
-        eager=False
-    )
+    e = materialize(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     wa = sym.select(F.col("v").alias("n"), F.col("u").alias("a"))
@@ -805,7 +803,7 @@ def hits(
     weighted digraph: a'(v) = Σ_{u→v} h(u)·w, h'(u) = Σ_{u→v} a'(v)·w, each
     half-step L2-normalized. Kleinberg's hubs-and-authorities — the "who
     aggregates vs who is sourced" complement to PageRank, same unrolled-CTE
-    oracle strategy and per-round rounding/localCheckpoint discipline as
+    oracle strategy and per-round rounding/materialize discipline as
     ``pagerank``.
 
     Scale shape: per round, two edge-sized shuffles (groupBy dst then src)
@@ -815,16 +813,17 @@ def hits(
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    e = edges.select(
-        F.col(src).alias("_s"),
-        F.col(dst).alias("_t"),
-        F.col(weight).cast("double").alias("_w"),
-    ).localCheckpoint(eager=False)
-    nodes = (
+    e = materialize(
+        edges.select(
+            F.col(src).alias("_s"),
+            F.col(dst).alias("_t"),
+            F.col(weight).cast("double").alias("_w"),
+        )
+    )
+    nodes = materialize(
         e.select(F.col("_s").alias("node"))
         .unionByName(e.select(F.col("_t").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     h = nodes.select("node", F.lit(1.0).alias("h"))
     a = None
@@ -838,7 +837,7 @@ def hits(
             "node", F.coalesce("_ar", F.lit(0.0)).alias("_ar")
         )
         a_nrm = a_all.agg(F.sqrt(F.sum(F.col("_ar") * F.col("_ar"))).alias("_n"))
-        a = (
+        a = materialize(
             a_all.crossJoin(F.broadcast(a_nrm))
             .select(
                 "node",
@@ -846,7 +845,6 @@ def hits(
                 .otherwise(0.0)
                 .alias("a"),
             )
-            .localCheckpoint(eager=False)
         )
         h_raw = (
             e.join(a.withColumnRenamed("node", "_t"), "_t")
@@ -857,7 +855,7 @@ def hits(
             "node", F.coalesce("_hr", F.lit(0.0)).alias("_hr")
         )
         h_nrm = h_all.agg(F.sqrt(F.sum(F.col("_hr") * F.col("_hr"))).alias("_n"))
-        h = (
+        h = materialize(
             h_all.crossJoin(F.broadcast(h_nrm))
             .select(
                 "node",
@@ -865,7 +863,6 @@ def hits(
                 .otherwise(0.0)
                 .alias("h"),
             )
-            .localCheckpoint(eager=False)
         )
     return h.join(a, "node").select(
         "node", F.col("h").alias("hub"), F.col("a").alias("authority")
@@ -890,17 +887,16 @@ def bellman_ford_rounds(
     Scale shape per round: one edge-sized join + groupBy(node) min — the
     frontier-less dense form (correct even when negative... costs here are
     positive; for sparse frontiers bfs_hops' delta expansion is the model).
-    State is one (node, dist) row per reached node; localCheckpoint per
+    State is one (node, dist) row per reached node; materialize per
     round truncates the iterative lineage.
     """
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    sym = (
+    sym = materialize(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"), F.col(cost).alias("c"))
         .unionByName(
             edges.select(F.col(dst).alias("a"), F.col(src).alias("b"), F.col(cost).alias("c"))
         )
-        .localCheckpoint(eager=False)
     )
     # Size-adaptive driver relaxation (r10 opt; see _CC_DRIVER_MAX_SYM_ROWS):
     # EXACTLY `rounds` synchronous min-plus rounds over long costs — integer
@@ -961,10 +957,9 @@ def bellman_ford_rounds(
             sym.join(dist.withColumnRenamed("node", "a"), "a")
             .select(F.col("b").alias("node"), (F.col("dist") + F.col("c")).alias("dist"))
         )
-        dist = (
+        dist = materialize(
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
         )
     return dist

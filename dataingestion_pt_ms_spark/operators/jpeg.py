@@ -506,10 +506,6 @@ def _extend(bits: int, size: int) -> int:
     return bits
 
 
-def _idct_block(coefs: np.ndarray) -> np.ndarray:
-    return DCT_T.T @ coefs @ DCT_T
-
-
 def _parse_segments(data: bytes):
     """Yield (marker, payload_start, payload_len, next_pos) until SOS."""
     if data[:2] != b"\xff\xd8":

@@ -870,12 +870,6 @@ def _page_streams(data: bytes) -> list[tuple[bytes, dict]]:
     return out
 
 
-def _content_streams(data: bytes) -> list[bytes]:
-    """Decoded content bodies only — the round-9 surface, kept for
-    callers that don't need font context."""
-    return [body for body, _ in _page_streams(data)]
-
-
 def _parse_literal(data: bytes, i: int) -> tuple[bytes, int]:
     """Parse a literal string starting at ``data[i] == '('``; returns
     (decoded bytes, index past the closing paren). All §7.3.4.2 escape

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 
 def _cols(order_cols: list[Column | str]) -> list[Column]:
     return [F.col(c) if isinstance(c, str) else c for c in order_cols]
@@ -66,7 +68,7 @@ def _ranked_with_total(
     # instead of re-running the input lineage — chained ntile calls would
     # otherwise compound to exponential re-execution (measured 40 s for
     # 3 chained quartiles at sf0.01 without this, ~1 s with it).
-    parts = parts.localCheckpoint(eager=False)
+    parts = materialize(parts)
     counts = parts.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
     earlier = counts.select(
         F.col("_pid").alias("_pid2"), F.col("_cnt").alias("_cnt2")
@@ -146,7 +148,7 @@ def global_running_sum(
             .rowsBetween(W.unboundedPreceding, W.currentRow)
         ),
     )
-    parts = parts.localCheckpoint(eager=False)
+    parts = materialize(parts)
     sums = parts.groupBy("_pid").agg(F.sum(weight_col).alias("_wsum"))
     earlier = sums.select(F.col("_pid").alias("_pid2"), F.col("_wsum").alias("_w2"))
     offsets = (
@@ -191,7 +193,7 @@ def global_running_max(
             .rowsBetween(W.unboundedPreceding, W.currentRow)
         ),
     )
-    parts = parts.localCheckpoint(eager=False)
+    parts = materialize(parts)
     maxes = parts.groupBy("_pid").agg(F.max(value_col).alias("_wmax"))
     earlier = maxes.select(F.col("_pid").alias("_pid2"), F.col("_wmax").alias("_m2"))
     offsets = (
@@ -244,7 +246,7 @@ def global_prefix_scan(
         parts = parts.withColumn(
             "_lrn", F.row_number().over(W.partitionBy("_pid").orderBy(*sort_exprs))
         )
-    parts = parts.localCheckpoint(eager=False)  # totals + offsets branches
+    parts = materialize(parts)  # totals + offsets branches
     aggs = [F.sum(c).alias(f"_t_{c}") for c in sum_cols] + [
         F.count(F.lit(1)).alias("_t_n")
     ]
@@ -366,7 +368,7 @@ def global_islands(
             yield pdf.assign(_brk=brk, _lis=lis)
 
     parts = sorted_parts.mapInPandas(_scan, scan_schema)
-    parts = parts.localCheckpoint(eager=False)  # stats + output branches
+    parts = materialize(parts)  # stats + output branches
     stats = parts.groupBy("_pid").agg(
         F.sum("_brk").alias("_nbrk"),
         F.min_by(F.col(axis_col), F.struct(*sort_exprs)).alias("_first_ax"),
@@ -445,7 +447,7 @@ def histogram_select_kth(
 
     Compared to global_prefix_scan + filter: no repartitionByRange
     sample job, no full shuffle, no data-sized ranked materialization —
-    three cheap scans of ``df`` instead (pass a localCheckpoint'd or
+    three cheap scans of ``df`` instead (pass a materialized or
     trivially recomputable frame). Ties share a value, so the selected
     VALUE is deterministic regardless of tie order. Pathological skew
     (most rows in one fixed-width bucket) degrades step 3 toward a full

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity, dot, l2_norm
+from ..session import materialize
 
 
 def _dvec(col_name: str = "embedding"):
@@ -872,7 +873,7 @@ def bipartite_margin_pairs(
         F.lit(0.0).alias("aux"),
     )
     _par = a.sparkSession.sparkContext.defaultParallelism
-    pass1 = (
+    pass1 = materialize(
         a_pre.unionByName(b_rep)
         # pin the group exchange wide (r10 opt §1a): the vector shuffle is
         # byte-cheap and AQE would coalesce the GEMM stage to 1-2 tasks;
@@ -880,8 +881,7 @@ def bipartite_margin_pairs(
         .repartition(_par, "ablk", "_bt")
         .groupBy("ablk", "_bt")
         .applyInPandas(topk_block, "kind int, xa long, xb long, c double")
-        .localCheckpoint(eager=False)  # ax / ay branches
-    )
+    )  # ax / ay branches
     from pyspark.sql import Window as W
 
     # per-endpoint k-bounded merges of the per-group top-k partials — the
@@ -929,15 +929,14 @@ def bipartite_margin_pairs(
             F.col("ay").alias("aux"),
         )
     )
-    pass2 = (
+    pass2 = materialize(
         a_m.unionByName(b_m)
         .repartition(_par, "ablk", "_bt")  # same §1a pin as pass1
         .groupBy("ablk", "_bt")
         .applyInPandas(
             margin_block, "kind int, xa long, xb long, c double, margin double"
         )
-        .localCheckpoint(eager=False)  # fwd / bwd branches
-    )
+    )  # fwd / bwd branches
     # struct-max merges: (margin DESC, partner ASC) — same tie order as
     # the in-group argmax lexsorts
     fwd = (

@@ -10,6 +10,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.textfns import distinct_tokens, shingles, token_fingerprint, tokens
+from ..session import materialize
 
 # Marker token sets for the n-gram/stopword language heuristic. With real
 # corpora these would be per-language character-n-gram profiles; the fixture
@@ -158,10 +159,9 @@ def tf_idf_topk(
     # r11 opt (guide §1.2 #1): tf feeds both the document-frequency rollup
     # and the score join — materialize so the corpus tokenize + count
     # shuffle runs once, not twice
-    tf = (
+    tf = materialize(
         tok.groupBy(key_col, "token")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
     )
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     n = df.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -570,10 +570,9 @@ def unigram_logprob(
     # r11 opt (guide §1.2 #1): the vocabulary-sized count table feeds the
     # corpus scalars AND the score join — materialize it (tiny) so the
     # corpus tokenize + count shuffle runs once, not twice
-    counts = (
+    counts = materialize(
         toks.groupBy("token")
         .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=False)
     )
     scalars = counts.agg(
         F.sum("cnt").alias("n_total"), F.count("*").alias("vocab")
@@ -713,11 +712,10 @@ def bigram_logprob(
     # before-plan). Checkpointing preserves the RDD's partitioning, so
     # the downstream shuffles — and the per-doc float-sum order behind
     # the 6-dp rounds — are unchanged.
-    bg = (
+    bg = materialize(
         df.filter(n >= 2)
         .select(key_col, F.explode(bigrams).alias("bg"))
         .select(key_col, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-        .localCheckpoint(eager=False)
     )
     c2 = bg.groupBy("w1", "w2").agg(F.count("*").alias("cnt2"))
     c1 = bg.groupBy("w1").agg(F.count("*").alias("cnt1"))

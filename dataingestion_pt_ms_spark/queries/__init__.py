@@ -18,7 +18,7 @@ Conventions that make the differential comparison well-defined:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,20 +31,19 @@ class QuerySpec:
     name: str
     fn: QueryFn
     oracle: Optional[str]  # DuckDB SQL; None => rows-only check
-    tags: tuple[str, ...] = field(default_factory=tuple)
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
 _LOADED = False
 
 
-def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
+def register(name: str, oracle: str | None = None):
     """Decorator: register ``fn`` as the named query ``name``."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = QuerySpec(name, fn, oracle, tuple(tags))
+        _REGISTRY[name] = QuerySpec(name, fn, oracle)
         return fn
 
     return deco

@@ -33,7 +33,7 @@ FROM lineitem
 """
 
 
-@register("agg_global_summary", oracle=GLOBAL_ORACLE, tags=("agg",))
+@register("agg_global_summary", oracle=GLOBAL_ORACLE)
 def agg_global_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return li.agg(
@@ -60,7 +60,7 @@ ORDER BY o_orderpriority
 """
 
 
-@register("agg_group_having", oracle=HAVING_ORACLE, tags=("agg",))
+@register("agg_group_having", oracle=HAVING_ORACLE)
 def agg_group_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     return (
@@ -88,7 +88,7 @@ ORDER BY o_orderstatus
 """
 
 
-@register("agg_minmax_timestamps", oracle=MINMAX_TS_ORACLE, tags=("agg", "datetime"))
+@register("agg_minmax_timestamps", oracle=MINMAX_TS_ORACLE)
 def agg_minmax_timestamps(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     return (
@@ -115,7 +115,7 @@ ORDER BY o_orderpriority
 """
 
 
-@register("agg_count_distinct", oracle=CDIST_ORACLE, tags=("agg",))
+@register("agg_count_distinct", oracle=CDIST_ORACLE)
 def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     return (
@@ -132,7 +132,7 @@ def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Approximate distinct (HLL++) — the scale path. Sketch estimates are
 # algorithm-specific, so no SQL oracle (driver records rows-only).
 # --------------------------------------------------------------------------
-@register("agg_approx_count_distinct", oracle=None, tags=("agg", "approx"))
+@register("agg_approx_count_distinct", oracle=None)
 def agg_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return (
@@ -149,7 +149,7 @@ def agg_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Approximate quantiles (percentile_approx ≠ exact quantile → rows-only);
 # exact percentile is SQL-checkable and included in agg_stats_moments.
 # --------------------------------------------------------------------------
-@register("agg_approx_quantiles", oracle=None, tags=("agg", "approx"))
+@register("agg_approx_quantiles", oracle=None)
 def agg_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return (
@@ -178,7 +178,7 @@ ORDER BY region_name, nation_name
 """
 
 
-@register("agg_rollup_geo", oracle=ROLLUP_ORACLE, tags=("agg", "rollup"))
+@register("agg_rollup_geo", oracle=ROLLUP_ORACLE)
 def agg_rollup_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
@@ -215,7 +215,7 @@ ORDER BY returnflag, linestatus
 """
 
 
-@register("agg_cube_flags", oracle=CUBE_ORACLE, tags=("agg", "cube"))
+@register("agg_cube_flags", oracle=CUBE_ORACLE)
 def agg_cube_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return (
@@ -249,7 +249,7 @@ ORDER BY c_mktsegment
 """
 
 
-@register("agg_stats_moments", oracle=STATS_ORACLE, tags=("agg", "stats"))
+@register("agg_stats_moments", oracle=STATS_ORACLE)
 def agg_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     return (
@@ -281,7 +281,7 @@ ORDER BY c_mktsegment
 """
 
 
-@register("agg_corr_covar", oracle=CORR_ORACLE, tags=("agg", "stats", "join"))
+@register("agg_corr_covar", oracle=CORR_ORACLE)
 def agg_corr_covar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Does customer balance predict order size? corr/covar of the joined
     fact — the bivariate members of the stats-moment family (stddev/var/
@@ -325,7 +325,7 @@ ORDER BY order_month
 """
 
 
-@register("agg_incremental_summary", oracle=INCR_SUMMARY_ORACLE, tags=("agg", "incremental"))
+@register("agg_incremental_summary", oracle=INCR_SUMMARY_ORACLE)
 def agg_incremental_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     month = F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
@@ -389,7 +389,7 @@ ORDER BY flag
 """
 
 
-@register("lineitem_mode_percentile_disc", oracle=MODE_DISC_ORACLE, tags=("agg", "stats"))
+@register("lineitem_mode_percentile_disc", oracle=MODE_DISC_ORACLE)
 def lineitem_mode_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 

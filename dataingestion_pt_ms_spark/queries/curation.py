@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators import text as T
+from ..session import materialize
 from . import register
 from ._ducktwins import DTOKS
 
@@ -53,7 +54,7 @@ ORDER BY doc_id
 """
 
 
-@register("sample_hash_bucket", oracle=SAMPLE_HASH_ORACLE, tags=("llm", "sample"))
+@register("sample_hash_bucket", oracle=SAMPLE_HASH_ORACLE)
 def sample_hash_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
@@ -95,9 +96,7 @@ ORDER BY doc_id
 """
 
 
-@register(
-    "text_quality_logistic", oracle=QUALITY_LOGISTIC_ORACLE, tags=("llm", "text", "quality")
-)
+@register("text_quality_logistic", oracle=QUALITY_LOGISTIC_ORACLE)
 def text_quality_logistic(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     n = F.size(T.tokens(F.col("text"))).cast("double")
@@ -140,7 +139,7 @@ ORDER BY source
 """
 
 
-@register("docs_source_stats", oracle=SOURCE_STATS_ORACLE, tags=("llm", "profile", "agg"))
+@register("docs_source_stats", oracle=SOURCE_STATS_ORACLE)
 def docs_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
@@ -178,7 +177,7 @@ ORDER BY c_mktsegment
 """
 
 
-@register("agg_percentile_summary", oracle=PERCENTILE_ORACLE, tags=("agg", "percentile"))
+@register("agg_percentile_summary", oracle=PERCENTILE_ORACLE)
 def agg_percentile_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     return (
@@ -213,7 +212,7 @@ ORDER BY bucket
 """
 
 
-@register("histogram_order_totals", oracle=HISTOGRAM_ORACLE, tags=("agg", "profile"))
+@register("histogram_order_totals", oracle=HISTOGRAM_ORACLE)
 def histogram_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     bucket = F.least(
@@ -259,7 +258,7 @@ FROM scored GROUP BY doc_id ORDER BY doc_id
 """
 
 
-@register("text_bigram_logprob", oracle=BIGRAM_ORACLE, tags=("llm", "text", "quality"))
+@register("text_bigram_logprob", oracle=BIGRAM_ORACLE)
 def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return T.bigram_logprob(docs).orderBy("doc_id")
@@ -297,9 +296,7 @@ ORDER BY d.doc_id
 """
 
 
-@register(
-    "sample_language_balanced", oracle=SAMPLE_BALANCED_ORACLE, tags=("llm", "sample", "agg")
-)
+@register("sample_language_balanced", oracle=SAMPLE_BALANCED_ORACLE)
 def sample_language_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     counts = docs.groupBy("lang").agg(F.count("*").alias("c_lang"))
@@ -339,11 +336,7 @@ LIMIT {_WS_K}
 """
 
 
-@register(
-    "sample_weighted_no_replacement",
-    oracle=SAMPLE_WEIGHTED_ORACLE,
-    tags=("llm", "sample", "topk"),
-)
+@register("sample_weighted_no_replacement", oracle=SAMPLE_WEIGHTED_ORACLE)
 def sample_weighted_no_replacement(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     u = (_spark_md5_bucket("doc_id", 1_000_000_000) + 1) / F.lit(1_000_000_000.0)
@@ -375,7 +368,7 @@ ORDER BY doc_id
 """
 
 
-@register("sample_train_val_test_split", oracle=SPLIT_ORACLE, tags=("llm", "sample"))
+@register("sample_train_val_test_split", oracle=SPLIT_ORACLE)
 def sample_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     b = _spark_md5_bucket("doc_id", 100)
@@ -414,9 +407,7 @@ FROM s GROUP BY shard_id ORDER BY shard_id
 """
 
 
-@register(
-    "docs_shard_manifest", oracle=SHARD_MANIFEST_ORACLE, tags=("llm", "curation")
-)
+@register("docs_shard_manifest", oracle=SHARD_MANIFEST_ORACLE)
 def docs_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_running_sum
 
@@ -472,9 +463,7 @@ ORDER BY th.source
 """
 
 
-@register(
-    "sample_apply_temperature_mix", oracle=TEMP_APPLY_ORACLE, tags=("llm", "sample")
-)
+@register("sample_apply_temperature_mix", oracle=TEMP_APPLY_ORACLE)
 def sample_apply_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     per = docs.groupBy("source").agg(F.count(F.lit(1)).alias("c"))
@@ -570,9 +559,7 @@ FROM s GROUP BY shard_id ORDER BY shard_id
 """
 
 
-@register(
-    "pipeline_curation_v2", oracle=PIPELINE_V2_ORACLE, tags=("llm", "pipeline")
-)
+@register("pipeline_curation_v2", oracle=PIPELINE_V2_ORACLE)
 def pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_running_sum
 
@@ -580,9 +567,7 @@ def pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage 1: CCNet gate (drop the worst-perplexity tertile). pp feeds
     # the tertile aggregate AND the gate join — materialize so the
     # unigram-LM pipeline runs once (r11 opt, guide §1.2 #1)
-    pp = T.unigram_logprob(docs).select("doc_id", "nll").localCheckpoint(
-        eager=False
-    )
+    pp = materialize(T.unigram_logprob(docs).select("doc_id", "nll"))
     th = pp.agg(F.percentile("nll", F.lit(2.0 / 3)).alias("t2"))
     gated = (
         docs.join(pp, "doc_id")
@@ -590,7 +575,7 @@ def pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("nll") <= F.col("t2"))
         .select("doc_id", "source", "text")
     )
-    gated = gated.localCheckpoint(eager=False)  # feeds counts + kept filter
+    gated = materialize(gated)  # feeds counts + kept filter
     # stage 2: temperature-mix downsample over the survivors
     per = gated.groupBy("source").agg(F.count(F.lit(1)).alias("c"))
     mn = per.agg(F.min("c").alias("c_min"))
@@ -670,9 +655,7 @@ ORDER BY p.lang, p.doc_id
 """
 
 
-@register(
-    "sample_neyman_stratified", oracle=NEYMAN_ORACLE, tags=("llm", "sample", "stats")
-)
+@register("sample_neyman_stratified", oracle=NEYMAN_ORACLE)
 def sample_neyman_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -751,15 +734,11 @@ FROM w ORDER BY w.lang
 """
 
 
-@register(
-    "sample_importance_reweight",
-    oracle=REWEIGHT_ORACLE,
-    tags=("llm", "sample", "curation"),
-)
+@register("sample_importance_reweight", oracle=REWEIGHT_ORACLE)
 def sample_importance_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     cur = docs.groupBy("lang").agg(F.count(F.lit(1)).cast("double").alias("n"))
-    cur = cur.localCheckpoint(eager=False)  # totals + weights branches
+    cur = materialize(cur)  # totals + weights branches
     tot = cur.agg(F.sum("n").alias("t"))
     tgt = F.broadcast(
         docs.sparkSession.createDataFrame(
@@ -777,7 +756,7 @@ def sample_importance_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("wt"),
         )
     )
-    w = w.localCheckpoint(eager=False)
+    w = materialize(w)
     ess = w.agg(
         (
             F.pow(F.sum(F.col("n") * F.col("wt")), 2)
@@ -937,7 +916,7 @@ def _v3_oracle() -> str:
     )
 
 
-@register("pipeline_curation_v3", oracle=_v3_oracle(), tags=("llm", "pipeline"))
+@register("pipeline_curation_v3", oracle=_v3_oracle())
 def pipeline_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -998,7 +977,7 @@ def pipeline_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("is_rep") & F.col("in_wdrop").isNull() & F.col("in_sdrop").isNull(),
         )
     )
-    staged = staged.localCheckpoint(eager=False)  # band + flags branches
+    staged = materialize(staged)  # band + flags branches
     band = staged.where("past_dedup").agg(
         F.percentile("fk", F.lit(0.1)).alias("p10"),
         F.percentile("fk", F.lit(0.9)).alias("p90"),
@@ -1146,11 +1125,7 @@ def _web_curation_tail(docs: DataFrame, extracted: DataFrame) -> DataFrame:
     )
 
 
-@register(
-    "pipeline_web_curation",
-    oracle=WEB_CURATION_ORACLE,
-    tags=("llm", "text", "pipeline", "udf"),
-)
+@register("pipeline_web_curation", oracle=WEB_CURATION_ORACLE)
 def pipeline_web_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
@@ -1305,11 +1280,7 @@ def _warc_inventory_oracle() -> str:
     )
 
 
-@register(
-    "warc_record_inventory",
-    oracle=_warc_inventory_oracle(),
-    tags=("llm", "source", "warc", "udf", "audit"),
-)
+@register("warc_record_inventory", oracle=_warc_inventory_oracle())
 def warc_record_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Record-grain audit of the WARC container walk: per (warc-type,
     http-status) — record count, the sum of every record's Content-Length
@@ -1341,11 +1312,7 @@ def warc_record_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "pipeline_web_curation_warc",
-    oracle=WEB_CURATION_ORACLE,
-    tags=("llm", "text", "pipeline", "warc", "udf"),
-)
+@register("pipeline_web_curation_warc", oracle=WEB_CURATION_ORACLE)
 def pipeline_web_curation_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The web-curation pipeline fed from WARC containers instead of a
     page column: pack → (gzip) → executor-side record split → HTTP body →
@@ -1384,11 +1351,7 @@ ORDER BY bucket
 """
 
 
-@register(
-    "archive_tar_members_audit",
-    oracle=TAR_MEMBERS_ORACLE,
-    tags=("llm", "source", "tar", "udf", "audit"),
-)
+@register("archive_tar_members_audit", oracle=TAR_MEMBERS_ORACLE)
 def archive_tar_members_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TAR-container round-trip audit: pack each corpus segment's raw
     texts into a ustar archive executor-side (odd segments gzipped),
@@ -1450,11 +1413,7 @@ def _member_bucket_rollup(members: DataFrame) -> DataFrame:
     )
 
 
-@register(
-    "archive_zip_members_audit",
-    oracle=TAR_MEMBERS_ORACLE,
-    tags=("llm", "source", "zip", "udf", "audit"),
-)
+@register("archive_zip_members_audit", oracle=TAR_MEMBERS_ORACLE)
 def archive_zip_members_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ZIP-container round-trip audit (round 10 — the third container
     format): pack each corpus segment's raw texts into a ZIP archive

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..session import materialize
 from . import register
 
 # --------------------------------------------------------------------------
@@ -62,7 +63,7 @@ ORDER BY bin
 """
 
 
-@register("warehouse_psi_drift", oracle=PSI_ORACLE, tags=("warehouse", "stats"))
+@register("warehouse_psi_drift", oracle=PSI_ORACLE)
 def warehouse_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     is_base = (F.col("o_orderdate") < F.lit(_CUT).cast("timestamp")).cast("int")
@@ -127,7 +128,7 @@ ORDER BY e.event_id
 """
 
 
-@register("events_anomaly_mad", oracle=MAD_ORACLE, tags=("timeseries", "stats"))
+@register("events_anomaly_mad", oracle=MAD_ORACLE)
 def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     med = ev.groupBy("event_type").agg(
@@ -177,7 +178,7 @@ ORDER BY user_id
 """
 
 
-@register("events_user_longest_streak", oracle=STREAK_ORACLE, tags=("timeseries",))
+@register("events_user_longest_streak", oracle=STREAK_ORACLE)
 def events_user_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     days = ev.select("user_id", F.to_date("ts").alias("d")).distinct()
@@ -232,7 +233,7 @@ ORDER BY event_type, d
 """
 
 
-@register("events_ewma_daily", oracle=EWMA_ORACLE, tags=("timeseries", "stats"))
+@register("events_ewma_daily", oracle=EWMA_ORACLE)
 def events_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
@@ -305,7 +306,7 @@ ORDER BY e.event_type
 """
 
 
-@register("events_winsorize_stats", oracle=WINSOR_ORACLE, tags=("timeseries", "stats"))
+@register("events_winsorize_stats", oracle=WINSOR_ORACLE)
 def events_winsorize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # clip thresholds are the 6dp floor-trick-rounded percentiles: the
@@ -376,7 +377,7 @@ ORDER BY day_k
 """
 
 
-@register("events_survival_curve", oracle=SURVIVAL_ORACLE, tags=("drift", "agg"))
+@register("events_survival_curve", oracle=SURVIVAL_ORACLE)
 def events_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     lt = events.groupBy("user_id").agg(
@@ -453,13 +454,13 @@ ORDER BY event_type, day
 """
 
 
-@register("events_mean_shift_detect", oracle=MEAN_SHIFT_ORACLE, tags=("drift",))
+@register("events_mean_shift_detect", oracle=MEAN_SHIFT_ORACLE)
 def events_mean_shift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     daily = events.groupBy(
         "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
     ).agg(F.count(F.lit(1)).alias("c"))
-    daily = daily.localCheckpoint(eager=False)  # feeds band + stddev branches
+    daily = materialize(daily)  # feeds band + stddev branches
     st = daily.groupBy("event_type").agg(
         F.round(F.lit(2) * F.stddev_samp(F.col("c").cast("double")), 6).alias(
             "thresh"
@@ -533,9 +534,7 @@ FROM late
 """
 
 
-@register(
-    "events_out_of_order_profile", oracle=OOO_PROFILE_ORACLE, tags=("drift", "streaming")
-)
+@register("events_out_of_order_profile", oracle=OOO_PROFILE_ORACLE)
 def events_out_of_order_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     w = (
@@ -613,7 +612,7 @@ ORDER BY user_id
 """
 
 
-@register("events_bot_regularity_flags", oracle=BOT_DETECT_ORACLE, tags=("drift",))
+@register("events_bot_regularity_flags", oracle=BOT_DETECT_ORACLE)
 def events_bot_regularity_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy(F.unix_micros("ts"), "event_id")
@@ -703,7 +702,7 @@ GROUP BY na, nb
 """
 
 
-@register("events_ks_drift_test", oracle=KS_ORACLE, tags=("drift", "stats"))
+@register("events_ks_drift_test", oracle=KS_ORACLE)
 def events_ks_drift_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_running_sum
 
@@ -776,7 +775,7 @@ FROM wide
 """
 
 
-@register("events_ab_welch_ttest", oracle=AB_TTEST_ORACLE, tags=("drift", "stats"))
+@register("events_ab_welch_ttest", oracle=AB_TTEST_ORACLE)
 def events_ab_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     arm = (
@@ -851,9 +850,7 @@ FROM b GROUP BY bucket ORDER BY bucket
 """
 
 
-@register(
-    "events_time_to_convert", oracle=TTC_ORACLE, tags=("drift", "funnel", "agg")
-)
+@register("events_time_to_convert", oracle=TTC_ORACLE)
 def events_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     s1 = ev.groupBy("user_id").agg(
@@ -876,7 +873,7 @@ def events_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     sec = (
         (F.unix_micros("t_purchase") - F.unix_micros("t_view")) / 1_000_000
     )
-    b = (
+    b = materialize(
         s2.where(F.col("t_purchase").isNotNull())
         .select(
             F.when(sec < 3600, "0_under_1h")
@@ -886,8 +883,7 @@ def events_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise("4_over_7d")
             .alias("bucket")
         )
-        .localCheckpoint(eager=False)  # counts + total share branches
-    )
+    )  # counts + total share branches
     total = b.agg(F.count(F.lit(1)).cast("double").alias("tot"))
     return (
         b.groupBy("bucket")
@@ -941,7 +937,7 @@ FROM p ORDER BY event_type, day
 """
 
 
-@register("events_cusum_change_detect", oracle=CUSUM_ORACLE, tags=("drift", "window"))
+@register("events_cusum_change_detect", oracle=CUSUM_ORACLE)
 def events_cusum_change_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
@@ -1014,7 +1010,7 @@ ORDER BY cohort_week, weeks_since
 """
 
 
-@register("events_cohort_ltv_curve", oracle=LTV_ORACLE, tags=("drift", "cohort", "window"))
+@register("events_cohort_ltv_curve", oracle=LTV_ORACLE)
 def events_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     p = ev.where(F.col("event_type") == "purchase").select(
@@ -1022,7 +1018,7 @@ def events_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").cast("decimal(18,2)").alias("v"),
         F.date_trunc("week", "ts").alias("w"),
     )
-    p = p.localCheckpoint(eager=False)  # first-week + offsets branches
+    p = materialize(p)  # first-week + offsets branches
     first_w = p.groupBy("user_id").agg(F.min("w").alias("cohort"))
     sized = first_w.groupBy("cohort").agg(F.count(F.lit(1)).alias("cohort_users"))
     wk = p.join(first_w, "user_id").select(
@@ -1091,9 +1087,7 @@ ORDER BY cum.event_type
 """
 
 
-@register(
-    "events_exponential_fit_test", oracle=EXPFIT_ORACLE, tags=("drift", "stats")
-)
+@register("events_exponential_fit_test", oracle=EXPFIT_ORACLE)
 def events_exponential_fit_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("event_type").orderBy("ts", "event_id")
@@ -1104,7 +1098,7 @@ def events_exponential_fit_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 1e6
         ).alias("gap"),
     ).where(F.col("gap").isNotNull() & (F.col("gap") > 0))
-    g = g.localCheckpoint(eager=False)  # lambda fit + CDF branches
+    g = materialize(g)  # lambda fit + CDF branches
     lam = g.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         (1.0 / F.avg("gap")).alias("l"),
@@ -1170,7 +1164,7 @@ ORDER BY burst_id
 """
 
 
-@register("events_error_bursts", oracle=BURST_ORACLE, tags=("drift", "window", "ops"))
+@register("events_error_bursts", oracle=BURST_ORACLE)
 def events_error_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_islands
 
@@ -1239,7 +1233,7 @@ FROM ss
 """
 
 
-@register("docs_length_anova", oracle=ANOVA_ORACLE, tags=("drift", "stats"))
+@register("docs_length_anova", oracle=ANOVA_ORACLE)
 def docs_length_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     g = docs.groupBy("lang").agg(
@@ -1247,7 +1241,7 @@ def docs_length_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.avg("n_chars").alias("m"),
         F.var_samp("n_chars").alias("v"),
     )
-    g = g.localCheckpoint(eager=False)  # grand mean + SS branches
+    g = materialize(g)  # grand mean + SS branches
     grand = g.agg(
         F.sum("n").alias("nn"),
         (F.sum(F.col("n") * F.col("m")) / F.sum("n")).alias("gm"),
@@ -1307,9 +1301,7 @@ GROUP BY base.mean_x
 """
 
 
-@register(
-    "orders_bootstrap_ci", oracle=BOOT_ORACLE, tags=("drift", "stats", "sample")
-)
+@register("orders_bootstrap_ci", oracle=BOOT_ORACLE)
 def orders_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     b = F.explode(F.array(*[F.lit(i) for i in range(_BOOT_B)])).alias("b")
@@ -1386,9 +1378,7 @@ ORDER BY state
 """
 
 
-@register(
-    "events_transition_entropy", oracle=TRANS_ENTROPY_ORACLE, tags=("drift", "stats")
-)
+@register("events_transition_entropy", oracle=TRANS_ENTROPY_ORACLE)
 def events_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1399,7 +1389,7 @@ def events_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = steps.groupBy("s_from", "s_to").agg(
         F.count(F.lit(1)).cast("double").alias("n")
     )
-    c = c.localCheckpoint(eager=False)  # totals + entropy branches
+    c = materialize(c)  # totals + entropy branches
     t = c.groupBy("s_from").agg(F.sum("n").alias("tot"))
     p = F.col("n") / F.col("tot")
     return (
@@ -1458,7 +1448,7 @@ FROM s
 """
 
 
-@register("events_mann_whitney_u", oracle=MWU_ORACLE, tags=("drift", "stats"))
+@register("events_mann_whitney_u", oracle=MWU_ORACLE)
 def events_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_running_sum
 
@@ -1532,7 +1522,7 @@ ORDER BY event_type
 """
 
 
-@register("events_decayed_leaderboard", oracle=DECAYED_ORACLE, tags=("drift", "window"))
+@register("events_decayed_leaderboard", oracle=DECAYED_ORACLE)
 def events_decayed_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     mx = ev.agg(F.max(F.unix_micros("ts")).alias("now_us"))
@@ -1595,7 +1585,7 @@ FROM cm
 """
 
 
-@register("lineitem_ols_normal_equations", oracle=OLS_ORACLE, tags=("drift", "stats", "ml"))
+@register("lineitem_ols_normal_equations", oracle=OLS_ORACLE)
 def lineitem_ols_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").cast("double").alias("q"),
@@ -1680,7 +1670,7 @@ FROM wide
 """
 
 
-@register("events_diff_in_diff", oracle=DID_ORACLE, tags=("drift", "stats", "ab"))
+@register("events_diff_in_diff", oracle=DID_ORACLE)
 def events_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").where(F.col("event_type") == "click")
     treat = (
@@ -1754,7 +1744,7 @@ ORDER BY cohort
 """
 
 
-@register("events_wilson_error_rates", oracle=WILSON_ORACLE, tags=("drift", "stats"))
+@register("events_wilson_error_rates", oracle=WILSON_ORACLE)
 def events_wilson_error_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     agg = ev.groupBy((F.col("user_id") % 10).alias("cohort")).agg(
@@ -1846,7 +1836,7 @@ ORDER BY fold
 """
 
 
-@register("lineitem_kfold_cv_ols", oracle=KFOLD_ORACLE, tags=("drift", "stats", "ml"))
+@register("lineitem_kfold_cv_ols", oracle=KFOLD_ORACLE)
 def lineitem_kfold_cv_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
@@ -1877,7 +1867,7 @@ def lineitem_kfold_cv_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("d") * F.col("y")).alias("sdy"),
         F.sum(F.col("y") * F.col("y")).alias("syy"),
     )
-    fs = fs.localCheckpoint(eager=False)  # totals + per-fold branches
+    fs = materialize(fs)  # totals + per-fold branches
     tot = fs.agg(
         *[F.sum(x).alias(x) for x in
           ("n", "sq", "sd", "sy", "sqq", "sqd", "sdd", "sqy", "sdy")]
@@ -2005,7 +1995,7 @@ FROM qhat CROSS JOIN test
 """
 
 
-@register("lineitem_conformal_intervals", oracle=CONFORMAL_ORACLE, tags=("drift", "stats", "ml"))
+@register("lineitem_conformal_intervals", oracle=CONFORMAL_ORACLE)
 def lineitem_conformal_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
@@ -2212,7 +2202,7 @@ FROM r2
 """
 
 
-@register("lineitem_r2_shapley_lmg", oracle=LMG_ORACLE, tags=("drift", "stats", "ml"))
+@register("lineitem_r2_shapley_lmg", oracle=LMG_ORACLE)
 def lineitem_r2_shapley_lmg(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").cast("double").alias("q0"),
@@ -2295,7 +2285,7 @@ ORDER BY day
 """
 
 
-@register("events_evalue_sequential", oracle=EVALUE_ORACLE, tags=("drift", "stats", "ab"))
+@register("events_evalue_sequential", oracle=EVALUE_ORACLE)
 def events_evalue_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -2314,7 +2304,7 @@ def events_evalue_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("diff")
         )
     )
-    daily = daily.localCheckpoint(eager=False)  # sigma + cum branches
+    daily = materialize(daily)  # sigma + cum branches
     sigma = daily.agg(F.var_samp("diff").alias("s2"))
     # day-axis cumulative windows (bounded day-grain exemption)
     wd = W.orderBy("d").rowsBetween(W.unboundedPreceding, 0)
@@ -2379,7 +2369,7 @@ LIMIT {_HBOS_TOPK}
 """
 
 
-@register("events_hbos_outliers", oracle=HBOS_ORACLE, tags=("timeseries", "stats"))
+@register("events_hbos_outliers", oracle=HBOS_ORACLE)
 def events_hbos_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     feat = ev.select(
@@ -2388,7 +2378,7 @@ def events_hbos_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.hour("ts").cast("bigint").alias("hbin"),
         "event_type",
     )
-    feat = feat.localCheckpoint(eager=False)  # histogram + score branches
+    feat = materialize(feat)  # histogram + score branches
     n = feat.agg(F.count(F.lit(1)).cast("double").alias("n"))
     vh = feat.groupBy("vbin").agg(F.count(F.lit(1)).alias("cv"))
     hh = feat.groupBy("hbin").agg(F.count(F.lit(1)).alias("ch"))
@@ -2450,7 +2440,7 @@ ORDER BY arm
 """
 
 
-@register("events_cuped_adjustment", oracle=CUPED_ORACLE, tags=("timeseries", "stats"))
+@register("events_cuped_adjustment", oracle=CUPED_ORACLE)
 def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     cut = F.lit(_CUPED_CUT).cast("timestamp")
@@ -2458,7 +2448,7 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("ts") < cut, F.col("value")).otherwise(0.0)).alias("x"),
         F.sum(F.when(F.col("ts") >= cut, F.col("value")).otherwise(0.0)).alias("y"),
     ).withColumn("arm", F.col("user_id") % 2)
-    peruser = peruser.localCheckpoint(eager=False)  # theta + adjust branches
+    peruser = materialize(peruser)  # theta + adjust branches
     theta = peruser.agg(
         (F.covar_samp("x", "y") / F.var_samp("x")).alias("th"),
         F.avg("x").alias("mx"),
@@ -2517,15 +2507,13 @@ ORDER BY antecedent, consequent
 """
 
 
-@register(
-    "events_sequence_support", oracle=SEQ_SUPPORT_ORACLE, tags=("timeseries", "mining")
-)
+@register("events_sequence_support", oracle=SEQ_SUPPORT_ORACLE)
 def events_sequence_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     prof = ev.groupBy("user_id", "event_type").agg(
         F.min("ts").alias("mn"), F.max("ts").alias("mx")
     )
-    prof = prof.localCheckpoint(eager=False)  # both sides of the grid join
+    prof = materialize(prof)  # both sides of the grid join
     nu = ev.agg(F.countDistinct("user_id").cast("double").alias("n_users"))
     a = prof.select(
         "user_id", F.col("event_type").alias("antecedent"), F.col("mn").alias("amn")
@@ -2594,9 +2582,7 @@ GROUP BY t.tb, t.tc
 """
 
 
-@register(
-    "orders_wasserstein_drift", oracle=WASSERSTEIN_ORACLE, tags=("stats", "drift")
-)
+@register("orders_wasserstein_drift", oracle=WASSERSTEIN_ORACLE)
 def orders_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_prefix_scan
 
@@ -2611,7 +2597,7 @@ def orders_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("b").cast("bigint").alias("nb"),
         F.sum(F.lit(1) - F.col("b")).cast("bigint").alias("nc"),
     )
-    d = d.localCheckpoint(eager=False)  # totals + scan branches
+    d = materialize(d)  # totals + scan branches
     t = d.agg(
         F.sum("nb").cast("bigint").alias("tb"), F.sum("nc").cast("bigint").alias("tc")
     )
@@ -2619,7 +2605,7 @@ def orders_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     rn = global_prefix_scan(d, ["nb", "nc"], ["v"], rn_col="rn").select(
         "v", F.col("nb_cum").alias("cb"), F.col("nc_cum").alias("cc"), "rn"
     )
-    rn = rn.localCheckpoint(eager=False)  # both sides of the neighbor join
+    rn = materialize(rn)  # both sides of the neighbor join
     nxt = rn.select((F.col("rn") - 1).alias("rn"), F.col("v").alias("v_next"))
     return (
         rn.join(nxt, "rn")
@@ -2668,7 +2654,7 @@ FROM tail
 """
 
 
-@register("orders_hill_tail_index", oracle=HILL_ORACLE, tags=("stats", "drift"))
+@register("orders_hill_tail_index", oracle=HILL_ORACLE)
 def orders_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_row_number
 
@@ -2678,7 +2664,7 @@ def orders_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["x", "o_orderkey"],
         out_col="rn",
     )
-    ranked = ranked.localCheckpoint(eager=False)  # n + xmin + tail branches
+    ranked = materialize(ranked)  # n + xmin + tail branches
     n = ranked.agg(F.max("rn").alias("n"))
     xmin = (
         ranked.crossJoin(F.broadcast(n))
@@ -2730,7 +2716,7 @@ ORDER BY mr.d
 """
 
 
-@register("events_imr_control_chart", oracle=IMR_ORACLE, tags=("timeseries", "stats"))
+@register("events_imr_control_chart", oracle=IMR_ORACLE)
 def events_imr_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
@@ -2739,7 +2725,7 @@ def events_imr_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     mr = daily.withColumn(
         "mr", F.abs(F.col("x") - F.lag("x").over(W.orderBy("d")))
     )
-    mr = mr.localCheckpoint(eager=False)  # limits + output branches
+    mr = materialize(mr)  # limits + output branches
     lim = mr.agg(F.avg("x").alias("xbar"), F.avg("mr").alias("mrbar"))
     ucl = F.col("xbar") + 2.66 * F.col("mrbar")
     lcl = F.col("xbar") - 2.66 * F.col("mrbar")
@@ -2804,7 +2790,7 @@ FROM p3
 POISSON_GLM_ORACLE = _poisson_newton_sql()
 
 
-@register("events_poisson_glm_hourly", oracle=POISSON_GLM_ORACLE, tags=("stats", "ml"))
+@register("events_poisson_glm_hourly", oracle=POISSON_GLM_ORACLE)
 def events_poisson_glm_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     cells = ev.groupBy(
@@ -2812,7 +2798,7 @@ def events_poisson_glm_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).cast("double").alias("y")).select(
         F.col("hh").cast("double").alias("h"), "y"
     )
-    cells = cells.localCheckpoint(eager=False)  # 3 rounds + count reuse it
+    cells = materialize(cells)  # 3 rounds + count reuse it
     params = cells.agg(
         F.round(F.log(F.avg("y")), 6).alias("a"), F.lit(0.0).alias("b")
     )
@@ -2888,13 +2874,13 @@ FROM n CROSS JOIN s CROSS JOIN var
 """
 
 
-@register("events_mann_kendall_trend", oracle=MANN_KENDALL_ORACLE, tags=("stats", "drift"))
+@register("events_mann_kendall_trend", oracle=MANN_KENDALL_ORACLE)
 def events_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("x")
     )
-    daily = daily.localCheckpoint(eager=False)  # n + pairs + ties branches
+    daily = materialize(daily)  # n + pairs + ties branches
     n = daily.agg(F.count(F.lit(1)).cast("long").alias("n"))
     a = daily.select(F.col("d").alias("da"), F.col("x").alias("xa"))
     b = daily.select(F.col("d").alias("db"), F.col("x").alias("xb"))
@@ -2969,7 +2955,7 @@ ORDER BY event_type
 """
 
 
-@register("events_burstiness_coefficient", oracle=BURSTINESS_ORACLE, tags=("stats",))
+@register("events_burstiness_coefficient", oracle=BURSTINESS_ORACLE)
 def events_burstiness_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("event_type").orderBy("ts", "event_id")
@@ -3034,7 +3020,7 @@ FROM s
 """
 
 
-@register("orders_spearman_rank_corr", oracle=SPEARMAN_ORACLE, tags=("stats",))
+@register("orders_spearman_rank_corr", oracle=SPEARMAN_ORACLE)
 def orders_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_prefix_scan
 
@@ -3045,7 +3031,7 @@ def orders_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_custkey", F.col("c_acctbal").alias("x"))
         .agg(F.sum(F.col("o_totalprice").cast("decimal(18,6)")).alias("y"))
     )
-    spend = spend.localCheckpoint(eager=False)  # rank joins reuse both sides
+    spend = materialize(spend)  # rank joins reuse both sides
 
     def doubled_ranks(col: str, out: str) -> DataFrame:
         dv = spend.groupBy(col).agg(F.count(F.lit(1)).alias("cnt"))

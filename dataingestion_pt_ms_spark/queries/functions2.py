@@ -32,7 +32,7 @@ WHERE p_partkey % 3 = 0
 """
 
 
-@register("scalar_string_family2", oracle=STR2_ORACLE, tags=("scalar", "string"))
+@register("scalar_string_family2", oracle=STR2_ORACLE)
 def scalar_string_family2(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part").filter(F.col("p_partkey") % 3 == 0)
     return part.select(
@@ -61,7 +61,7 @@ WHERE c_custkey % 4 = 0
 """
 
 
-@register("scalar_conditional_family", oracle=COND_ORACLE, tags=("scalar", "conditional"))
+@register("scalar_conditional_family", oracle=COND_ORACLE)
 def scalar_conditional_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") % 4 == 0)
     return cust.select(
@@ -88,7 +88,7 @@ WHERE o_orderkey % 11 = 0
 """
 
 
-@register("scalar_bitwise_family", oracle=BITS_ORACLE, tags=("scalar", "bits"))
+@register("scalar_bitwise_family", oracle=BITS_ORACLE)
 def scalar_bitwise_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 11 == 0)
     k = F.col("o_orderkey")
@@ -113,7 +113,7 @@ WHERE p_partkey % 5 = 0
 """
 
 
-@register("scalar_map_struct_family", oracle=MAPSTRUCT_ORACLE, tags=("scalar", "map", "struct"))
+@register("scalar_map_struct_family", oracle=MAPSTRUCT_ORACLE)
 def scalar_map_struct_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Build real MapType/StructType columns, then project scalars out of
     # them so the differential compare stays on primitive columns (map
@@ -142,7 +142,7 @@ FROM nation
 """
 
 
-@register("scalar_array_builders", oracle=ARR2_ORACLE, tags=("scalar", "array"))
+@register("scalar_array_builders", oracle=ARR2_ORACLE)
 def scalar_array_builders(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation")
     seq = F.sequence(F.lit(1), (F.col("n_nationkey") % 5 + 1))
@@ -172,7 +172,7 @@ WHERE o_orderkey % 13 = 0
 """
 
 
-@register("scalar_datetime_family2", oracle=DT2_ORACLE, tags=("scalar", "datetime"))
+@register("scalar_datetime_family2", oracle=DT2_ORACLE)
 def scalar_datetime_family2(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 13 == 0)
     d = F.col("o_orderdate")

@@ -21,6 +21,7 @@ from ..operators.graph import (
     pagerank,
     triangle_counts,
 )
+from ..session import materialize
 from . import register
 
 _D = 0.85
@@ -65,9 +66,7 @@ ORDER BY pagerank DESC, n_name
 """
 
 
-@register(
-    "graph_nation_trade_pagerank", oracle=PAGERANK_ORACLE, tags=("graph", "iterative")
-)
+@register("graph_nation_trade_pagerank", oracle=PAGERANK_ORACLE)
 def graph_nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two unrolled weighted-PageRank rounds over the customer-nation →
     supplier-nation trade graph; final ranks joined back to nation names.
@@ -134,9 +133,7 @@ ORDER BY n_triangles DESC, node
 """
 
 
-@register(
-    "graph_copurchase_triangles", oracle=TRIANGLE_ORACLE, tags=("graph", "triangles")
-)
+@register("graph_copurchase_triangles", oracle=TRIANGLE_ORACLE)
 def graph_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     op = li.select("l_orderkey", "l_partkey").distinct()
@@ -179,7 +176,7 @@ FROM walk GROUP BY node ORDER BY node
 """
 
 
-@register("graph_bfs_copurchase_hops", oracle=BFS_ORACLE, tags=("graph", "iterative"))
+@register("graph_bfs_copurchase_hops", oracle=BFS_ORACLE)
 def graph_bfs_copurchase_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
@@ -235,9 +232,7 @@ SELECT node, lab AS community FROM lab2 ORDER BY node
 """
 
 
-@register(
-    "graph_copurchase_communities", oracle=LPA_ORACLE, tags=("graph", "iterative")
-)
+@register("graph_copurchase_communities", oracle=LPA_ORACLE)
 def graph_copurchase_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     op = li.select("l_orderkey", "l_partkey").distinct()
@@ -291,7 +286,7 @@ FROM e{_KCORE_ROUNDS} GROUP BY a ORDER BY node
 )
 
 
-@register("graph_copurchase_kcore", oracle=KCORE_ORACLE, tags=("graph", "iterative"))
+@register("graph_copurchase_kcore", oracle=KCORE_ORACLE)
 def graph_copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     op = li.select("l_orderkey", "l_partkey").distinct()
@@ -348,9 +343,7 @@ ORDER BY ppr DESC, n_name
 """
 
 
-@register(
-    "graph_personalized_pagerank", oracle=PPR_ORACLE, tags=("graph", "iterative")
-)
+@register("graph_personalized_pagerank", oracle=PPR_ORACLE)
 def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank over the nation trade graph with the teleport
     vector on region-2 (ASIA) nations — "trade influence relative to these
@@ -414,9 +407,7 @@ ORDER BY jaccard_score DESC, u, v
 """
 
 
-@register(
-    "graph_copurchase_link_prediction", oracle=LINKPRED_ORACLE, tags=("graph",)
-)
+@register("graph_copurchase_link_prediction", oracle=LINKPRED_ORACLE)
 def graph_copurchase_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import jaccard_link_prediction
 
@@ -494,7 +485,7 @@ ORDER BY n_name
 """
 
 
-@register("graph_hits_nation_trade", oracle=HITS_ORACLE, tags=("graph", "iterative"))
+@register("graph_hits_nation_trade", oracle=HITS_ORACLE)
 def graph_hits_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS over the customer-nation → supplier-nation trade graph
     (operators/graph.py:hits): hub score = the nation as demand aggregator,
@@ -564,9 +555,7 @@ FROM d{_BF_ROUNDS} ORDER BY node
 """
 
 
-@register(
-    "graph_cheapest_path_rounds", oracle=BF_ORACLE, tags=("graph", "iterative")
-)
+@register("graph_cheapest_path_rounds", oracle=BF_ORACLE)
 def graph_cheapest_path_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import bellman_ford_rounds
 
@@ -628,11 +617,7 @@ _SPARK_TRI_EDGES = """
 """
 
 
-@register(
-    "sql_recursive_cte_reachability",
-    oracle=RCTE_ORACLE,
-    tags=("graph", "sql", "recursive"),
-)
+@register("sql_recursive_cte_reachability", oracle=RCTE_ORACLE)
 def sql_recursive_cte_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import register_views
 
@@ -641,7 +626,7 @@ def sql_recursive_cte_reachability(spark: SparkSession, sf_dir: str) -> DataFram
     # recursive plan references the edge CTE once per iteration, and a
     # checkpointed temp view stops the basket self-join from re-running
     # every round (4.9 → ~2.5 s at sf0.1)
-    edges = spark.sql(_SPARK_TRI_EDGES).localCheckpoint(eager=False)
+    edges = materialize(spark.sql(_SPARK_TRI_EDGES))
     edges.createOrReplaceTempView("_rcte_edges")
     return spark.sql(_RCTE_TEMPLATE.format(edges="SELECT * FROM _rcte_edges"))
 
@@ -665,23 +650,20 @@ JOIN deg db ON db.node = e.b
 """
 
 
-@register(
-    "graph_degree_assortativity", oracle=ASSORT_ORACLE, tags=("graph", "stats")
-)
+@register("graph_degree_assortativity", oracle=ASSORT_ORACLE)
 def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     op = li.select("l_orderkey", "l_partkey").distinct()
     a = op.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
     b = op.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
-    e0 = (
+    e0 = materialize(
         a.join(b, "k")
         .filter(F.col("u") < F.col("v"))
         .groupBy("u", "v")
         .agg(F.count("*").alias("sup"))
         .filter(F.col("sup") >= 2)
         .select("u", "v")
-        .localCheckpoint(eager=False)  # sym edges + edge count
-    )
+    )  # sym edges + edge count
     e = e0.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
         e0.select(F.col("v").alias("a"), F.col("u").alias("b"))
     )
@@ -739,11 +721,7 @@ ORDER BY clustering_coeff DESC, node
 """
 
 
-@register(
-    "graph_clustering_coefficient",
-    oracle=CLUSTER_COEFF_ORACLE,
-    tags=("graph", "triangles"),
-)
+@register("graph_clustering_coefficient", oracle=CLUSTER_COEFF_ORACLE)
 def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     op = li.select("l_orderkey", "l_partkey").distinct()
@@ -759,7 +737,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the thresholded edge set feeds both the degree agg and the triangle
     # operator — materialize once so the basket self-join runs once
-    edges = edges.localCheckpoint(eager=False)
+    edges = materialize(edges)
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -843,9 +821,7 @@ ORDER BY label
 """
 
 
-@register(
-    "graph_lp_training_set", oracle=LP_TRAINSET_ORACLE, tags=("graph", "ml", "curation")
-)
+@register("graph_lp_training_set", oracle=LP_TRAINSET_ORACLE)
 def graph_lp_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     op = li.select("l_orderkey", "l_partkey").distinct()
@@ -859,14 +835,14 @@ def graph_lp_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("sup") >= 2)
         .drop("sup")
     )
-    edges = edges.localCheckpoint(eager=False)  # deg/neg/label branches
+    edges = materialize(edges)  # deg/neg/label branches
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionByName(edges.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
     )
-    deg = deg.localCheckpoint(eager=False)
+    deg = materialize(deg)
     # bounded negative budget (VERDICT r4 #1): B = max(2, ceil(n/(5·√E)))
     # makes |sa|·|sb| ≈ (n/B)² ≈ 25·|edges| — the candidate bill grows
     # with the edge count, not n². Computed as a 1-row broadcast so the
@@ -962,9 +938,7 @@ FROM paired
 """
 
 
-@register(
-    "graph_trade_reciprocity", oracle=RECIPROCITY_ORACLE, tags=("graph", "stats")
-)
+@register("graph_trade_reciprocity", oracle=RECIPROCITY_ORACLE)
 def graph_trade_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
@@ -978,7 +952,7 @@ def graph_trade_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("double").alias("w"))
         .filter(F.col("src") != F.col("dst"))
     )
-    edges = edges.localCheckpoint(eager=False)  # both sides of the dyad join
+    edges = materialize(edges)  # both sides of the dyad join
     rev = edges.select(
         F.col("dst").alias("src"), F.col("src").alias("dst"), F.col("w").alias("w_rev")
     )

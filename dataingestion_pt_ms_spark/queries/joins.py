@@ -34,7 +34,7 @@ WHERE o_orderstatus = 'O'
 """
 
 
-@register("join_inner_orders_customers", oracle=INNER_ORACLE, tags=("join",))
+@register("join_inner_orders_customers", oracle=INNER_ORACLE)
 def join_inner_orders_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
     cust = load_table(spark, sf_dir, "customer")
@@ -58,7 +58,7 @@ ORDER BY r_name, n_name
 """
 
 
-@register("join_broadcast_geo_rollup", oracle=BCAST_ORACLE, tags=("join", "broadcast"))
+@register("join_broadcast_geo_rollup", oracle=BCAST_ORACLE)
 def join_broadcast_geo_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
@@ -87,7 +87,7 @@ GROUP BY c_custkey, c_mktsegment
 """
 
 
-@register("join_left_outer_order_counts", oracle=LEFT_ORACLE, tags=("join", "outer"))
+@register("join_left_outer_order_counts", oracle=LEFT_ORACLE)
 def join_left_outer_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
@@ -113,7 +113,7 @@ GROUP BY p_partkey, p_brand
 """
 
 
-@register("join_right_outer_part_usage", oracle=RIGHT_ORACLE, tags=("join", "outer"))
+@register("join_right_outer_part_usage", oracle=RIGHT_ORACLE)
 def join_right_outer_part_usage(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
@@ -141,7 +141,7 @@ FROM c FULL OUTER JOIN s ON c.nk = s.nk
 """
 
 
-@register("join_full_outer_nation_counts", oracle=FULL_ORACLE, tags=("join", "outer"))
+@register("join_full_outer_nation_counts", oracle=FULL_ORACLE)
 def join_full_outer_nation_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = (
         load_table(spark, sf_dir, "customer")
@@ -170,7 +170,7 @@ WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus
 """
 
 
-@register("join_semi_customers_with_f_orders", oracle=SEMI_ORACLE, tags=("join", "semi"))
+@register("join_semi_customers_with_f_orders", oracle=SEMI_ORACLE)
 def join_semi_customers_with_f_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
@@ -190,7 +190,7 @@ WHERE NOT EXISTS (SELECT 1 FROM orders
 """
 
 
-@register("join_anti_customers_without_orders", oracle=ANTI_ORACLE, tags=("join", "anti"))
+@register("join_anti_customers_without_orders", oracle=ANTI_ORACLE)
 def join_anti_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
@@ -208,7 +208,7 @@ FROM region CROSS JOIN (SELECT DISTINCT o_orderstatus FROM orders) s
 """
 
 
-@register("join_cross_region_status", oracle=CROSS_ORACLE, tags=("join", "cross"))
+@register("join_cross_region_status", oracle=CROSS_ORACLE)
 def join_cross_region_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = load_table(spark, sf_dir, "region").select("r_name")
     statuses = load_table(spark, sf_dir, "orders").select("o_orderstatus").distinct()
@@ -232,7 +232,7 @@ ORDER BY s_suppkey
 """
 
 
-@register("join_theta_balance_band", oracle=THETA_ORACLE, tags=("join", "theta"))
+@register("join_theta_balance_band", oracle=THETA_ORACLE)
 def join_theta_balance_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load_table(spark, sf_dir, "supplier")
     cust = load_table(spark, sf_dir, "customer")
@@ -282,11 +282,7 @@ ORDER BY s_nationkey
 """
 
 
-@register(
-    "join_theta_balance_band_counts",
-    oracle=THETA_COUNTS_ORACLE,
-    tags=("join", "theta", "audit"),
-)
+@register("join_theta_balance_band_counts", oracle=THETA_COUNTS_ORACLE)
 def join_theta_balance_band_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load_table(spark, sf_dir, "supplier")
     cust = load_table(spark, sf_dir, "customer")
@@ -336,7 +332,7 @@ ORDER BY e.event_id
 """
 
 
-@register("join_range_clicks_before_error", oracle=RANGE_ORACLE, tags=("join", "range", "timeseries"))
+@register("join_range_clicks_before_error", oracle=RANGE_ORACLE)
 def join_range_clicks_before_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     errors = ev.filter(F.col("event_type") == "error").select(
@@ -386,11 +382,7 @@ ORDER BY error_day
 """
 
 
-@register(
-    "join_range_clicks_before_error_counts",
-    oracle=RANGE_COUNTS_ORACLE,
-    tags=("join", "range", "timeseries", "audit"),
-)
+@register("join_range_clicks_before_error_counts", oracle=RANGE_COUNTS_ORACLE)
 def join_range_clicks_before_error_counts(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -447,7 +439,7 @@ ORDER BY c.c_nationkey
 """
 
 
-@register("join_salted_skew", oracle=SALTED_ORACLE, tags=("join", "skew", "salt"))
+@register("join_salted_skew", oracle=SALTED_ORACLE)
 def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders ⋈ customer with an explicit 8-way salt on the join key, then
     the per-nation rollup. Identical output to the unsalted join (the
@@ -494,11 +486,7 @@ ORDER BY l_orderkey, l_linenumber
 """
 
 
-@register(
-    "join_bloom_runtime_filter",
-    oracle=BLOOM_SEMI_ORACLE,
-    tags=("join", "semi", "bloom", "runtime-filter"),
-)
+@register("join_bloom_runtime_filter", oracle=BLOOM_SEMI_ORACLE)
 def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-join with a broadcast bloom pre-filter — the runtime-filter
     shape for filter sides too large to broadcast as a hash relation

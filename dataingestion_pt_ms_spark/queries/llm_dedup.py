@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators import dedup as D
+from ..session import materialize
 from . import register
 from ._ducktwins import DSHINGLES, DTOKS
 
@@ -37,7 +38,7 @@ GROUP BY md5(text)
 """
 
 
-@register("dedup_exact_groups", oracle=EXACT_ORACLE, tags=("llm", "dedup"))
+@register("dedup_exact_groups", oracle=EXACT_ORACLE)
 def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return D.exact_dedup(docs, "text", "doc_id")
@@ -50,7 +51,7 @@ WHERE doc_id IN (SELECT min(doc_id) FROM documents GROUP BY text)
 """
 
 
-@register("dedup_exact_kept_rows", oracle=KEEP_ORACLE, tags=("llm", "dedup", "semi"))
+@register("dedup_exact_kept_rows", oracle=KEEP_ORACLE)
 def dedup_exact_kept_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     keep = D.exact_dedup(docs, "text", "doc_id").select(
@@ -71,7 +72,7 @@ ORDER BY key_a
 """
 
 
-@register("dedup_ngram_jaccard_pairs", oracle=NGRAM_ORACLE, tags=("llm", "dedup"))
+@register("dedup_ngram_jaccard_pairs", oracle=NGRAM_ORACLE)
 def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard over consecutive-id candidate pairs (bounded
     candidate set → SQL-checkable; the LSH query below generates candidates
@@ -136,7 +137,7 @@ WHERE {_DJACC} >= 0.8
 """
 
 
-@register("dedup_minhash_lsh_pairs", tags=("llm", "dedup", "lsh", "fastpath"))
+@register("dedup_minhash_lsh_pairs")
 def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(64) + LSH(8×8) candidate generation + exact-Jaccard verify at
     ≥0.8 — the PRODUCTION path: the per-shingle base hash is Spark-native
@@ -155,9 +156,7 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dedup_minhash_lsh_pairs_md5", oracle=MINHASH_ORACLE, tags=("llm", "dedup", "lsh")
-)
+@register("dedup_minhash_lsh_pairs_md5", oracle=MINHASH_ORACLE)
 def dedup_minhash_lsh_pairs_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-attested twin of ``dedup_minhash_lsh_pairs``: identical
     pipeline with the engine-agnostic md5-prefix base hash, so signatures
@@ -200,7 +199,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 20
 """
 
 
-@register("dedup_simhash_pairs", oracle=SIMHASH_ORACLE, tags=("llm", "dedup", "simhash"))
+@register("dedup_simhash_pairs", oracle=SIMHASH_ORACLE)
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash-63 hamming distance over consecutive-id candidates. The
     md5-derived token hash is bit-identical across engines, so the full
@@ -235,11 +234,7 @@ ORDER BY key_a, key_b
 """
 
 
-@register(
-    "dedup_simhash_banded_pairs",
-    oracle=SIMHASH_BANDED_ORACLE,
-    tags=("llm", "dedup", "simhash", "lsh"),
-)
+@register("dedup_simhash_banded_pairs", oracle=SIMHASH_BANDED_ORACLE)
 def dedup_simhash_banded_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash 4×16-bit banded LSH over the whole corpus: docs sharing any
     exact 16-bit simhash chunk are candidates, verified at hamming ≤ 3 — the pigeonhole-guaranteed regime
@@ -277,7 +272,7 @@ ORDER BY doc_id
 """
 
 
-@register("dedup_cluster_assignment", oracle=CLUSTER_ASSIGN_ORACLE, tags=("llm", "dedup", "graph"))
+@register("dedup_cluster_assignment", oracle=CLUSTER_ASSIGN_ORACLE)
 def dedup_cluster_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import connected_components
 
@@ -313,7 +308,7 @@ GROUP BY text
 """
 
 
-@register("dedup_cluster_canonical", oracle=CLUSTER_CANON_ORACLE, tags=("llm", "dedup", "graph"))
+@register("dedup_cluster_canonical", oracle=CLUSTER_CANON_ORACLE)
 def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import cluster_canonical, connected_components
 
@@ -349,7 +344,7 @@ ORDER BY key_a, key_b
 """
 
 
-@register("dedup_embedding_cosine_pairs", oracle=EMB_COS_ORACLE, tags=("llm", "dedup", "similarity"))
+@register("dedup_embedding_cosine_pairs", oracle=EMB_COS_ORACLE)
 def dedup_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs within label blocks
     (operators/similarity.py:blocked_cosine_pairs — per-block numpy GEMM)."""
@@ -396,11 +391,7 @@ ORDER BY component
 """
 
 
-@register(
-    "dedup_cluster_near_dups",
-    oracle=CLUSTER_NEAR_DUPS_ORACLE,
-    tags=("llm", "dedup", "graph", "lsh"),
-)
+@register("dedup_cluster_near_dups", oracle=CLUSTER_NEAR_DUPS_ORACLE)
 def dedup_cluster_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The real near-dup pipeline: exact-collapse -> MinHash-LSH rep pairs
     (>=0.8 verified Jaccard) -> connected components -> non-singleton
@@ -471,10 +462,7 @@ ORDER BY corpus_key, probe_key
 """
 
 
-@register(
-    "dedup_cross_corpus_minhash",
-    tags=("llm", "dedup", "lsh", "contamination", "fastpath"),
-)
+@register("dedup_cross_corpus_minhash")
 def dedup_cross_corpus_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Doc-level train-vs-eval decontamination
     (operators/dedup.py:cross_corpus_near_dups): corpus docs (id >= 50)
@@ -497,11 +485,7 @@ def dedup_cross_corpus_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dedup_cross_corpus_minhash_md5",
-    oracle=CROSS_MINHASH_ORACLE,
-    tags=("llm", "dedup", "lsh", "contamination"),
-)
+@register("dedup_cross_corpus_minhash_md5", oracle=CROSS_MINHASH_ORACLE)
 def dedup_cross_corpus_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-attested twin of ``dedup_cross_corpus_minhash``: identical
     corpus×probe pipeline with the engine-agnostic md5-prefix base hash so
@@ -555,11 +539,7 @@ ORDER BY new_key, stored_key
 """
 
 
-@register(
-    "dedup_incremental_minhash",
-    oracle=INCR_MINHASH_ORACLE,
-    tags=("llm", "dedup", "lsh", "incremental"),
-)
+@register("dedup_incremental_minhash", oracle=INCR_MINHASH_ORACLE)
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """New-batch-vs-signature-store incremental near-dup detection
     (operators/dedup.py:incremental_minhash_dedup); store side is the
@@ -568,9 +548,9 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # store side feeds both the banding and the estimator join — in
     # production it is a parquet signature table (cheap re-scan), here it
     # is a computed pipeline, so materialize it once (r11 opt, §1.2 #1)
-    stored = D.minhash_signature(
-        docs.filter(F.col("doc_id") < 400), "text", "doc_id"
-    ).localCheckpoint(eager=False)
+    stored = materialize(
+        D.minhash_signature(docs.filter(F.col("doc_id") < 400), "text", "doc_id")
+    )
     return D.incremental_minhash_dedup(
         docs.filter(F.col("doc_id") >= 400), stored, "text", "doc_id", threshold=0.5
     )
@@ -612,11 +592,7 @@ ORDER BY cluster_id
 """
 
 
-@register(
-    "dedup_cluster_keep_longest",
-    oracle=CLUSTER_KEEP_LONGEST_ORACLE,
-    tags=("llm", "dedup", "graph", "window"),
-)
+@register("dedup_cluster_keep_longest", oracle=CLUSTER_KEEP_LONGEST_ORACLE)
 def dedup_cluster_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -679,11 +655,7 @@ ORDER BY src_a, src_b
 """
 
 
-@register(
-    "dedup_source_overlap_matrix",
-    oracle=SOURCE_OVERLAP_ORACLE,
-    tags=("llm", "dedup", "audit"),
-)
+@register("dedup_source_overlap_matrix", oracle=SOURCE_OVERLAP_ORACLE)
 def dedup_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.textfns import shingles, tokens
 
@@ -699,7 +671,7 @@ def dedup_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", "doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "t")
     )
     wd = W.partitionBy("doc_id").orderBy("pos")
-    sh = (
+    sh = materialize(
         tok.select(
             "source",
             F.concat_ws(
@@ -710,7 +682,6 @@ def dedup_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("_t2").isNotNull())
         .drop("_t2")
         .distinct()
-        .localCheckpoint(eager=False)
     )
     sizes = sh.groupBy("source").agg(F.count("*").alias("n"))
     # per-shingle source-set pair expansion (the LSH bucket trick) instead
@@ -769,9 +740,7 @@ FROM sizes GROUP BY band_idx ORDER BY band_idx
 """
 
 
-@register(
-    "dedup_lsh_band_cost_audit", oracle=BAND_COST_ORACLE, tags=("llm", "dedup", "lsh")
-)
+@register("dedup_lsh_band_cost_audit", oracle=BAND_COST_ORACLE)
 def dedup_lsh_band_cost_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-band LSH bucket histogram + exact candidate-pair bill — the
     pre-flight sizing audit for the MinHash dedup family (see
@@ -802,9 +771,7 @@ WHERE {_DCONT_A} >= 0.9 OR {_DCONT_B} >= 0.9
 """
 
 
-@register(
-    "dedup_containment_pairs", oracle=CONTAINMENT_ORACLE, tags=("llm", "dedup", "lsh")
-)
+@register("dedup_containment_pairs", oracle=CONTAINMENT_ORACLE)
 def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric containment (|A∩B|/|A|) over MinHash-LSH candidates at
     ≥0.9 either direction — catches subset duplication (quotes,
@@ -858,15 +825,11 @@ ORDER BY true_j_decile
 """
 
 
-@register(
-    "dedup_estimator_error_profile",
-    oracle=ESTIMATOR_ERROR_ORACLE,
-    tags=("llm", "dedup", "eval"),
-)
+@register("dedup_estimator_error_profile", oracle=ESTIMATOR_ERROR_ORACLE)
 def dedup_estimator_error_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sig = D.minhash_signature(docs, "text", "doc_id")
-    sig = sig.localCheckpoint(eager=False)  # candidates + both estimator sides
+    sig = materialize(sig)  # candidates + both estimator sides
     cands = D.lsh_candidate_pairs(sig, "doc_id")
     sa = sig.select(F.col("doc_id").alias("key_a"), F.col("signature").alias("sig_a"))
     sb = sig.select(F.col("doc_id").alias("key_b"), F.col("signature").alias("sig_b"))
@@ -955,11 +918,7 @@ ORDER BY key_a, key_b
 """.replace("{DTOKS}", "string_split_regex(lower(trim(text)), '\\s+')")
 
 
-@register(
-    "dedup_sorted_neighborhood",
-    oracle=SNM_ORACLE,
-    tags=("llm", "dedup", "blocking"),
-)
+@register("dedup_sorted_neighborhood", oracle=SNM_ORACLE)
 def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -972,9 +931,9 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         F.concat_ws(" ", F.slice(tokens(F.col("text")), 1, 3)).alias("fkey"),
     )
-    ordered = global_row_number(
-        fp, [F.col("fkey"), F.col("doc_id")], out_col="pos"
-    ).localCheckpoint(eager=False)  # both join sides
+    ordered = materialize(
+        global_row_number(fp, [F.col("fkey"), F.col("doc_id")], out_col="pos")
+    )  # both join sides
     # neighbour pairs by RANK ARITHMETIC, not a global-ordering window
     # (lead() over an unpartitioned window is the single-reducer
     # anti-pattern): explode the w−1 offsets and equi-join pos+j = pos —
@@ -993,7 +952,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2×(w−1)×n times — measured 31 s at sf0.1; this form is ~1 s)
     wd = W.partitionBy("doc_id").orderBy("_pos")
     l1, l2 = F.lead("_t", 1).over(wd), F.lead("_t", 2).over(wd)
-    sh_sets = (
+    sh_sets = materialize(
         docs.select("doc_id", F.posexplode(tokens(F.col("text"))).alias("_pos", "_t"))
         .select(
             "doc_id",
@@ -1003,8 +962,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("_g").isNotNull())
         .groupBy("doc_id")
         .agg(F.collect_set("sh").alias("shset"))
-        .localCheckpoint(eager=False)  # both pair sides
-    )
+    )  # both pair sides
     inter = F.size(F.array_intersect("sha", "shb")).cast("double")
     union = F.size("sha") + F.size("shb") - inter
     return (
@@ -1064,12 +1022,10 @@ ORDER BY est.key_a
 """
 
 
-@register(
-    "dedup_bbit_minhash_estimate", oracle=BBIT_ORACLE, tags=("llm", "dedup", "sketch")
-)
+@register("dedup_bbit_minhash_estimate", oracle=BBIT_ORACLE)
 def dedup_bbit_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    sig = D.minhash_signature(docs, "text", "doc_id").localCheckpoint(eager=False)
+    sig = materialize(D.minhash_signature(docs, "text", "doc_id"))
     a = sig.select(F.col("doc_id").alias("key_a"), F.col("signature").alias("sa"))
     b = sig.select(
         (F.col("doc_id") - 1).alias("key_a"),
@@ -1138,11 +1094,7 @@ ORDER BY cur.lang
 """
 
 
-@register(
-    "dedup_survivorship_bias_audit",
-    oracle=SURVIVORSHIP_ORACLE,
-    tags=("llm", "dedup", "curation", "dq"),
-)
+@register("dedup_survivorship_bias_audit", oracle=SURVIVORSHIP_ORACLE)
 def dedup_survivorship_bias_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     keep_keys = D.exact_dedup(docs, "text", "doc_id").select(
@@ -1154,8 +1106,8 @@ def dedup_survivorship_bias_audit(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.count(F.lit(1)).cast("double").alias("k"))
     )
     cur = docs.groupBy("lang").agg(F.count(F.lit(1)).cast("double").alias("n"))
-    cur = cur.localCheckpoint(eager=False)
-    kp = kp.localCheckpoint(eager=False)
+    cur = materialize(cur)
+    kp = materialize(kp)
     tot = cur.agg(F.sum("n").alias("tn")).crossJoin(kp.agg(F.sum("k").alias("tk")))
     return (
         cur.join(kp, "lang", "left")
@@ -1236,11 +1188,7 @@ ORDER BY key_a, key_b
 """
 
 
-@register(
-    "dedup_prefix_filter_pairs",
-    oracle=PREFIX_FILTER_ORACLE,
-    tags=("llm", "dedup", "setsim"),
-)
+@register("dedup_prefix_filter_pairs", oracle=PREFIX_FILTER_ORACLE)
 def dedup_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return D.prefix_filter_jaccard_pairs(
@@ -1312,11 +1260,7 @@ ORDER BY key_a, key_b
 """
 
 
-@register(
-    "dedup_winnowing_overlap",
-    oracle=WINNOW_ORACLE,
-    tags=("llm", "dedup", "fingerprint"),
-)
+@register("dedup_winnowing_overlap", oracle=WINNOW_ORACLE)
 def dedup_winnowing_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return D.winnowing_overlap_pairs(
@@ -1361,11 +1305,7 @@ ORDER BY key_a, key_b
 """
 
 
-@register(
-    "dedup_stitch_artifact_pairs",
-    oracle=STITCH_ORACLE,
-    tags=("llm", "dedup"),
-)
+@register("dedup_stitch_artifact_pairs", oracle=STITCH_ORACLE)
 def dedup_stitch_artifact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -1382,7 +1322,7 @@ def dedup_stitch_artifact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat_ws(" ", F.slice("t", 1, _ST_K)).alias("head"),
         F.concat_ws(" ", F.slice("t", -_ST_K, _ST_K)).alias("tail"),
     )
-    bounds = bounds.localCheckpoint(eager=False)  # head + tail branches
+    bounds = materialize(bounds)  # head + tail branches
     hw = W.partitionBy("head")
     tw = W.partitionBy("tail")
     heads = (
@@ -1459,11 +1399,7 @@ ORDER BY key_a, key_b
 """
 
 
-@register(
-    "dedup_winnowing_match_spans",
-    oracle=WINNOW_SPANS_ORACLE,
-    tags=("llm", "dedup", "fingerprint"),
-)
+@register("dedup_winnowing_match_spans", oracle=WINNOW_SPANS_ORACLE)
 def dedup_winnowing_match_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return D.winnowing_match_spans(
@@ -1523,24 +1459,20 @@ FROM m
 """
 
 
-@register(
-    "dedup_blocking_quality_audit",
-    oracle=BLOCKING_QUALITY_ORACLE,
-    tags=("llm", "dedup", "lsh", "audit"),
-)
+@register("dedup_blocking_quality_audit", oracle=BLOCKING_QUALITY_ORACLE)
 def dedup_blocking_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sig = D.minhash_signature(docs, "text", "doc_id")
-    sig = sig.localCheckpoint(eager=False)  # two banding passes share it
+    sig = materialize(sig)  # two banding passes share it
     cand8 = D.lsh_candidate_pairs(sig, "doc_id", bands=8, rows_per_band=8)
-    cand8 = cand8.localCheckpoint(eager=False)  # counted + joined
+    cand8 = materialize(cand8)  # counted + joined
     cand16 = D.lsh_candidate_pairs(sig, "doc_id", bands=16, rows_per_band=4)
     truth = (
         D.jaccard_pairs(docs, cand16, "text", "doc_id")
         .filter(F.col("jaccard") >= 0.8)
         .select("key_a", "key_b")
     )
-    truth = truth.localCheckpoint(eager=False)  # counted + joined
+    truth = materialize(truth)  # counted + joined
     nd = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     nc = cand8.agg(F.count(F.lit(1)).cast("long").alias("n_cand"))
     nt = truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth"))
@@ -1608,11 +1540,7 @@ ORDER BY j_decile
 """
 
 
-@register(
-    "dedup_minhash_lsh_pairs_counts",
-    oracle=MINHASH_COUNTS_ORACLE,
-    tags=("llm", "dedup", "lsh", "audit"),
-)
+@register("dedup_minhash_lsh_pairs_counts", oracle=MINHASH_COUNTS_ORACLE)
 def dedup_minhash_lsh_pairs_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-grain twin of ``dedup_minhash_lsh_pairs_md5``: the complete
     MinHash(64)+LSH(8x8)+exact-Jaccard-verify pipeline rolled up per
@@ -1653,11 +1581,7 @@ ORDER BY direction
 """
 
 
-@register(
-    "dedup_containment_pairs_counts",
-    oracle=CONTAINMENT_COUNTS_ORACLE,
-    tags=("llm", "dedup", "lsh", "audit"),
-)
+@register("dedup_containment_pairs_counts", oracle=CONTAINMENT_COUNTS_ORACLE)
 def dedup_containment_pairs_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-grain twin of ``dedup_containment_pairs``: the asymmetric
     containment pipeline rolled up per gate direction (a-in-b only,
@@ -1703,11 +1627,7 @@ ORDER BY ov_decile
 """
 
 
-@register(
-    "dedup_winnowing_overlap_counts",
-    oracle=WINNOW_COUNTS_ORACLE,
-    tags=("llm", "dedup", "fingerprint", "audit"),
-)
+@register("dedup_winnowing_overlap_counts", oracle=WINNOW_COUNTS_ORACLE)
 def dedup_winnowing_overlap_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-grain twin of ``dedup_winnowing_overlap``: the winnowing
     fingerprint → postings-cap → shared-fp pair pipeline rolled up per
@@ -1745,11 +1665,7 @@ ORDER BY probe_key
 """
 
 
-@register(
-    "dedup_cross_corpus_minhash_counts",
-    oracle=CROSS_MINHASH_COUNTS_ORACLE,
-    tags=("llm", "dedup", "lsh", "contamination", "audit"),
-)
+@register("dedup_cross_corpus_minhash_counts", oracle=CROSS_MINHASH_COUNTS_ORACLE)
 def dedup_cross_corpus_minhash_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-grain twin of ``dedup_cross_corpus_minhash_md5``: the
     train-vs-eval decontamination hits rolled up per PROBE doc (the probe

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.textfns import tokens
+from ..session import materialize
 from . import register
 from ._ducktwins import DTOKS
 
@@ -49,9 +50,7 @@ ORDER BY doc_id
 """
 
 
-@register(
-    "text_token_entropy", oracle=ENTROPY_ORACLE, tags=("llm", "text", "quality")
-)
+@register("text_token_entropy", oracle=ENTROPY_ORACLE)
 def text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shannon entropy (nats) of each document's token distribution. Two
     narrow shuffles on the doc grain ((doc, tok) counts, then per-doc
@@ -106,9 +105,7 @@ ORDER BY source
 """
 
 
-@register(
-    "docs_source_kl_divergence", oracle=KL_ORACLE, tags=("llm", "text", "quality")
-)
+@register("docs_source_kl_divergence", oracle=KL_ORACLE)
 def docs_source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KL(source token distribution || corpus token distribution) per
     source — the domain-skew triage stat. q > 0 always holds because the
@@ -119,7 +116,7 @@ def docs_source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("source", F.explode(tokens(F.col("text"))).alias("tok"))
     src_counts = tok.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
-    src_counts = src_counts.localCheckpoint(eager=False)  # feeds 3 branches
+    src_counts = materialize(src_counts)  # feeds 3 branches
     src_totals = src_counts.groupBy("source").agg(
         F.sum("c").cast("double").alias("n")
     )
@@ -162,9 +159,7 @@ ORDER BY source
 """
 
 
-@register(
-    "docs_vocab_growth", oracle=VOCAB_ORACLE, tags=("llm", "text", "quality")
-)
+@register("docs_vocab_growth", oracle=VOCAB_ORACLE)
 def docs_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source vocabulary summary (Heaps-law style): token count, type
     count, type-token ratio, hapax legomena share. One (source, tok)
@@ -240,9 +235,7 @@ ORDER BY source_a, source_b
 """
 
 
-@register(
-    "docs_js_divergence_matrix", oracle=JS_ORACLE, tags=("llm", "quality", "stats")
-)
+@register("docs_js_divergence_matrix", oracle=JS_ORACLE)
 def docs_js_divergence_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("source", F.explode(tokens(F.col("text"))).alias("tok"))
@@ -327,9 +320,7 @@ ORDER BY source
 """
 
 
-@register(
-    "docs_language_diversity", oracle=DIVERSITY_ORACLE, tags=("llm", "quality", "stats")
-)
+@register("docs_language_diversity", oracle=DIVERSITY_ORACLE)
 def docs_language_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     c = docs.groupBy("source", "lang").agg(
@@ -413,11 +404,7 @@ ORDER BY doc_id
 """
 
 
-@register(
-    "docs_quality_quantile_normalize",
-    oracle=QNORM_ORACLE,
-    tags=("llm", "quality", "curation"),
-)
+@register("docs_quality_quantile_normalize", oracle=QNORM_ORACLE)
 def docs_quality_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -428,7 +415,7 @@ def docs_quality_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFra
     scored = quality_score(docs).select(
         "doc_id", "source", F.col("quality_score").alias("score")
     )
-    scored = scored.localCheckpoint(eager=False)  # global + per-source branches
+    scored = materialize(scored)  # global + per-source branches
     gl = global_row_number(scored, ["score", "doc_id"], "gidx").select(
         F.col("score").alias("gscore"), "gidx"
     )

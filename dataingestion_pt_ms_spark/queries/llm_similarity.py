@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators import multimodal as M
 from ..operators import similarity as S
+from ..session import materialize
 from . import register
 
 _QID = 0  # fixed query vector for the search queries
@@ -32,7 +33,7 @@ LIMIT 10
 """
 
 
-@register("sim_cosine_topk_bruteforce", oracle=TOPK_ORACLE, tags=("llm", "similarity", "topk"))
+@register("sim_cosine_topk_bruteforce", oracle=TOPK_ORACLE)
 def sim_cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     query = emb.filter(F.col("vec_id") == _QID)
@@ -49,7 +50,7 @@ ORDER BY cosine_sim DESC, vec_id
 """
 
 
-@register("sim_cosine_threshold_search", oracle=THRESH_ORACLE, tags=("llm", "similarity"))
+@register("sim_cosine_threshold_search", oracle=THRESH_ORACLE)
 def sim_cosine_threshold_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vectors import cosine_similarity
 
@@ -108,7 +109,7 @@ LIMIT 5
 """
 
 
-@register("sim_ann_lsh_bucketed", oracle=ANN_LSH_ORACLE, tags=("llm", "similarity", "lsh"))
+@register("sim_ann_lsh_bucketed", oracle=ANN_LSH_ORACLE)
 def sim_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via random-hyperplane LSH (8 deterministic planes → 256 buckets);
     exact top-5 within the query's bucket. Full oracle since round 2: the
@@ -133,7 +134,7 @@ SELECT vec_id, label, nn_vec_id, cosine_sim FROM scored WHERE rn = 1
 """
 
 
-@register("sim_blocked_nearest_neighbor", oracle=NN_ORACLE, tags=("llm", "similarity", "dedup"))
+@register("sim_blocked_nearest_neighbor", oracle=NN_ORACLE)
 def sim_blocked_nearest_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup search: nearest neighbor within each label block
     (IVF-cell shape — Σ|block|² pairs, not n²)."""
@@ -149,7 +150,7 @@ FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
 """
 
 
-@register("multimodal_join_docs_embeddings", oracle=MM_JOIN_ORACLE, tags=("llm", "multimodal", "join"))
+@register("multimodal_join_docs_embeddings", oracle=MM_JOIN_ORACLE)
 def multimodal_join_docs_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal row assembly: text metadata ⋈ vector modality on the
     shared key (documents.doc_id ↔ embeddings.vec_id, TESTDATA join map)."""
@@ -177,7 +178,7 @@ FROM documents
 """
 
 
-@register("multimodal_binary_metadata", oracle=MM_BIN_ORACLE, tags=("llm", "multimodal"))
+@register("multimodal_binary_metadata", oracle=MM_BIN_ORACLE)
 def multimodal_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Opaque binary column + typed metadata (operators/multimodal.py);
     metadata-only projection never touches the payload bytes at scan time
@@ -188,7 +189,7 @@ def multimodal_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("multimodal_fake_features", oracle=None, tags=("llm", "multimodal", "udf"))
+@register("multimodal_fake_features", oracle=None)
 def multimodal_fake_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched mapInPandas feature extraction over binary payloads
     (deterministic stub decode — see operators/multimodal.py). Rows-only."""
@@ -222,7 +223,7 @@ ORDER BY doc_id, frame_idx
 """
 
 
-@register("multimodal_frame_sample", oracle=FRAME_ORACLE, tags=("llm", "multimodal", "udf"))
+@register("multimodal_frame_sample", oracle=FRAME_ORACLE)
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every 4th 32-byte frame of the binary payload with per-frame digest
     (operators/multimodal.py:sample_frames — mapInPandas row expansion)."""
@@ -257,9 +258,7 @@ ORDER BY doc_id
 """
 
 
-@register(
-    "multimodal_bmp_resize", oracle=BMP_RESIZE_ORACLE, tags=("llm", "multimodal", "udf")
-)
+@register("multimodal_bmp_resize", oracle=BMP_RESIZE_ORACLE)
 def multimodal_bmp_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL resize on REAL decoded pixels (round 6, VERDICT r5 #5 — the
     upgrade multimodal_bmp_decode's feature extraction got, applied to
@@ -330,7 +329,7 @@ LIMIT 5
 """
 
 
-@register("sim_ann_ivf_topk", oracle=IVF_ORACLE, tags=("llm", "similarity", "ivf"))
+@register("sim_ann_ivf_topk", oracle=IVF_ORACLE)
 def sim_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: nearest label-centroid cell, exact top-5 inside it
     (operators/similarity.py:ann_ivf_topk)."""
@@ -366,11 +365,7 @@ LIMIT 5
 """
 
 
-@register(
-    "sim_ann_ivf_multiprobe",
-    oracle=IVF_MULTIPROBE_ORACLE,
-    tags=("llm", "similarity", "ivf", "multiprobe"),
-)
+@register("sim_ann_ivf_multiprobe", oracle=IVF_MULTIPROBE_ORACLE)
 def sim_ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with nprobe=2 (operators/similarity.py:ann_ivf_topk): the
     standard recall knob — a query near a cell boundary recovers neighbors
@@ -402,11 +397,7 @@ LIMIT 20
 """
 
 
-@register(
-    "sim_centroid_outliers",
-    oracle=CENTROID_OUTLIER_ORACLE,
-    tags=("llm", "similarity", "curation", "outlier"),
-)
+@register("sim_centroid_outliers", oracle=CENTROID_OUTLIER_ORACLE)
 def sim_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-outlier pruning gate
     (operators/similarity.py:centroid_distance_outliers): the 20 vectors
@@ -462,7 +453,7 @@ ORDER BY vec_id
 """
 
 
-@register("sim_kmeans_clusters", oracle=KMEANS_ORACLE, tags=("llm", "similarity", "iterative"))
+@register("sim_kmeans_clusters", oracle=KMEANS_ORACLE)
 def sim_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard cluster assignments after 2 deterministic Lloyd rounds (k=4)."""
     from ..operators.clustering import kmeans_lloyd
@@ -490,7 +481,7 @@ ORDER BY vec_id
 """
 
 
-@register("emb_unit_normalize", oracle=UNIT_ORACLE, tags=("llm", "similarity", "vector"))
+@register("emb_unit_normalize", oracle=UNIT_ORACLE)
 def emb_unit_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2-unit normalization (cosine-ready vectors; functions/vectors.py:
     unit_normalize is the array-returning library form). The query encodes
@@ -531,7 +522,7 @@ ORDER BY vec_id
 """
 
 
-@register("emb_quantize_int8", oracle=QUANT_ORACLE, tags=("llm", "similarity", "vector"))
+@register("emb_quantize_int8", oracle=QUANT_ORACLE)
 def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric int8 quantization (4x memory cut for ANN serving);
     floor(x+0.5) keeps the codes bit-identical across engines. Codes are
@@ -559,7 +550,7 @@ ORDER BY d
 """
 
 
-@register("emb_dimension_stats", oracle=DIMSTATS_ORACLE, tags=("llm", "similarity", "vector", "agg"))
+@register("emb_dimension_stats", oracle=DIMSTATS_ORACLE)
 def emb_dimension_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-dimension corpus mean/variance (whitening / feature-scaling
     profile): posexplode → one keyed map-side-combined aggregate."""
@@ -636,7 +627,7 @@ LIMIT 10
 """
 
 
-@register("sim_pq_adc_topk", oracle=PQ_ADC_ORACLE, tags=("llm", "similarity", "pq"))
+@register("sim_pq_adc_topk", oracle=PQ_ADC_ORACLE)
 def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN: train 4×8 codebooks (one Lloyd round, on
     the deterministic 1/4 sample — PQ trains on a sample, encodes the full
@@ -677,7 +668,7 @@ FROM pairs GROUP BY i, j ORDER BY i, j
 """
 
 
-@register("emb_covariance_matrix", oracle=COV_ORACLE, tags=("llm", "embedding"))
+@register("emb_covariance_matrix", oracle=COV_ORACLE)
 def emb_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import covariance_sums
 
@@ -721,9 +712,7 @@ ORDER BY vec_id, rnk
 """
 
 
-@register(
-    "sim_knn_graph_cells", oracle=KNN_GRAPH_ORACLE, tags=("llm", "similarity", "knn")
-)
+@register("sim_knn_graph_cells", oracle=KNN_GRAPH_ORACLE)
 def sim_knn_graph_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-cell GEMM top-k (operators/similarity.blocked_knn, round 4):
     # identical rounded cosines + (sim DESC, nb) tie order to the previous
@@ -840,11 +829,7 @@ FROM v{_PI_ITERS} CROSS JOIN pi_lam ORDER BY i
 """
 
 
-@register(
-    "emb_pca_power_iteration",
-    oracle=PCA_POWER_ORACLE,
-    tags=("llm", "embedding", "iterative"),
-)
+@register("emb_pca_power_iteration", oracle=PCA_POWER_ORACLE)
 def emb_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import covariance_sums
 
@@ -953,7 +938,7 @@ def _rank_candidates(cand: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-@register("sim_rrf_hybrid_fusion", oracle=RRF_ORACLE, tags=("llm", "similarity"))
+@register("sim_rrf_hybrid_fusion", oracle=RRF_ORACLE)
 def sim_rrf_hybrid_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vectors import cosine_similarity
 
@@ -990,8 +975,8 @@ def sim_rrf_hybrid_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("s").desc(), "doc_id")
         .limit(_RRF_TOPK)
     )
-    ra = _rank_candidates(dense.localCheckpoint(eager=False), "vec_id")
-    rb = _rank_candidates(sparse.localCheckpoint(eager=False), "doc_id")
+    ra = _rank_candidates(materialize(dense), "vec_id")
+    rb = _rank_candidates(materialize(sparse), "doc_id")
     fused = (
         ra.join(rb, ra["vec_id"] == rb["doc_id"], "full_outer")
         .select(
@@ -1039,11 +1024,7 @@ FROM per_k GROUP BY k_dims ORDER BY k_dims
 """
 
 
-@register(
-    "emb_matryoshka_distortion",
-    oracle=MATRYOSHKA_ORACLE,
-    tags=("llm", "embedding"),
-)
+@register("emb_matryoshka_distortion", oracle=MATRYOSHKA_ORACLE)
 def emb_matryoshka_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vectors import cosine_similarity
 
@@ -1153,9 +1134,7 @@ GROUP BY exact.qid ORDER BY exact.qid
 """
 
 
-@register(
-    "sim_ann_recall_audit", oracle=RECALL_ORACLE, tags=("llm", "similarity", "ivf")
-)
+@register("sim_ann_recall_audit", oracle=RECALL_ORACLE)
 def sim_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -1277,9 +1256,7 @@ ORDER BY e.vec_id
 """
 
 
-@register(
-    "sim_dbscan_cells", oracle=DBSCAN_ORACLE, tags=("llm", "clustering", "graph")
-)
+@register("sim_dbscan_cells", oracle=DBSCAN_ORACLE)
 def sim_dbscan_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import density_clusters
 
@@ -1366,11 +1343,7 @@ ORDER BY e.vec_id
 """
 
 
-@register(
-    "sim_dbscan_capped",
-    oracle=DBSCAN_CAPPED_ORACLE,
-    tags=("llm", "clustering", "graph"),
-)
+@register("sim_dbscan_capped", oracle=DBSCAN_CAPPED_ORACLE)
 def sim_dbscan_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import density_clusters_capped
 
@@ -1452,18 +1425,16 @@ ORDER BY grain
 """
 
 
-@register(
-    "sim_dbscan_capped_counts",
-    oracle=DBSCAN_COUNTS_ORACLE,
-    tags=("llm", "clustering", "graph", "audit"),
-)
+@register("sim_dbscan_capped_counts", oracle=DBSCAN_COUNTS_ORACLE)
 def sim_dbscan_capped_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import density_clusters_capped
 
     emb = load_table(spark, sf_dir, "embeddings")
-    assign = density_clusters_capped(
-        emb, eps_cosine=_DB_EPS, min_pts=_DB_MINPTS, k_max=_DB_KMAX
-    ).localCheckpoint(eager=False)  # role + size grains
+    assign = materialize(
+        density_clusters_capped(
+            emb, eps_cosine=_DB_EPS, min_pts=_DB_MINPTS, k_max=_DB_KMAX
+        )
+    )  # role + size grains
     role_grain = assign.groupBy(
         F.concat(F.lit("role:"), F.col("role")).alias("grain")
     ).agg(
@@ -1535,11 +1506,7 @@ ORDER BY pos.anchor
 """
 
 
-@register(
-    "emb_hard_negative_mining",
-    oracle=HARDNEG_ORACLE,
-    tags=("llm", "embedding", "curation"),
-)
+@register("emb_hard_negative_mining", oracle=HARDNEG_ORACLE)
 def emb_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -1551,7 +1518,7 @@ def emb_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("a_label"),
         F.col("embedding").cast("array<double>").alias("qv"),
     )
-    scored = (
+    scored = materialize(
         emb.select(
             "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
         )
@@ -1564,8 +1531,7 @@ def emb_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             F.round(cosine_similarity("v", "qv"), 6).alias("c"),
         )
-        .localCheckpoint(eager=False)  # pos + neg branches share the scan
-    )
+    )  # pos + neg branches share the scan
     wq = W.partitionBy("anchor").orderBy(F.col("c").desc(), "vec_id")
 
     def top1(df, out_id, out_sim):
@@ -1635,9 +1601,7 @@ FROM wide ORDER BY dim
 """
 
 
-@register(
-    "emb_dimension_drift", oracle=EMB_DRIFT_ORACLE, tags=("llm", "embedding", "drift")
-)
+@register("emb_dimension_drift", oracle=EMB_DRIFT_ORACLE)
 def emb_dimension_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     x = emb.select(
@@ -1708,9 +1672,7 @@ FROM ranked WHERE rnk <= {_REFINE_K} ORDER BY rnk
 )
 
 
-@register(
-    "sim_pq_refine_rerank", oracle=PQ_REFINE_ORACLE, tags=("llm", "similarity", "pq")
-)
+@register("sim_pq_refine_rerank", oracle=PQ_REFINE_ORACLE)
 def sim_pq_refine_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -1722,9 +1684,7 @@ def sim_pq_refine_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # semi-join AND the final join — materialize the ≤_REFINE_SHORT rows
     # so the PQ train/encode/ADC pipeline runs once, not twice (12 parquet
     # scans in the before-plan)
-    short = pq_adc_topk(emb, query, k=_REFINE_SHORT, train_mod=4).localCheckpoint(
-        eager=False
-    )
+    short = materialize(pq_adc_topk(emb, query, k=_REFINE_SHORT, train_mod=4))
     qv = F.broadcast(
         query.select(F.col("embedding").cast("array<double>").alias("qv"))
     )
@@ -1779,14 +1739,12 @@ FROM recon GROUP BY sub ORDER BY sub
 )
 
 
-@register(
-    "sim_pq_error_audit", oracle=PQ_ERROR_ORACLE, tags=("llm", "similarity", "pq")
-)
+@register("sim_pq_error_audit", oracle=PQ_ERROR_ORACLE)
 def sim_pq_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import _sub_dims, pq_codebooks, pq_encode
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cb = pq_codebooks(emb, train_mod=4).localCheckpoint(eager=False)
+    cb = materialize(pq_codebooks(emb, train_mod=4))
     enc = pq_encode(emb, cb)
     dims = _sub_dims(emb, "embedding", "vec_id", 16)
     recon = (
@@ -1830,9 +1788,7 @@ FROM c
 """
 
 
-@register(
-    "sim_ivf_cell_balance", oracle=IVF_BALANCE_ORACLE, tags=("llm", "similarity", "ivf")
-)
+@register("sim_ivf_cell_balance", oracle=IVF_BALANCE_ORACLE)
 def sim_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     c = emb.groupBy("label").agg(F.count(F.lit(1)).alias("sz"))
@@ -1884,11 +1840,7 @@ FROM assign GROUP BY label ORDER BY label
 """
 
 
-@register(
-    "sim_centroid_classifier_audit",
-    oracle=CENTROID_CLS_ORACLE,
-    tags=("llm", "similarity", "ivf"),
-)
+@register("sim_centroid_classifier_audit", oracle=CENTROID_CLS_ORACLE)
 def sim_centroid_classifier_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -1958,11 +1910,7 @@ FROM pairs
 """
 
 
-@register(
-    "emb_random_projection_distortion",
-    oracle=RP_ORACLE,
-    tags=("llm", "embedding"),
-)
+@register("emb_random_projection_distortion", oracle=RP_ORACLE)
 def emb_random_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vectors import cosine_similarity, dot
 
@@ -2017,9 +1965,7 @@ FROM h GROUP BY label ORDER BY label
 """
 
 
-@register(
-    "emb_exact_duplicates", oracle=EMB_EXACT_DUP_ORACLE, tags=("llm", "embedding", "dedup")
-)
+@register("emb_exact_duplicates", oracle=EMB_EXACT_DUP_ORACLE)
 def emb_exact_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     eh = F.md5(
@@ -2104,18 +2050,16 @@ ORDER BY l.vec_id
 """
 
 
-@register(
-    "sim_lof_outliers", oracle=LOF_ORACLE, tags=("llm", "similarity", "outlier")
-)
+@register("sim_lof_outliers", oracle=LOF_ORACLE)
 def sim_lof_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import blocked_knn
 
     emb = load_table(spark, sf_dir, "embeddings")
-    knn = blocked_knn(emb, k=_KNN_K).localCheckpoint(eager=False)
+    knn = materialize(blocked_knn(emb, k=_KNN_K))
     kd = knn.filter(F.col("rnk") == _KNN_K).select(
         "vec_id", (F.lit(1.0) - F.col("cosine_sim")).alias("k_dist")
     )
-    kd = kd.localCheckpoint(eager=False)  # feeds reach + final join
+    kd = materialize(kd)  # feeds reach + final join
     reach = knn.join(
         kd.select(F.col("vec_id").alias("nb"), F.col("k_dist").alias("kd_nb")),
         "nb",
@@ -2135,7 +2079,7 @@ def sim_lof_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    lrd = lrd.localCheckpoint(eager=False)  # neighbour + self branches
+    lrd = materialize(lrd)  # neighbour + self branches
     lof = (
         knn.join(
             lrd.select(F.col("vec_id").alias("nb"), F.col("lrd").alias("lrd_nb")),
@@ -2228,11 +2172,7 @@ ORDER BY vec_a
 """
 
 
-@register(
-    "sim_margin_alignment_mining",
-    oracle=MARGIN_MINE_ORACLE,
-    tags=("llm", "similarity", "mining"),
-)
+@register("sim_margin_alignment_mining", oracle=MARGIN_MINE_ORACLE)
 def sim_margin_alignment_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import bipartite_margin_pairs
 
@@ -2284,7 +2224,7 @@ def _margin_mining_crossjoin_twin(spark: SparkSession, sf_dir: str) -> DataFrame
             6,
         ).alias("c"),
     )
-    pairs = pairs.localCheckpoint(eager=False)  # ka/kb/margin branches
+    pairs = materialize(pairs)  # ka/kb/margin branches
     wa = W.partitionBy("xa").orderBy(F.col("c").desc(), "xb")
     wb = W.partitionBy("xb").orderBy(F.col("c").desc(), "xa")
     ka = (
@@ -2312,7 +2252,7 @@ def _margin_mining_crossjoin_twin(spark: SparkSession, sf_dir: str) -> DataFrame
             .alias("margin"),
         )
     )
-    m = m.localCheckpoint(eager=False)  # fwd/bwd/output branches
+    m = materialize(m)  # fwd/bwd/output branches
     wfa = W.partitionBy("xa").orderBy(F.col("margin").desc(), "xb")
     wfb = W.partitionBy("xb").orderBy(F.col("margin").desc(), "xa")
     fwd = m.withColumn("r", F.row_number().over(wfa)).where(F.col("r") == 1).select("xa", "xb")
@@ -2366,11 +2306,7 @@ ORDER BY doc_id
 """
 
 
-@register(
-    "multimodal_bmp_decode",
-    oracle=BMP_DECODE_ORACLE,
-    tags=("llm", "multimodal", "udf"),
-)
+@register("multimodal_bmp_decode", oracle=BMP_DECODE_ORACLE)
 def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
@@ -2439,11 +2375,7 @@ ORDER BY doc_id
 """
 
 
-@register(
-    "multimodal_png_decode",
-    oracle=PNG_DECODE_ORACLE,
-    tags=("llm", "multimodal", "udf"),
-)
+@register("multimodal_png_decode", oracle=PNG_DECODE_ORACLE)
 def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
@@ -2508,11 +2440,7 @@ ORDER BY doc_id
 """
 
 
-@register(
-    "multimodal_gif_decode",
-    oracle=GIF_DECODE_ORACLE,
-    tags=("llm", "multimodal", "udf"),
-)
+@register("multimodal_gif_decode", oracle=GIF_DECODE_ORACLE)
 def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
@@ -2600,11 +2528,7 @@ ORDER BY doc_id
 """
 
 
-@register(
-    "multimodal_jpeg_decode",
-    oracle=JPEG_DECODE_ORACLE,
-    tags=("llm", "multimodal", "udf"),
-)
+@register("multimodal_jpeg_decode", oracle=JPEG_DECODE_ORACLE)
 def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
@@ -2684,11 +2608,7 @@ ORDER BY doc_id
 """
 
 
-@register(
-    "multimodal_wav_decode",
-    oracle=WAV_DECODE_ORACLE,
-    tags=("llm", "multimodal", "udf"),
-)
+@register("multimodal_wav_decode", oracle=WAV_DECODE_ORACLE)
 def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
@@ -2763,11 +2683,7 @@ ORDER BY doc_id, frame_idx
 """
 
 
-@register(
-    "multimodal_animated_gif_shots",
-    oracle=ANIMATED_GIF_SHOTS_ORACLE,
-    tags=("llm", "multimodal", "udf"),
-)
+@register("multimodal_animated_gif_shots", oracle=ANIMATED_GIF_SHOTS_ORACLE)
 def multimodal_animated_gif_shots(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
@@ -3079,11 +2995,7 @@ def _triage_row(did: int, data: bytes) -> tuple[int, str, str, float]:
 _TRIAGE_OUT_SCHEMA = "doc_id long, media_kind string, codec string, metric double"
 
 
-@register(
-    "multimodal_media_triage",
-    oracle=MEDIA_TRIAGE_ORACLE,
-    tags=("llm", "multimodal", "udf"),
-)
+@register("multimodal_media_triage", oracle=MEDIA_TRIAGE_ORACLE)
 def multimodal_media_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
@@ -3169,11 +3081,7 @@ _WARC_TRIAGE_ORACLE = (
 ).replace("{PDF_LINE}", _PDF_LINE_SQL)
 
 
-@register(
-    "pipeline_warc_media_triage",
-    oracle=_WARC_TRIAGE_ORACLE,
-    tags=("llm", "multimodal", "pipeline", "warc", "udf"),
-)
+@register("pipeline_warc_media_triage", oracle=_WARC_TRIAGE_ORACLE)
 def pipeline_warc_media_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
@@ -3327,11 +3235,7 @@ ORDER BY media_kind, codec, bucket
 """.replace("{PDF_LINE}", _PDF_LINE_SQL)
 
 
-@register(
-    "pipeline_warc_triage_scaled",
-    oracle=_WARC_SCALED_ORACLE,
-    tags=("llm", "multimodal", "pipeline", "warc", "udf"),
-)
+@register("pipeline_warc_triage_scaled", oracle=_WARC_SCALED_ORACLE)
 def pipeline_warc_triage_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
@@ -3540,11 +3444,7 @@ ORDER BY key_a, key_b
 """
 
 
-@register(
-    "multimodal_cross_format_dedup",
-    oracle=CROSS_FORMAT_ORACLE,
-    tags=("llm", "multimodal", "dedup", "udf"),
-)
+@register("multimodal_cross_format_dedup", oracle=CROSS_FORMAT_ORACLE)
 def multimodal_cross_format_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
@@ -3577,7 +3477,7 @@ def multimodal_cross_format_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
 
     payloads = docs.select("doc_id").mapInPandas(gen, "key long, media_bytes binary")
     ah = M.image_ahash64(payloads, key_col="key")
-    ah = ah.localCheckpoint(eager=False)  # banding + two verify joins
+    ah = materialize(ah)  # banding + two verify joins
     banded = ah.select(
         "key",
         F.explode(
@@ -3697,11 +3597,7 @@ ORDER BY doc_id
 """
 
 
-@register(
-    "multimodal_g711_roundtrip",
-    oracle=G711_ORACLE,
-    tags=("llm", "multimodal", "udf"),
-)
+@register("multimodal_g711_roundtrip", oracle=G711_ORACLE)
 def multimodal_g711_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
@@ -3819,11 +3715,7 @@ ORDER BY doc_id
 """
 
 
-@register(
-    "multimodal_adpcm_roundtrip",
-    oracle=ADPCM_ORACLE,
-    tags=("llm", "multimodal", "udf"),
-)
+@register("multimodal_adpcm_roundtrip", oracle=ADPCM_ORACLE)
 def multimodal_adpcm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
@@ -3906,11 +3798,7 @@ ORDER BY f.vec_id, f.nb
 """
 
 
-@register(
-    "sim_mutual_knn_pairs",
-    oracle=MUTUAL_KNN_ORACLE,
-    tags=("llm", "similarity", "knn"),
-)
+@register("sim_mutual_knn_pairs", oracle=MUTUAL_KNN_ORACLE)
 def sim_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import blocked_knn
 
@@ -3918,9 +3806,11 @@ def sim_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11 opt (guide §1.2 #1): the kNN table feeds both join sides of the
     # mutuality check — materialize the (n·k)-row result so the blocked
     # GEMM pipeline runs once, not twice
-    knn = blocked_knn(emb, k=_KNN_K).select(
-        "vec_id", "nb", "label", "cosine_sim", F.col("rnk").cast("int").alias("rnk")
-    ).localCheckpoint(eager=False)
+    knn = materialize(
+        blocked_knn(emb, k=_KNN_K).select(
+            "vec_id", "nb", "label", "cosine_sim", F.col("rnk").cast("int").alias("rnk")
+        )
+    )
     fwd = knn.select(
         F.col("vec_id").alias("vec_a"),
         F.col("nb").alias("vec_b"),
@@ -4007,11 +3897,7 @@ ORDER BY key_a, key_b
 """
 
 
-@register(
-    "multimodal_image_phash_dedup",
-    oracle=IMAGE_PHASH_ORACLE,
-    tags=("llm", "multimodal", "dedup", "udf"),
-)
+@register("multimodal_image_phash_dedup", oracle=IMAGE_PHASH_ORACLE)
 def multimodal_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator as _Iter
 
@@ -4042,7 +3928,7 @@ def multimodal_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bmps = docs.select("doc_id").mapInPandas(gen, "doc_id long, media_bytes binary")
     ah = M.bmp_ahash64(bmps)
-    ah = ah.localCheckpoint(eager=False)  # banding + two verify joins
+    ah = materialize(ah)  # banding + two verify joins
     banded = ah.select(
         "doc_id",
         F.explode(
@@ -4124,11 +4010,7 @@ ORDER BY vec_id
 """
 
 
-@register(
-    "dedup_semdedup_clusters",
-    oracle=SEMDEDUP_ORACLE,
-    tags=("llm", "dedup", "similarity", "iterative"),
-)
+@register("dedup_semdedup_clusters", oracle=SEMDEDUP_ORACLE)
 def dedup_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import kmeans_lloyd
     from ..operators.similarity import blocked_cosine_pairs
@@ -4201,11 +4083,7 @@ ORDER BY agg.doc_id
 """
 
 
-@register(
-    "multimodal_wav_spectral",
-    oracle=WAV_SPECTRAL_ORACLE,
-    tags=("llm", "multimodal", "udf"),
-)
+@register("multimodal_wav_spectral", oracle=WAV_SPECTRAL_ORACLE)
 def multimodal_wav_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator as _Iter
 
@@ -4274,9 +4152,7 @@ FROM mean_norm CROSS JOIN avg_norm CROSS JOIN pairs
 """
 
 
-@register(
-    "emb_isotropy_audit", oracle=ISOTROPY_ORACLE, tags=("llm", "similarity", "audit")
-)
+@register("emb_isotropy_audit", oracle=ISOTROPY_ORACLE)
 def emb_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vectors import cosine_similarity
 
@@ -4285,7 +4161,7 @@ def emb_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.posexplode(F.col("embedding").cast("array<double>")).alias("d", "x"),
     )
-    dims = dims.localCheckpoint(eager=False)  # dstats + vnorms branches
+    dims = materialize(dims)  # dstats + vnorms branches
     dstats = dims.groupBy("d").agg(
         F.avg("x").alias("mu"), F.var_samp("x").alias("v")
     )
@@ -4374,11 +4250,7 @@ ORDER BY doc_id, frame_idx
 """
 
 
-@register(
-    "multimodal_video_shot_boundaries",
-    oracle=VIDEO_SHOTS_ORACLE,
-    tags=("llm", "multimodal", "udf"),
-)
+@register("multimodal_video_shot_boundaries", oracle=VIDEO_SHOTS_ORACLE)
 def multimodal_video_shot_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator as _Iter
 

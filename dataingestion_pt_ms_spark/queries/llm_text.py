@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators import text as T
+from ..session import materialize
 from . import register
 from ._ducktwins import DSHINGLES, DTOKS
 
@@ -28,7 +29,7 @@ FROM documents
 """
 
 
-@register("text_token_stats", oracle=TOKEN_STATS_ORACLE, tags=("llm", "text"))
+@register("text_token_stats", oracle=TOKEN_STATS_ORACLE)
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     return T.token_stats(docs).drop("text")
@@ -42,7 +43,7 @@ ORDER BY tf DESC, token
 """
 
 
-@register("text_term_frequency", oracle=TF_ORACLE, tags=("llm", "text", "agg"))
+@register("text_term_frequency", oracle=TF_ORACLE)
 def text_term_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return T.term_frequency(docs).orderBy(F.col("tf").desc(), "token")
@@ -60,7 +61,7 @@ FROM documents
 """
 
 
-@register("text_language_id", oracle=LANGID_ORACLE, tags=("llm", "text"))
+@register("text_language_id", oracle=LANGID_ORACLE)
 def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     out = T.language_id(docs)
@@ -92,7 +93,7 @@ FROM q
 """
 
 
-@register("text_quality_score", oracle=QUALITY_ORACLE, tags=("llm", "text"))
+@register("text_quality_score", oracle=QUALITY_ORACLE)
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     return T.quality_score(docs).drop("text")
@@ -105,7 +106,7 @@ FROM documents
 """
 
 
-@register("text_fingerprint", oracle=FP_ORACLE, tags=("llm", "text", "dedup"))
+@register("text_fingerprint", oracle=FP_ORACLE)
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return T.fingerprint(docs).drop("text")
@@ -121,7 +122,7 @@ FROM documents
 """
 
 
-@register("text_token_counts", oracle=TOKCOUNT_ORACLE, tags=("llm", "text"))
+@register("text_token_counts", oracle=TOKCOUNT_ORACLE)
 def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return T.token_count_estimates(docs).drop("text")
@@ -137,7 +138,7 @@ FROM documents
 """
 
 
-@register("text_rolling_hash_fingerprint", oracle=ROLLING_HASH_ORACLE, tags=("llm", "text", "dedup"))
+@register("text_rolling_hash_fingerprint", oracle=ROLLING_HASH_ORACLE)
 def text_rolling_hash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-sensitive polynomial rolling-hash fingerprint per document
     (operators/text.py:rolling_hash). Per-token hash is an md5 prefix, so the
@@ -166,7 +167,7 @@ SELECT doc_id, token, tf, df, tf_idf, rk FROM ranked WHERE rk <= 5
 """
 
 
-@register("text_tf_idf_topk", oracle=TFIDF_ORACLE, tags=("llm", "text", "agg", "window"))
+@register("text_tf_idf_topk", oracle=TFIDF_ORACLE)
 def text_tf_idf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 characteristic tokens per document by TF-IDF."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -187,7 +188,7 @@ FROM c
 """
 
 
-@register("text_chunk_documents", oracle=CHUNK_ORACLE, tags=("llm", "text", "explode"))
+@register("text_chunk_documents", oracle=CHUNK_ORACLE)
 def text_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed 50-token chunking — the packing step ahead of tokenization."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -201,7 +202,7 @@ WHERE n_chars > (SELECT quantile_cont(n_chars, 0.75) FROM documents)
 """
 
 
-@register("text_quantile_filter", oracle=QUANTILE_ORACLE, tags=("llm", "text", "scalar-subquery"))
+@register("text_quantile_filter", oracle=QUANTILE_ORACLE)
 def text_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Docs above the corpus p75 length — distribution-relative quality gate."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
@@ -220,11 +221,7 @@ WHERE n_chars > (SELECT quantile_disc(n_chars, 0.75) FROM documents)
 """
 
 
-@register(
-    "text_quantile_filter_approx",
-    oracle=QUANTILE_APPROX_ORACLE,
-    tags=("llm", "text", "approx", "scalar-subquery"),
-)
+@register("text_quantile_filter_approx", oracle=QUANTILE_APPROX_ORACLE)
 def text_quantile_filter_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB quality gate: one-pass mergeable quantile sketch instead
     of the exact sort-based percentile (operators/text.py:quantile_filter_approx)."""
@@ -265,7 +262,7 @@ GROUP BY page_id
 """
 
 
-@register("text_line_dedup_boilerplate", oracle=LINE_DEDUP_ORACLE, tags=("llm", "text", "dedup"))
+@register("text_line_dedup_boilerplate", oracle=LINE_DEDUP_ORACLE)
 def text_line_dedup_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level duplicated-line removal (CCNet/RefinedWeb boilerplate
     filter, operators/text.py:line_dedup) over deterministically
@@ -312,7 +309,7 @@ GROUP BY doc_id
 """
 
 
-@register("text_duplicate_ngram_fraction", oracle=DUP_NGRAM_ORACLE, tags=("llm", "text", "quality"))
+@register("text_duplicate_ngram_fraction", oracle=DUP_NGRAM_ORACLE)
 def text_duplicate_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition signal: fraction of each doc's bigram
     occurrences belonging to bigrams repeated within the doc."""
@@ -332,7 +329,7 @@ FROM documents
 """
 
 
-@register("text_redact_tokens", oracle=REDACT_ORACLE, tags=("llm", "text", "regex"))
+@register("text_redact_tokens", oracle=REDACT_ORACLE)
 def text_redact_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII-style scrubbing: digit-bearing tokens -> <NUM>, overlong -> <LONG>."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -365,7 +362,7 @@ WHERE d.doc_id >= 20
 """
 
 
-@register("text_contamination_check", oracle=CONTAMINATION_ORACLE, tags=("llm", "text", "broadcast"))
+@register("text_contamination_check", oracle=CONTAMINATION_ORACLE)
 def text_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle overlap of each corpus doc (doc_id >= 20) against the
     'benchmark' set (doc_id < 20) — eval-decontamination."""
@@ -393,7 +390,7 @@ SELECT * FROM top
 """
 
 
-@register("text_repetition_score", oracle=REPETITION_ORACLE, tags=("llm", "text", "window"))
+@register("text_repetition_score", oracle=REPETITION_ORACLE)
 def text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-token share per doc — boilerplate/degenerate-text filter."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -421,7 +418,7 @@ WINDOW w AS (PARTITION BY lang ORDER BY doc_id, chunk_idx
 """
 
 
-@register("text_pack_sequences", oracle=PACK_ORACLE, tags=("llm", "text", "window"))
+@register("text_pack_sequences", oracle=PACK_ORACLE)
 def text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """50-token chunks packed into 512-token training context windows,
     one token stream per language shard."""
@@ -449,7 +446,7 @@ FROM per, tot
 """
 
 
-@register("sample_language_mix_weights", oracle=MIX_ORACLE, tags=("llm", "sample", "agg"))
+@register("sample_language_mix_weights", oracle=MIX_ORACLE)
 def sample_language_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language token share and the resampling weight that flattens the
     mix to uniform — the data-mixing calculation before weighted sampling."""
@@ -486,7 +483,7 @@ FROM documents"""
 )
 
 
-@register("profile_documents_columns", oracle=PROFILE_ORACLE, tags=("llm", "profile", "agg"))
+@register("profile_documents_columns", oracle=PROFILE_ORACLE)
 def profile_documents_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-column data-profiling summary (nulls, cardinality, min/max) — the
     corpus health report. One aggregate pass computes every column's stats;
@@ -523,7 +520,7 @@ def profile_documents_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("p.*")
 
 
-@register("sample_stratified_by_lang", oracle=None, tags=("llm", "sample"))
+@register("sample_stratified_by_lang", oracle=None)
 def sample_stratified_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded per-stratum Bernoulli sampling (lang-balanced downsampling —
     the data-mixing step of corpus curation). Engine-specific RNG ->
@@ -580,7 +577,7 @@ ORDER BY source, pack_id
 """
 
 
-@register("pipeline_pretrain_corpus", oracle=PIPELINE_ORACLE, tags=("llm", "text", "pipeline"))
+@register("pipeline_pretrain_corpus", oracle=PIPELINE_ORACLE)
 def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship LLM-data composition: every curation stage chained as one
     lazy plan (language gate -> quality gate -> exact dedup -> chunk -> pack
@@ -636,7 +633,7 @@ ORDER BY doc_id
 """
 
 
-@register("text_unigram_logprob", oracle=UNIGRAM_ORACLE, tags=("llm", "text", "quality"))
+@register("text_unigram_logprob", oracle=UNIGRAM_ORACLE)
 def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-trained unigram-LM negative-log-likelihood per document —
     the relational core of the CCNet perplexity quality filter."""
@@ -675,7 +672,7 @@ ORDER BY g.doc_id
 """
 
 
-@register("text_cross_doc_spans", oracle=CROSS_SPANS_ORACLE, tags=("llm", "text", "dedup"))
+@register("text_cross_doc_spans", oracle=CROSS_SPANS_ORACLE)
 def text_cross_doc_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document repeated-span fraction vs the rest of the corpus
     (exact-substring dedup statistic, 5-token spans)."""
@@ -708,7 +705,7 @@ ORDER BY token
 """
 
 
-@register("text_inverted_index", oracle=INVERTED_ORACLE, tags=("llm", "text", "agg"))
+@register("text_inverted_index", oracle=INVERTED_ORACLE)
 def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     from ..functions.textfns import tokens
@@ -761,9 +758,7 @@ ORDER BY lang
 """
 
 
-@register(
-    "sample_temperature_mix_weights", oracle=TEMP_MIX_ORACLE, tags=("llm", "sample", "agg")
-)
+@register("sample_temperature_mix_weights", oracle=TEMP_MIX_ORACLE)
 def sample_temperature_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     from ..functions.textfns import tokens
@@ -815,7 +810,7 @@ ORDER BY cnt DESC, pair LIMIT {_BPE_TOPK}
 """
 
 
-@register("text_bpe_pair_counts", oracle=BPE_ORACLE, tags=("llm", "tokenize"))
+@register("text_bpe_pair_counts", oracle=BPE_ORACLE)
 def text_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.textfns import tokens
 
@@ -884,7 +879,7 @@ ORDER BY t.doc_id
 """
 
 
-@register("text_encode_token_ids", oracle=ENCODE_ORACLE, tags=("llm", "tokenize"))
+@register("text_encode_token_ids", oracle=ENCODE_ORACLE)
 def text_encode_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -945,7 +940,7 @@ LIMIT 300
 """
 
 
-@register("text_pmi_cooccurrence", oracle=PMI_COOC_ORACLE, tags=("llm", "text", "agg"))
+@register("text_pmi_cooccurrence", oracle=PMI_COOC_ORACLE)
 def text_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Windowed (k=3) token co-occurrence counts + PMI scores — the
     word2vec / collocation-mining statistic. Pair generation is a map-side
@@ -990,17 +985,13 @@ ORDER BY doc_id
 """
 
 
-@register(
-    "text_ccnet_ppl_buckets", oracle=CCNET_BUCKETS_ORACLE, tags=("llm", "text", "quality")
-)
+@register("text_ccnet_ppl_buckets", oracle=CCNET_BUCKETS_ORACLE)
 def text_ccnet_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # r11 opt (guide §1.2 #1): the per-doc NLL table feeds the tertile
     # aggregate AND the final bucket projection — materialize so the
     # unigram-LM pipeline runs once, not twice
-    pp = T.unigram_logprob(docs).select("doc_id", "nll").localCheckpoint(
-        eager=False
-    )
+    pp = materialize(T.unigram_logprob(docs).select("doc_id", "nll"))
     th = pp.agg(
         F.percentile("nll", F.lit(1.0 / 3)).alias("t1"),
         F.percentile("nll", F.lit(2.0 / 3)).alias("t2"),
@@ -1054,7 +1045,7 @@ ORDER BY c_custkey
 """
 
 
-@register("text_pii_redact_scan", oracle=PII_REDACT_ORACLE, tags=("llm", "text", "pii"))
+@register("text_pii_redact_scan", oracle=PII_REDACT_ORACLE)
 def text_pii_redact_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     contact = F.concat(
@@ -1101,9 +1092,7 @@ ORDER BY doc_id, bucket
 """
 
 
-@register(
-    "text_feature_hashing", oracle=FEATURE_HASH_ORACLE, tags=("llm", "text", "ml-prep")
-)
+@register("text_feature_hashing", oracle=FEATURE_HASH_ORACLE)
 def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     from ..operators.text import tokens as _toks
@@ -1151,7 +1140,7 @@ FROM ranked GROUP BY source ORDER BY source
 """
 
 
-@register("text_zipf_slope", oracle=ZIPF_ORACLE, tags=("llm", "text", "stats"))
+@register("text_zipf_slope", oracle=ZIPF_ORACLE)
 def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -1213,11 +1202,7 @@ ORDER BY doc_id, chunk_id
 """
 
 
-@register(
-    "text_chunk_overlapping",
-    oracle=OVERLAP_CHUNK_ORACLE,
-    tags=("llm", "text", "chunk"),
-)
+@register("text_chunk_overlapping", oracle=OVERLAP_CHUNK_ORACLE)
 def text_chunk_overlapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.textfns import tokens
 
@@ -1290,7 +1275,7 @@ ORDER BY tri.doc_id
 """
 
 
-@register("text_ngram_novelty", oracle=NOVELTY_ORACLE, tags=("llm", "text", "curation"))
+@register("text_ngram_novelty", oracle=NOVELTY_ORACLE)
 def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -1299,7 +1284,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     wd = W.partitionBy("doc_id").orderBy("_pos")
     l1, l2 = F.lead("_t", 1).over(wd), F.lead("_t", 2).over(wd)
-    tri = (
+    tri = materialize(
         docs.select("doc_id", F.posexplode(tokens(F.col("text"))).alias("_pos", "_t"))
         .select(
             "doc_id",
@@ -1309,8 +1294,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("_g").isNotNull())
         .drop("_g")
         .distinct()
-        .localCheckpoint(eager=False)  # first-seen + join-back branches
-    )
+    )  # first-seen + join-back branches
     first_seen = tri.groupBy("sh").agg(F.min("doc_id").alias("first_doc"))
     novel = F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0)
     return (
@@ -1376,15 +1360,15 @@ LIMIT {_BM25_TOPK}
 """
 
 
-@register("text_bm25_topk", oracle=BM25_ORACLE, tags=("llm", "text", "retrieval"))
+@register("text_bm25_topk", oracle=BM25_ORACLE)
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.textfns import tokens
 
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("t"))
-    tok = tok.localCheckpoint(eager=False)  # dl + tf branches
+    tok = materialize(tok)  # dl + tf branches
     dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).cast("double").alias("dlen"))
-    dl = dl.localCheckpoint(eager=False)  # avgdl + join-back
+    dl = materialize(dl)  # avgdl + join-back
     n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n"))
     avgdl = dl.agg(F.avg("dlen").alias("avgdl"))
     stats = F.broadcast(n_docs.crossJoin(avgdl))
@@ -1393,7 +1377,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "t")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
     )
-    tf = tf.localCheckpoint(eager=False)  # df + scoring branches
+    tf = materialize(tf)  # df + scoring branches
     df = tf.groupBy("t").agg(F.count(F.lit(1)).cast("double").alias("df"))
     idf = F.log(1.0 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
     denom = F.col("tf") + _BM25_K1 * (
@@ -1435,7 +1419,7 @@ ORDER BY a.doc_id
 """
 
 
-@register("text_phrase_search", oracle=PHRASE_ORACLE, tags=("llm", "text", "retrieval"))
+@register("text_phrase_search", oracle=PHRASE_ORACLE)
 def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.textfns import tokens
 
@@ -1443,7 +1427,7 @@ def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id", F.posexplode(tokens(F.col("text"))).alias("pos0", "t")
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "t")
-    tok = tok.localCheckpoint(eager=False)  # both term postings
+    tok = materialize(tok)  # both term postings
     a = tok.where(F.col("t") == _PHRASE[0]).select("doc_id", "pos")
     b = tok.where(F.col("t") == _PHRASE[1]).select(
         "doc_id", (F.col("pos") - 1).alias("pos")
@@ -1513,9 +1497,7 @@ FROM best GROUP BY true_lang ORDER BY true_lang
 """
 
 
-@register(
-    "text_trigram_langid", oracle=TRIGRAM_LANGID_ORACLE, tags=("llm", "text", "langid")
-)
+@register("text_trigram_langid", oracle=TRIGRAM_LANGID_ORACLE)
 def text_trigram_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -1537,20 +1519,20 @@ def text_trigram_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "lang", F.expr("substr(lt, i, 3)").alias("g"))
     )
-    tri = tri.localCheckpoint(eager=False)  # train + test branches
+    tri = materialize(tri)  # train + test branches
     train = (
         tri.where(F.col("doc_id") % 2 == 0)
         .groupBy("lang", "g")
         .agg(F.count(F.lit(1)).cast("double").alias("tc"))
     )
-    train = train.localCheckpoint(eager=False)
+    train = materialize(train)
     tnorm = train.groupBy("lang").agg(F.sqrt(F.sum(F.col("tc") * F.col("tc"))).alias("tn"))
     doc = (
         tri.where(F.col("doc_id") % 2 == 1)
         .groupBy("doc_id", F.col("lang").alias("true_lang"), "g")
         .agg(F.count(F.lit(1)).cast("double").alias("dc"))
     )
-    doc = doc.localCheckpoint(eager=False)
+    doc = materialize(doc)
     dnorm = doc.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("dc") * F.col("dc"))).alias("dn"))
     # profiles are (langs × distinct trigrams) — bounded by alphabet³, not
     # corpus size — so broadcast them: the doc-trigram frame (the big side)
@@ -1616,14 +1598,14 @@ FROM cum
 """
 
 
-@register("text_heaps_law_fit", oracle=HEAPS_ORACLE, tags=("llm", "text", "stats"))
+@register("text_heaps_law_fit", oracle=HEAPS_ORACLE)
 def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.textfns import tokens
     from ..operators.ranking import global_running_sum
 
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("t"))
-    tok = tok.localCheckpoint(eager=False)  # per-doc counts + first-seen
+    tok = materialize(tok)  # per-doc counts + first-seen
     per_doc = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
     new_vocab = (
         tok.groupBy("t")
@@ -1691,11 +1673,7 @@ ORDER BY source_a, source_b
 """
 
 
-@register(
-    "text_tfidf_centroid_cosine",
-    oracle=TFIDF_CENTROID_ORACLE,
-    tags=("llm", "text", "similarity"),
-)
+@register("text_tfidf_centroid_cosine", oracle=TFIDF_CENTROID_ORACLE)
 def text_tfidf_centroid_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
@@ -1713,7 +1691,7 @@ def text_tfidf_centroid_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tok",
         (F.col("tf") * F.log((1.0 + n_docs) / (1.0 + F.col("df")))).alias("w"),
     )
-    w = w.localCheckpoint(eager=False)  # norms + both join sides
+    w = materialize(w)  # norms + both join sides
     norms = w.groupBy("source").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
     a = w.select(F.col("source").alias("source_a"), "tok", F.col("w").alias("wa"))
     b = w.select(F.col("source").alias("source_b"), "tok", F.col("w").alias("wb"))
@@ -1794,11 +1772,7 @@ SELECT * FROM ({unions}) ORDER BY round
 BPE_TRAIN_ORACLE = _bpe_oracle()
 
 
-@register(
-    "text_bpe_train_merges",
-    oracle=BPE_TRAIN_ORACLE,
-    tags=("llm", "text", "tokenizer"),
-)
+@register("text_bpe_train_merges", oracle=BPE_TRAIN_ORACLE)
 def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -1820,7 +1794,7 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     wd = W.partitionBy("word").orderBy("i")
     merges = []
     for rnd in range(1, _BPE_ROUNDS + 1):
-        seqs = seqs.localCheckpoint(eager=False)  # pair count + merge reuse
+        seqs = materialize(seqs)  # pair count + merge reuse
         toks = seqs.select(
             "word", "cnt", F.posexplode(F.split(F.trim("s"), " ")).alias("i", "t")
         )
@@ -1898,11 +1872,7 @@ ORDER BY w1, w2
 """
 
 
-@register(
-    "text_kneser_ney_bigram",
-    oracle=KNESER_NEY_ORACLE,
-    tags=("llm", "text", "lm"),
-)
+@register("text_kneser_ney_bigram", oracle=KNESER_NEY_ORACLE)
 def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -1915,7 +1885,7 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("t").alias("w1"), F.lead("t").over(wd).alias("w2")
     ).where(F.col("w2").isNotNull())
     bigrams = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    bigrams = bigrams.localCheckpoint(eager=False)  # c1/hist/tot/output
+    bigrams = materialize(bigrams)  # c1/hist/tot/output
     c1 = bigrams.groupBy("w1").agg(
         F.sum("c12").alias("c1"), F.count(F.lit(1)).alias("n_cont")
     )
@@ -1973,11 +1943,7 @@ ORDER BY doc_id
 """
 
 
-@register(
-    "text_readability_scores",
-    oracle=READABILITY_ORACLE,
-    tags=("llm", "text", "quality"),
-)
+@register("text_readability_scores", oracle=READABILITY_ORACLE)
 def text_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = T.tokens(F.col("text"))
@@ -2066,13 +2032,13 @@ LIMIT {_BM25_TOPK}
 """
 
 
-@register("text_qlm_dirichlet_topk", oracle=QLM_ORACLE, tags=("llm", "text", "retrieval"))
+@register("text_qlm_dirichlet_topk", oracle=QLM_ORACLE)
 def text_qlm_dirichlet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.textfns import tokens
 
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("t"))
-    tok = tok.localCheckpoint(eager=False)  # dl + cf + tf branches
+    tok = materialize(tok)  # dl + cf + tf branches
     dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).cast("double").alias("dlen"))
     ctot = tok.agg(F.count(F.lit(1)).cast("double").alias("ctoks"))
     qterms = spark.createDataFrame([(t,) for t in _BM25_TERMS], "t string")
@@ -2168,11 +2134,7 @@ ORDER BY doc_id
 """
 
 
-@register(
-    "text_stupid_backoff_logprob",
-    oracle=STUPID_BACKOFF_ORACLE,
-    tags=("llm", "text", "lm"),
-)
+@register("text_stupid_backoff_logprob", oracle=STUPID_BACKOFF_ORACLE)
 def text_stupid_backoff_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -2188,7 +2150,7 @@ def text_stupid_backoff_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("t").alias("w1"),
         F.lead("t").over(W.partitionBy("doc_id").orderBy("i")).alias("w2"),
     ).where(F.col("w2").isNotNull())
-    bg = bg.localCheckpoint(eager=False)  # train + eval branches
+    bg = materialize(bg)  # train + eval branches
     train_bg = (
         bg.where(F.col("doc_id") % 10 != 0)
         .groupBy("w1", "w2")
@@ -2283,11 +2245,7 @@ ORDER BY ranker
 """
 
 
-@register(
-    "text_retrieval_eval_ndcg",
-    oracle=RETRIEVAL_EVAL_ORACLE,
-    tags=("llm", "text", "retrieval", "eval"),
-)
+@register("text_retrieval_eval_ndcg", oracle=RETRIEVAL_EVAL_ORACLE)
 def text_retrieval_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -2303,7 +2261,7 @@ def text_retrieval_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).cast("long").alias("rel"),
     )
-    rel = rel.localCheckpoint(eager=False)  # ideal + two run joins
+    rel = materialize(rel)  # ideal + two run joins
     wb = W.partitionBy(F.lit(1)).orderBy(F.col("bm25").desc(), "doc_id")
     bm = (
         text_bm25_topk(spark, sf_dir)
@@ -2404,7 +2362,7 @@ LIMIT {_RAKE_TOPK}
 """
 
 
-@register("text_rake_keyphrases", oracle=RAKE_ORACLE, tags=("llm", "text", "mining"))
+@register("text_rake_keyphrases", oracle=RAKE_ORACLE)
 def text_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as _W
 
@@ -2422,7 +2380,7 @@ def text_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("is_stop") == 0)
         .select("doc_id", "island", "pos", "t")
     )
-    members = members.localCheckpoint(eager=False)  # phrases + wordstats + score
+    members = materialize(members)  # phrases + wordstats + score
     phrases = members.groupBy("doc_id", "island").agg(
         F.concat_ws(
             " ",
@@ -2433,7 +2391,7 @@ def text_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("phrase"),
         F.count(F.lit(1)).cast("long").alias("plen"),
     )
-    phrases = phrases.localCheckpoint(eager=False)  # wordstats join + scoring
+    phrases = materialize(phrases)  # wordstats join + scoring
     wordstats = (
         members.join(phrases.select("doc_id", "island", "plen"), ["doc_id", "island"])
         .groupBy("t")
@@ -2514,11 +2472,7 @@ ORDER BY source_a, source_b
 """
 
 
-@register(
-    "text_burrows_delta_stylometry",
-    oracle=BURROWS_DELTA_ORACLE,
-    tags=("llm", "text", "mining"),
-)
+@register("text_burrows_delta_stylometry", oracle=BURROWS_DELTA_ORACLE)
 def text_burrows_delta_stylometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as _W
 
@@ -2526,10 +2480,10 @@ def text_burrows_delta_stylometry(spark: SparkSession, sf_dir: str) -> DataFrame
 
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("source", F.explode(tokens(F.col("text"))).alias("t"))
-    tok = tok.localCheckpoint(eager=False)  # totals + counts branches
+    tok = materialize(tok)  # totals + counts branches
     stot = tok.groupBy("source").agg(F.count(F.lit(1)).cast("double").alias("n"))
     wc = tok.groupBy("source", "t").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    wc = wc.localCheckpoint(eager=False)  # top-word rank + freq join
+    wc = materialize(wc)  # top-word rank + freq join
     topw = (
         wc.groupBy("t")
         .agg(F.sum("c").alias("tot"))
@@ -2552,7 +2506,7 @@ def text_burrows_delta_stylometry(spark: SparkSession, sf_dir: str) -> DataFrame
         "t",
         ((F.col("f") - F.avg("f").over(wt)) / F.stddev_samp("f").over(wt)).alias("z"),
     )
-    z = z.localCheckpoint(eager=False)  # both sides of the pair join
+    z = materialize(z)  # both sides of the pair join
     a = z.select(F.col("source").alias("source_a"), "t", F.col("z").alias("za"))
     b = z.select(F.col("source").alias("source_b"), "t", F.col("z").alias("zb"))
     return (
@@ -2598,7 +2552,7 @@ ORDER BY lang
 """
 
 
-@register("docs_tokenizer_fertility", oracle=FERTILITY_ORACLE, tags=("llm", "text"))
+@register("docs_tokenizer_fertility", oracle=FERTILITY_ORACLE)
 def docs_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("lang", "text")
     per_doc = T.token_count_estimates(docs).withColumn(
@@ -2659,7 +2613,7 @@ ORDER BY vocab_k
 """
 
 
-@register("text_vocab_coverage_curve", oracle=COVERAGE_ORACLE, tags=("llm", "text"))
+@register("text_vocab_coverage_curve", oracle=COVERAGE_ORACLE)
 def text_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.textfns import tokens
     from ..operators.ranking import global_prefix_scan
@@ -2670,7 +2624,7 @@ def text_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("t")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    wc = wc.localCheckpoint(eager=False)  # totals + scan branches
+    wc = materialize(wc)  # totals + scan branches
     tot = wc.agg(
         F.sum("c").cast("long").alias("total"),
         F.count(F.lit(1)).cast("long").alias("n_vocab"),
@@ -2729,11 +2683,7 @@ ORDER BY doc_id
 """
 
 
-@register(
-    "text_html_extraction",
-    oracle=HTML_EXTRACTION_ORACLE,
-    tags=("llm", "text", "udf"),
-)
+@register("text_html_extraction", oracle=HTML_EXTRACTION_ORACLE)
 def text_html_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
     from html import escape
@@ -2823,11 +2773,7 @@ ORDER BY doc_id
 """
 
 
-@register(
-    "multimodal_pdf_extract",
-    oracle=PDF_EXTRACTION_ORACLE,
-    tags=("llm", "multimodal", "text", "udf"),
-)
+@register("multimodal_pdf_extract", oracle=PDF_EXTRACTION_ORACLE)
 def multimodal_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
@@ -2919,11 +2865,7 @@ ORDER BY status
 """.replace("{PDF_LINE}", PDF_LINE_SQL)
 
 
-@register(
-    "multimodal_pdf_error_audit",
-    oracle=PDF_ERROR_AUDIT_ORACLE,
-    tags=("llm", "multimodal", "text", "udf"),
-)
+@register("multimodal_pdf_error_audit", oracle=PDF_ERROR_AUDIT_ORACLE)
 def multimodal_pdf_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 

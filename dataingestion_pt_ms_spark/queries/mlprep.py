@@ -97,7 +97,7 @@ ORDER BY feature
 """
 
 
-@register("lineitem_histogram_split_finder", oracle=SPLIT_FINDER_ORACLE, tags=("ml",))
+@register("lineitem_histogram_split_finder", oracle=SPLIT_FINDER_ORACLE)
 def lineitem_histogram_split_finder(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("y"),
@@ -198,7 +198,7 @@ ORDER BY custkey, fold
 """
 
 
-@register("orders_target_encoding_oof", oracle=TARGET_ENCODING_ORACLE, tags=("ml",))
+@register("orders_target_encoding_oof", oracle=TARGET_ENCODING_ORACLE)
 def orders_target_encoding_oof(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("custkey"),

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..session import materialize
 from . import register
 
 _LAMBDA = 0.1
@@ -102,18 +103,17 @@ ORDER BY u, rnk
 """
 
 
-@register("rec_als_rank2_round", oracle=ALS_ORACLE, tags=("recommend", "iterative", "ml-prep"))
+@register("rec_als_rank2_round", oracle=ALS_ORACLE)
 def rec_als_rank2_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
-    r = (
+    r = materialize(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy(
             F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i")
         )
         .agg(F.count("*").cast("double").alias("r"))
-        .localCheckpoint(eager=False)  # feeds both half-steps
-    )
+    )  # feeds both half-steps
     q0 = r.select("i").distinct().select(
         "i", _q_expr("q1", "i").alias("q1"), _q_expr("q2", "i").alias("q2")
     )
@@ -146,7 +146,7 @@ def rec_als_rank2_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = solve(r.join(q0, "i"), "u", "q1", "q2").withColumnsRenamed(
         {"f1": "p1", "f2": "p2"}
     )
-    p = p.localCheckpoint(eager=False)  # item half-step + panel
+    p = materialize(p)  # item half-step + panel
     q = solve(r.join(p, "u"), "i", "p1", "p2").withColumnsRenamed(
         {"f1": "q1", "f2": "q2"}
     )

@@ -47,7 +47,7 @@ ORDER BY r_name, order_month
 """
 
 
-@register("flagship_region_monthly_revenue", oracle=FLAGSHIP_ORACLE, tags=("join", "agg", "flagship"))
+@register("flagship_region_monthly_revenue", oracle=FLAGSHIP_ORACLE)
 def flagship_region_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").filter(
@@ -102,7 +102,7 @@ ORDER BY l_returnflag, l_linestatus
 """
 
 
-@register("q1_pricing_summary", oracle=Q1_ORACLE, tags=("agg", "flagship"))
+@register("q1_pricing_summary", oracle=Q1_ORACLE)
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     disc = _revenue()
@@ -143,7 +143,7 @@ LIMIT 10
 """
 
 
-@register("q3_shipping_priority", oracle=Q3_ORACLE, tags=("join", "agg", "topk", "flagship"))
+@register("q3_shipping_priority", oracle=Q3_ORACLE)
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < F.lit("1997-03-15"))
@@ -183,7 +183,7 @@ ORDER BY revenue DESC, n_name
 """
 
 
-@register("q5_local_supplier_volume", oracle=Q5_ORACLE, tags=("join", "agg"))
+@register("q5_local_supplier_volume", oracle=Q5_ORACLE)
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").filter(
@@ -221,7 +221,7 @@ WHERE l_quantity BETWEEN 10 AND 20
 """
 
 
-@register("proj_rename_prune", oracle=PROJ_ORACLE, tags=("projection",))
+@register("proj_rename_prune", oracle=PROJ_ORACLE)
 def proj_rename_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return li.filter(F.col("l_quantity").between(10, 20)).select(
@@ -248,7 +248,7 @@ WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
 """
 
 
-@register("filter_predicates", oracle=PRED_ORACLE, tags=("filter",))
+@register("filter_predicates", oracle=PRED_ORACLE)
 def filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     return orders.filter(
@@ -282,7 +282,7 @@ ORDER BY balance_bucket, c_mktsegment
 """
 
 
-@register("case_when_bucketing", oracle=CASE_ORACLE, tags=("projection", "agg"))
+@register("case_when_bucketing", oracle=CASE_ORACLE)
 def case_when_bucketing(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     bucket = (
@@ -317,7 +317,7 @@ ORDER BY o_orderpriority
 """
 
 
-@register("q4_order_priority_checking", oracle=Q4_ORACLE, tags=("join", "semi", "agg"))
+@register("q4_order_priority_checking", oracle=Q4_ORACLE)
 def q4_order_priority_checking(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-07-01"))
@@ -352,7 +352,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
 """
 
 
-@register("q6_forecast_revenue", oracle=Q6_ORACLE, tags=("agg", "filter", "flagship"))
+@register("q6_forecast_revenue", oracle=Q6_ORACLE)
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return li.filter(
@@ -387,7 +387,7 @@ ORDER BY total_price DESC, o_orderkey
 """
 
 
-@register("q18_large_volume_customers", oracle=Q18_ORACLE, tags=("join", "agg", "having"))
+@register("q18_large_volume_customers", oracle=Q18_ORACLE)
 def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")

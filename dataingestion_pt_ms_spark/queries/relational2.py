@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, register_views
+from ..session import materialize
 from . import register
 
 # --------------------------------------------------------------------------
@@ -25,7 +26,7 @@ ORDER BY l_returnflag
 """
 
 
-@register("pivot_status_matrix", oracle=PIVOT_ORACLE, tags=("pivot", "agg"))
+@register("pivot_status_matrix", oracle=PIVOT_ORACLE)
 def pivot_status_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return (
@@ -57,7 +58,7 @@ SELECT n_regionkey, 'min_key' AS metric, min_key AS value FROM wide
 """
 
 
-@register("unpivot_region_metrics", oracle=UNPIVOT_ORACLE, tags=("pivot",))
+@register("unpivot_region_metrics", oracle=UNPIVOT_ORACLE)
 def unpivot_region_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation")
     wide = nation.groupBy("n_regionkey").agg(
@@ -82,7 +83,7 @@ ORDER BY status, priority
 """
 
 
-@register("grouping_sets_sql", oracle=GSETS_ORACLE, tags=("agg", "sql-api"))
+@register("grouping_sets_sql", oracle=GSETS_ORACLE)
 def grouping_sets_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     return spark.sql(
@@ -109,7 +110,7 @@ WHERE c_acctbal > (SELECT avg(c2.c_acctbal) FROM customer c2
 """
 
 
-@register("correlated_subqueries_sql", oracle=CORR_ORACLE, tags=("join", "sql-api"))
+@register("correlated_subqueries_sql", oracle=CORR_ORACLE)
 def correlated_subqueries_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     # Catalyst de-correlates both subqueries into joins — the point of the
@@ -146,7 +147,7 @@ ORDER BY region, l.n_customers DESC, nation
 """
 
 
-@register("join_lateral_topk_per_region", oracle=LATERAL_ORACLE, tags=("join", "lateral", "sql-api"))
+@register("join_lateral_topk_per_region", oracle=LATERAL_ORACLE)
 def join_lateral_topk_per_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     return spark.sql(
@@ -176,7 +177,7 @@ SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
 """
 
 
-@register("set_except_all", oracle=EXCEPT_ALL_ORACLE, tags=("setop",))
+@register("set_except_all", oracle=EXCEPT_ALL_ORACLE)
 def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     a = orders.select("o_custkey")
@@ -191,7 +192,7 @@ SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
 """
 
 
-@register("set_intersect_all", oracle=INTERSECT_ALL_ORACLE, tags=("setop",))
+@register("set_intersect_all", oracle=INTERSECT_ALL_ORACLE)
 def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     a = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey")
@@ -220,7 +221,7 @@ WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey)
 """
 
 
-@register("window_extended_family", oracle=WIN2_ORACLE, tags=("window",))
+@register("window_extended_family", oracle=WIN2_ORACLE)
 def window_extended_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     w = W.partitionBy("c_nationkey").orderBy(F.col("c_acctbal").desc(), "c_custkey")
@@ -258,7 +259,7 @@ ORDER BY p_size
 """
 
 
-@register("agg_string_concat_ordered", oracle=STRAGG_ORACLE, tags=("agg", "string"))
+@register("agg_string_concat_ordered", oracle=STRAGG_ORACLE)
 def agg_string_concat_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
     return (
@@ -283,7 +284,7 @@ GROUP BY o_custkey
 """
 
 
-@register("agg_max_by", oracle=MAXBY_ORACLE, tags=("agg",))
+@register("agg_max_by", oracle=MAXBY_ORACLE)
 def agg_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy("o_custkey").agg(
@@ -307,7 +308,7 @@ ORDER BY l_returnflag
 """
 
 
-@register("agg_salted_skew_resistant", oracle=SALTED_ORACLE, tags=("agg", "skew"))
+@register("agg_salted_skew_resistant", oracle=SALTED_ORACLE)
 def agg_salted_skew_resistant(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     n_salt = 16
@@ -330,7 +331,7 @@ def agg_salted_skew_resistant(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Sampling: seeded Bernoulli sample — engine-specific RNG, so rows-only;
 # sanity bounds asserted in tests.
 # --------------------------------------------------------------------------
-@register("sample_seeded_fraction", oracle=None, tags=("sample",))
+@register("sample_seeded_fraction", oracle=None)
 def sample_seeded_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return li.sample(fraction=0.1, seed=42).select(
@@ -369,7 +370,7 @@ MOM_ORACLE = _MOM_BODY.format(
 )
 
 
-@register("sql_cte_mom_growth", oracle=MOM_ORACLE, tags=("agg", "window", "sql-api"))
+@register("sql_cte_mom_growth", oracle=MOM_ORACLE)
 def sql_cte_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     return spark.sql(
@@ -399,7 +400,7 @@ ORDER BY key_a, key_b
 """
 
 
-@register("join_fuzzy_name_match", oracle=FUZZY_ORACLE, tags=("join", "fuzzy", "dedup"))
+@register("join_fuzzy_name_match", oracle=FUZZY_ORACLE)
 def join_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
     a = part.select(
@@ -461,11 +462,7 @@ ORDER BY edit_dist
 """
 
 
-@register(
-    "join_fuzzy_name_match_counts",
-    oracle=FUZZY_COUNTS_ORACLE,
-    tags=("join", "fuzzy", "dedup", "audit"),
-)
+@register("join_fuzzy_name_match_counts", oracle=FUZZY_COUNTS_ORACLE)
 def join_fuzzy_name_match_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
     a = part.select(
@@ -526,9 +523,7 @@ ORDER BY bucket NULLS FIRST
 """
 
 
-@register(
-    "join_null_safe_buckets", oracle=NULLSAFE_JOIN_ORACLE, tags=("join", "null-safe")
-)
+@register("join_null_safe_buckets", oracle=NULLSAFE_JOIN_ORACLE)
 def join_null_safe_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -612,11 +607,7 @@ def _soundex_expr(c):
     )
 
 
-@register(
-    "join_phonetic_blocking",
-    oracle=PHONETIC_ORACLE,
-    tags=("join", "fuzzy", "dedup"),
-)
+@register("join_phonetic_blocking", oracle=PHONETIC_ORACLE)
 def join_phonetic_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
     words = (
@@ -688,9 +679,7 @@ ORDER BY entity_id
 """
 
 
-@register(
-    "pipeline_entity_resolution", oracle=ER_ORACLE, tags=("join", "fuzzy", "graph", "pipeline")
-)
+@register("pipeline_entity_resolution", oracle=ER_ORACLE)
 def pipeline_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import connected_components
 
@@ -700,7 +689,7 @@ def pipeline_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.min("p_partkey").alias("rep"), F.count(F.lit(1)).alias("n_parts")
     )
-    recs = recs.localCheckpoint(eager=False)  # pair + expand branches
+    recs = materialize(recs)  # pair + expand branches
     a = recs.select(
         F.col("rep").alias("u"), F.col("name").alias("name_a"), "brand",
         F.floor(F.length("name") / 4).alias("len_band"),

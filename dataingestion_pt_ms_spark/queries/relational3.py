@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..session import materialize
 from . import register
 
 
@@ -64,7 +65,7 @@ ORDER BY p_partkey
 """
 
 
-@register("q2_min_cost_supplier", oracle=Q2_ORACLE, tags=("join", "window", "tpch"))
+@register("q2_min_cost_supplier", oracle=Q2_ORACLE)
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").filter(
@@ -126,7 +127,7 @@ ORDER BY supp_nation, cust_nation, l_year
 """
 
 
-@register("q7_volume_shipping", oracle=Q7_ORACLE, tags=("join", "agg", "tpch"))
+@register("q7_volume_shipping", oracle=Q7_ORACLE)
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01"))
@@ -194,7 +195,7 @@ ORDER BY o_year
 """
 
 
-@register("q8_market_share", oracle=Q8_ORACLE, tags=("join", "agg", "tpch"))
+@register("q8_market_share", oracle=Q8_ORACLE)
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
@@ -257,7 +258,7 @@ ORDER BY nation, o_year DESC
 """
 
 
-@register("q9_product_type_profit", oracle=Q9_ORACLE, tags=("join", "agg", "tpch"))
+@register("q9_product_type_profit", oracle=Q9_ORACLE)
 def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%gear%"))
@@ -304,7 +305,7 @@ LIMIT 20
 """
 
 
-@register("q10_returned_items", oracle=Q10_ORACLE, tags=("join", "agg", "topk", "tpch"))
+@register("q10_returned_items", oracle=Q10_ORACLE)
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(
@@ -347,7 +348,7 @@ ORDER BY part_value DESC, l_partkey
 """
 
 
-@register("q11_important_stock", oracle=Q11_ORACLE, tags=("agg", "scalar-subquery", "tpch"))
+@register("q11_important_stock", oracle=Q11_ORACLE)
 def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     val = li.groupBy("l_partkey").agg(F.sum("l_extendedprice").alias("value"))
@@ -386,7 +387,7 @@ ORDER BY delay_bucket
 """
 
 
-@register("q12_shipping_delay", oracle=Q12_ORACLE, tags=("join", "agg", "tpch"))
+@register("q12_shipping_delay", oracle=Q12_ORACLE)
 def q12_shipping_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01"))
@@ -427,7 +428,7 @@ ORDER BY custdist DESC, c_count DESC
 """
 
 
-@register("q13_customer_distribution", oracle=Q13_ORACLE, tags=("join", "agg", "tpch"))
+@register("q13_customer_distribution", oracle=Q13_ORACLE)
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(
@@ -461,7 +462,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-09-01'
 """
 
 
-@register("q14_promo_effect", oracle=Q14_ORACLE, tags=("join", "agg", "tpch"))
+@register("q14_promo_effect", oracle=Q14_ORACLE)
 def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-09-01"))
@@ -502,7 +503,7 @@ ORDER BY s_suppkey
 """
 
 
-@register("q15_top_supplier", oracle=Q15_ORACLE, tags=("agg", "scalar-subquery", "tpch"))
+@register("q15_top_supplier", oracle=Q15_ORACLE)
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01"))
@@ -539,7 +540,7 @@ ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
 """
 
 
-@register("q16_supplier_part_counts", oracle=Q16_ORACLE, tags=("join", "anti", "agg", "tpch"))
+@register("q16_supplier_part_counts", oracle=Q16_ORACLE)
 def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").filter(
@@ -575,7 +576,7 @@ WHERE p_brand = 'Brand#3'
 """
 
 
-@register("q17_small_qty_revenue", oracle=Q17_ORACLE, tags=("join", "correlated", "tpch"))
+@register("q17_small_qty_revenue", oracle=Q17_ORACLE)
 def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
@@ -613,7 +614,7 @@ WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
 """
 
 
-@register("q19_disjunctive_bands", oracle=Q19_ORACLE, tags=("join", "filter", "tpch"))
+@register("q19_disjunctive_bands", oracle=Q19_ORACLE)
 def q19_disjunctive_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
@@ -657,7 +658,7 @@ ORDER BY s_name
 """
 
 
-@register("q20_promo_part_suppliers", oracle=Q20_ORACLE, tags=("join", "semi", "tpch"))
+@register("q20_promo_part_suppliers", oracle=Q20_ORACLE)
 def q20_promo_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01"))
@@ -708,7 +709,7 @@ LIMIT 20
 """
 
 
-@register("q21_last_to_ship", oracle=Q21_ORACLE, tags=("join", "agg", "tpch"))
+@register("q21_last_to_ship", oracle=Q21_ORACLE)
 def q21_last_to_ship(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
@@ -748,7 +749,7 @@ ORDER BY c_nationkey
 """
 
 
-@register("q22_inactive_customers", oracle=Q22_ORACLE, tags=("anti", "scalar-subquery", "tpch"))
+@register("q22_inactive_customers", oracle=Q22_ORACLE)
 def q22_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     orders = (
@@ -807,7 +808,7 @@ ORDER BY custkey
 """
 
 
-@register("orders_rfm_segmentation", oracle=RFM_ORACLE, tags=("agg", "window", "segmentation"))
+@register("orders_rfm_segmentation", oracle=RFM_ORACLE)
 def orders_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_ntile
 
@@ -875,16 +876,18 @@ LIMIT 50
 """
 
 
-@register("basket_pair_affinity", oracle=BASKET_ORACLE, tags=("join", "agg", "affinity"))
+@register("basket_pair_affinity", oracle=BASKET_ORACLE)
 def basket_pair_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     # r11 opt (guide §1.2 #1): the distinct basket items feed five branches
     # (order count, part frequencies via both join sides, and both sides
     # of the pair self-join) — materialize so the distinct shuffle runs
     # once (10 parquet scans in the before-plan)
-    items = li.select(
-        F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("part")
-    ).distinct().localCheckpoint(eager=False)
+    items = materialize(
+        li.select(
+            F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("part")
+        ).distinct()
+    )
     n_orders = items.agg(
         F.countDistinct("okey").cast("double").alias("n")
     )
@@ -942,9 +945,7 @@ LIMIT 1000
 """
 
 
-@register(
-    "rank_global_row_number", oracle=RANK_GLOBAL_ORACLE, tags=("window", "rank", "scale")
-)
+@register("rank_global_row_number", oracle=RANK_GLOBAL_ORACLE)
 def rank_global_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_row_number
 
@@ -1006,7 +1007,7 @@ ORDER BY bin
 """
 
 
-@register("customer_woe_binning", oracle=WOE_ORACLE, tags=("ml-prep", "agg"))
+@register("customer_woe_binning", oracle=WOE_ORACLE)
 def customer_woe_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
@@ -1031,7 +1032,7 @@ def customer_woe_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.lit(1) - F.col("bad")).cast("long").alias("n_good"),
         F.sum("bad").cast("long").alias("n_bad"),
     )
-    agg = agg.localCheckpoint(eager=False)  # rows + totals branches
+    agg = materialize(agg)  # rows + totals branches
     # Smooth the totals as well (+0.5 per bin, mirroring the per-bin +0.5):
     # guarantees tg, tb > 0 even when one class is empty at small SF, so the
     # log-ratio never divides by zero under ANSI mode.

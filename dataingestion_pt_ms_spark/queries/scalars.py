@@ -40,7 +40,7 @@ WHERE o_orderkey % 10 = 0
 """
 
 
-@register("scalar_datetime_family", oracle=DT_ORACLE, tags=("scalar", "datetime"))
+@register("scalar_datetime_family", oracle=DT_ORACLE)
 def scalar_datetime_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 10 == 0)
     return orders.select(
@@ -76,7 +76,7 @@ FROM part
 """
 
 
-@register("scalar_string_family", oracle=STR_ORACLE, tags=("scalar", "string"))
+@register("scalar_string_family", oracle=STR_ORACLE)
 def scalar_string_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
     return part.select(
@@ -113,7 +113,7 @@ WHERE l_linenumber = 1
 """
 
 
-@register("scalar_math_family", oracle=MATH_ORACLE, tags=("scalar", "math"))
+@register("scalar_math_family", oracle=MATH_ORACLE)
 def scalar_math_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_linenumber") == 1)
     price = F.col("l_extendedprice")
@@ -145,7 +145,7 @@ ORDER BY k_bucket
 """
 
 
-@register("scalar_json_extract", oracle=JSON_ORACLE, tags=("scalar", "json"))
+@register("scalar_json_extract", oracle=JSON_ORACLE)
 def scalar_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("long")
@@ -167,7 +167,7 @@ WHERE event_type = 'purchase'
 """
 
 
-@register("scalar_json_serialize", oracle=JSON_SER_ORACLE, tags=("scalar", "json"))
+@register("scalar_json_serialize", oracle=JSON_SER_ORACLE)
 def scalar_json_serialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to_json(struct(...)) is the engine path (reference R20); the oracle
     # builds the same canonical string by concat so both engines agree on
@@ -194,7 +194,7 @@ WHERE vec_id % 5 = 0
 """
 
 
-@register("scalar_array_family", oracle=ARR_ORACLE, tags=("scalar", "array", "vector"))
+@register("scalar_array_family", oracle=ARR_ORACLE)
 def scalar_array_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 5 == 0)
     vec = F.col("embedding").cast("array<double>")
@@ -221,7 +221,7 @@ WHERE vec_id < 3 AND pos <= 8
 """
 
 
-@register("scalar_array_explode", oracle=EXPLODE_ORACLE, tags=("scalar", "array"))
+@register("scalar_array_explode", oracle=EXPLODE_ORACLE)
 def scalar_array_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 3)
     return (
@@ -247,7 +247,7 @@ WHERE o_orderkey % 7 = 0
 """
 
 
-@register("scalar_cast_family", oracle=CAST_ORACLE, tags=("scalar", "cast"))
+@register("scalar_cast_family", oracle=CAST_ORACLE)
 def scalar_cast_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 7 == 0)
     return orders.select(
@@ -279,7 +279,7 @@ GROUP BY event_type ORDER BY event_type
 """
 
 
-@register("scalar_variant_json", oracle=VARIANT_ORACLE, tags=("scalar", "json", "variant"))
+@register("scalar_variant_json", oracle=VARIANT_ORACLE)
 def scalar_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     k = F.variant_get(F.parse_json("props"), "$.k", "bigint")
@@ -314,9 +314,7 @@ FROM mangled GROUP BY lower(b) ORDER BY brand_lower
 """
 
 
-@register(
-    "scalar_collation_group", oracle=COLLATION_ORACLE, tags=("scalar", "collation")
-)
+@register("scalar_collation_group", oracle=COLLATION_ORACLE)
 def scalar_collation_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
     mangled = part.select(
@@ -354,7 +352,7 @@ ORDER BY o_orderkey
 """
 
 
-@register("scalar_try_family", oracle=TRY_ORACLE, tags=("scalar", "ansi"))
+@register("scalar_try_family", oracle=TRY_ORACLE)
 def scalar_try_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     return (
@@ -396,7 +394,7 @@ WHERE o_orderkey % 10 = 0
 """
 
 
-@register("scalar_xml_parse", oracle=XML_ORACLE, tags=("scalar", "xml"))
+@register("scalar_xml_parse", oracle=XML_ORACLE)
 def scalar_xml_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").where(F.col("o_orderkey") % 10 == 0)
     xml = F.concat(
@@ -465,7 +463,7 @@ ORDER BY host, seg
 """
 
 
-@register("scalar_url_family", oracle=URL_ORACLE, tags=("scalar", "url"))
+@register("scalar_url_family", oracle=URL_ORACLE)
 def scalar_url_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     url = F.concat(

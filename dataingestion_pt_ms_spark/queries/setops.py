@@ -28,7 +28,7 @@ SELECT c_custkey FROM customer WHERE c_acctbal > 8000
 """
 
 
-@register("set_union_distinct", oracle=UNION_ORACLE, tags=("setop",))
+@register("set_union_distinct", oracle=UNION_ORACLE)
 def set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     a = cust.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
@@ -46,7 +46,7 @@ SELECT c_custkey, 'rich' AS src FROM customer WHERE c_acctbal > 8000
 """
 
 
-@register("set_union_all_tagged", oracle=UNION_ALL_ORACLE, tags=("setop",))
+@register("set_union_all_tagged", oracle=UNION_ALL_ORACLE)
 def set_union_all_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     a = cust.filter(F.col("c_mktsegment") == "BUILDING").select(
@@ -68,7 +68,7 @@ SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
 """
 
 
-@register("set_intersect_custkeys", oracle=INTERSECT_ORACLE, tags=("setop",))
+@register("set_intersect_custkeys", oracle=INTERSECT_ORACLE)
 def set_intersect_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     a = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey")
@@ -86,7 +86,7 @@ SELECT o_custkey FROM orders WHERE o_orderstatus = 'P'
 """
 
 
-@register("set_except_custkeys", oracle=EXCEPT_ORACLE, tags=("setop",))
+@register("set_except_custkeys", oracle=EXCEPT_ORACLE)
 def set_except_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     a = orders.select("o_custkey")
@@ -102,7 +102,7 @@ SELECT DISTINCT l_returnflag, l_linestatus, l_suppkey FROM lineitem
 """
 
 
-@register("set_distinct_projection", oracle=DISTINCT_ORACLE, tags=("setop", "dedup"))
+@register("set_distinct_projection", oracle=DISTINCT_ORACLE)
 def set_distinct_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return li.select("l_returnflag", "l_linestatus", "l_suppkey").distinct()
@@ -122,7 +122,7 @@ FROM (
 """
 
 
-@register("dedup_keyed_last_wins", oracle=LATEST_ORACLE, tags=("setop", "dedup", "upsert"))
+@register("dedup_keyed_last_wins", oracle=LATEST_ORACLE)
 def dedup_keyed_last_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy(

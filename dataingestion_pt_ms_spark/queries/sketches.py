@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..session import materialize
 from . import register
 
 # --------------------------------------------------------------------------
@@ -129,9 +130,7 @@ ORDER BY prio
 """
 
 
-@register(
-    "agg_hll_distinct_customers", oracle=HLL_ORACLE, tags=("sketch", "hll", "agg")
-)
+@register("agg_hll_distinct_customers", oracle=HLL_ORACLE)
 def agg_hll_distinct_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct customers per order priority via a hand-rolled 64-register
     HyperLogLog, attested against DuckDB recomputing the identical sketch
@@ -235,9 +234,7 @@ ORDER BY est_count DESC, token
 """
 
 
-@register(
-    "sketch_cm_heavy_hitters", oracle=CM_ORACLE, tags=("sketch", "countmin", "text")
-)
+@register("sketch_cm_heavy_hitters", oracle=CM_ORACLE)
 def sketch_cm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy-hitter tokens from a 4×1024 count-min sketch, with the exact
     count alongside (sketch law: ``est_count >= exact_count`` always —
@@ -252,11 +249,10 @@ def sketch_cm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11 opt (guide §1.2 #1): the vocabulary-sized count table feeds the
     # hashed cells AND the stream total — materialize so the corpus
     # tokenize + count shuffle runs once, not twice
-    counts = (
+    counts = materialize(
         docs.select(F.explode(F.split("text", " ")).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)
     )
     hashed = counts.select(
         "token",
@@ -279,7 +275,7 @@ def sketch_cm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # hashed feeds the cell sums AND the estimate join (same two-consumer
     # shape the per-source variant already materializes)
-    hashed = hashed.localCheckpoint(eager=False)
+    hashed = materialize(hashed)
     cells = hashed.groupBy("j", "bucket").agg(F.sum("c").alias("cell"))
     est = (
         hashed.join(cells, ["j", "bucket"])
@@ -352,9 +348,7 @@ ORDER BY prio
 """
 
 
-@register(
-    "agg_hll_merge_partials", oracle=HLL_MERGE_ORACLE, tags=("sketch", "hll", "agg")
-)
+@register("agg_hll_merge_partials", oracle=HLL_MERGE_ORACLE)
 def agg_hll_merge_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     hexd = F.md5(F.col("o_custkey").cast("string"))
@@ -368,7 +362,7 @@ def agg_hll_merge_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
         _rank_from_hex_tail(tail).alias("r"),
     )
     partial_regs = parts.groupBy("prio", "yr", "reg").agg(F.max("r").alias("r"))
-    partial_regs = partial_regs.localCheckpoint(eager=False)  # two consumers
+    partial_regs = materialize(partial_regs)  # two consumers
     merged_regs = partial_regs.groupBy("prio", "reg").agg(F.max("r").alias("r"))
     merged = merged_regs.groupBy("prio").agg(
         F.sum(F.expr("shiftleft(1L, 55 - r)")).alias("s_present"),
@@ -465,11 +459,7 @@ FROM pivoted CROSS JOIN exact
 """
 
 
-@register(
-    "agg_hll_intersection_estimate",
-    oracle=HLL_INTERSECT_ORACLE,
-    tags=("sketch", "hll", "agg"),
-)
+@register("agg_hll_intersection_estimate", oracle=HLL_INTERSECT_ORACLE)
 def agg_hll_intersection_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     two = orders.filter(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
@@ -563,11 +553,7 @@ ORDER BY event_type
 """
 
 
-@register(
-    "agg_bitmap_exact_distinct",
-    oracle=BITMAP_DISTINCT_ORACLE,
-    tags=("sketch", "bitmap", "agg"),
-)
+@register("agg_bitmap_exact_distinct", oracle=BITMAP_DISTINCT_ORACLE)
 def agg_bitmap_exact_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     bits = events.groupBy(
@@ -644,14 +630,12 @@ FROM n
 """
 
 
-@register(
-    "sketch_bloom_fpr_audit", oracle=BLOOM_ORACLE, tags=("sketch", "bloom", "dq")
-)
+@register("sketch_bloom_fpr_audit", oracle=BLOOM_ORACLE)
 def sketch_bloom_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     members = orders.select(F.col("o_custkey").alias("key")).distinct()
-    members = members.localCheckpoint(eager=False)  # bits + probe anti-join
+    members = materialize(members)  # bits + probe anti-join
     js = F.explode(F.array(*[F.lit(j) for j in range(_BLOOM_K)])).alias("j")
 
     def pos_expr():
@@ -735,11 +719,7 @@ FROM days ORDER BY day
 """
 
 
-@register(
-    "events_sliding_7d_distinct",
-    oracle=SLIDING_DISTINCT_ORACLE,
-    tags=("sketch", "bitmap", "timeseries"),
-)
+@register("events_sliding_7d_distinct", oracle=SLIDING_DISTINCT_ORACLE)
 def events_sliding_7d_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     per_day = ev.select(
@@ -747,7 +727,7 @@ def events_sliding_7d_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("user_id") / 63).cast("long").alias("w"),
         F.expr("shiftleft(1L, cast(user_id % 63 as int))").alias("bit"),
     ).groupBy("d", "w").agg(F.expr("bit_or(bit)").alias("bm"))
-    per_day = per_day.localCheckpoint(eager=False)  # grid + window branches
+    per_day = materialize(per_day)  # grid + window branches
     # dense day×word grid so the RANGE window sees every word on every day
     # (a word absent on day d but present within the window must still OR in)
     days = per_day.select("d").distinct()
@@ -834,11 +814,7 @@ ORDER BY l_returnflag, est.q
 """
 
 
-@register(
-    "sketch_histogram_quantiles",
-    oracle=HISTQ_ORACLE,
-    tags=("sketch", "quantile", "agg"),
-)
+@register("sketch_histogram_quantiles", oracle=HISTQ_ORACLE)
 def sketch_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     # r10 opt (§1a): three corpus passes consume this scan (min/max stats,
@@ -854,7 +830,7 @@ def sketch_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("l_extendedprice").alias("mn"), F.max("l_extendedprice").alias("mx")
     )
     w_expr = (F.col("mx") - F.col("mn")) / float(_HQ_BINS)
-    b = (
+    b = materialize(
         li.crossJoin(F.broadcast(stats))
         .select(
             F.col("l_returnflag").alias("g"),
@@ -867,8 +843,7 @@ def sketch_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("g", "bin")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)  # cum walk + group totals
-    )
+    )  # cum walk + group totals
     wc = W.partitionBy("g").orderBy("bin").rowsBetween(W.unboundedPreceding, 0)
     cum = b.select("g", "bin", "c", F.sum("c").over(wc).alias("cc"))
     ng = b.groupBy("g").agg(F.sum("c").cast("double").alias("n"))
@@ -1034,19 +1009,14 @@ ORDER BY est.source, est_count DESC, est.token
 """
 
 
-@register(
-    "sketch_cm_heavy_hitters_per_source",
-    oracle=CM_PER_SRC_ORACLE,
-    tags=("sketch", "countmin", "text"),
-)
+@register("sketch_cm_heavy_hitters_per_source", oracle=CM_PER_SRC_ORACLE)
 def sketch_cm_heavy_hitters_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    counts = (
+    counts = materialize(
         docs.select("source", F.explode(F.split("text", " ")).alias("token"))
         .groupBy("source", "token")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)  # cells + totals + estimate branches
-    )
+    )  # cells + totals + estimate branches
     totals = counts.groupBy("source").agg(F.sum("c").cast("double").alias("tot"))
     hashed = counts.select(
         "source",
@@ -1066,7 +1036,7 @@ def sketch_cm_heavy_hitters_per_source(spark: SparkSession, sf_dir: str) -> Data
         ).cast("long")
         % _CM_W,
     )
-    hashed = hashed.localCheckpoint(eager=False)
+    hashed = materialize(hashed)
     cells = hashed.groupBy("source", "j", "bucket").agg(
         F.sum("c").cast("long").alias("cell")
     )
@@ -1131,7 +1101,7 @@ ORDER BY priority
 """
 
 
-@register("sketch_kmv_distinct", oracle=KMV_ORACLE, tags=("sketch", "agg"))
+@register("sketch_kmv_distinct", oracle=KMV_ORACLE)
 def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -1139,7 +1109,7 @@ def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys = orders.select(
         F.col("o_orderpriority").alias("prio"), F.col("o_custkey").alias("k")
     ).distinct()
-    keys = keys.localCheckpoint(eager=False)  # exact + sketch branches
+    keys = materialize(keys)  # exact + sketch branches
     hashed = keys.select(
         "prio", "k",
         (
@@ -1218,7 +1188,7 @@ ORDER BY prio_a, prio_b
 """
 
 
-@register("sketch_kmv_jaccard", oracle=KMV_JACCARD_ORACLE, tags=("sketch", "setsim"))
+@register("sketch_kmv_jaccard", oracle=KMV_JACCARD_ORACLE)
 def sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -1226,7 +1196,7 @@ def sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys = orders.select(
         F.col("o_orderpriority").alias("prio"), F.col("o_custkey").alias("k")
     ).distinct()
-    keys = keys.localCheckpoint(eager=False)
+    keys = materialize(keys)
     prios = keys.select("prio").distinct()
     pairs = (
         prios.select(F.col("prio").alias("pa"))
@@ -1243,7 +1213,7 @@ def sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(F.when(F.col("prio") == F.col("pb"), 1).otherwise(0)).alias("in_b"),
         )
     )
-    un = un.localCheckpoint(eager=False)  # est + exact branches
+    un = materialize(un)  # est + exact branches
     v = F.conv(F.substring(F.md5(F.col("k").cast("string")), 1, 13), 16, 10).cast(
         "long"
     )
@@ -1313,7 +1283,7 @@ FROM exact CROSS JOIN med
 """
 
 
-@register("sketch_ams_f2_selfjoin", oracle=AMS_F2_ORACLE, tags=("sketch", "agg"))
+@register("sketch_ams_f2_selfjoin", oracle=AMS_F2_ORACLE)
 def sketch_ams_f2_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -1323,7 +1293,7 @@ def sketch_ams_f2_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = orders.select(
         "o_custkey", F.md5(F.col("o_custkey").cast("string")).alias("h")
     )
-    hashed = hashed.localCheckpoint(eager=False)  # sums + exact branches
+    hashed = materialize(hashed)  # sums + exact branches
 
     def sign(j: int):
         nib = F.conv(F.substring(F.col("h"), j // 4 + 1, 1), 16, 10).cast("long")
@@ -1409,11 +1379,7 @@ ORDER BY day
 """
 
 
-@register(
-    "sketch_kmv_rolling_distinct",
-    oracle=KMV_ROLLING_ORACLE,
-    tags=("sketch", "window", "agg"),
-)
+@register("sketch_kmv_rolling_distinct", oracle=KMV_ROLLING_ORACLE)
 def sketch_kmv_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -1428,7 +1394,7 @@ def sketch_kmv_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    days = days.localCheckpoint(eager=False)  # partial + exact branches
+    days = materialize(days)  # partial + exact branches
     wr = W.partitionBy("d").orderBy("v", "user_id")
     partials = (
         days.withColumn("rn", F.row_number().over(wr))
@@ -1524,7 +1490,7 @@ ORDER BY e.q
 """
 
 
-@register("sketch_ddsketch_quantiles", oracle=DDSKETCH_ORACLE, tags=("sketch",))
+@register("sketch_ddsketch_quantiles", oracle=DDSKETCH_ORACLE)
 def sketch_ddsketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_row_number
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..session import materialize
 from . import register
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -50,7 +51,7 @@ FROM events e
 """
 
 
-@register("asof_join_last_purchase", oracle=ASOF_ORACLE, tags=("timeseries", "asof", "window"))
+@register("asof_join_last_purchase", oracle=ASOF_ORACLE)
 def asof_join_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     w = (
@@ -98,7 +99,7 @@ ORDER BY event_type, bar_date
 """
 
 
-@register("ohlc_daily_resample", oracle=OHLC_ORACLE, tags=("timeseries", "ohlc", "agg"))
+@register("ohlc_daily_resample", oracle=OHLC_ORACLE)
 def ohlc_daily_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
@@ -154,7 +155,7 @@ ORDER BY user_id, session_idx
 """
 
 
-@register("events_sessionize_gap30m", oracle=SESSION_ORACLE, tags=("timeseries", "session", "window"))
+@register("events_sessionize_gap30m", oracle=SESSION_ORACLE)
 def events_sessionize_gap30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
@@ -190,7 +191,7 @@ ORDER BY window_start, event_type
 """
 
 
-@register("events_tumbling_6h", oracle=TUMBLE_ORACLE, tags=("timeseries", "streaming-twin", "agg"))
+@register("events_tumbling_6h", oracle=TUMBLE_ORACLE)
 def events_tumbling_6h(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return (
@@ -224,7 +225,7 @@ ORDER BY window_start
 """
 
 
-@register("events_sliding_1h_30m", oracle=SLIDE_ORACLE, tags=("timeseries", "streaming-twin", "agg"))
+@register("events_sliding_1h_30m", oracle=SLIDE_ORACLE)
 def events_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return (
@@ -259,7 +260,7 @@ WHERE user_id IS NOT NULL
 """
 
 
-@register("ingest_normalize_events", oracle=NORMALIZE_ORACLE, tags=("ingest", "projection"))
+@register("ingest_normalize_events", oracle=NORMALIZE_ORACLE)
 def ingest_normalize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # Mirrors reference app/alpaca_service.py:138-162 + :194 (upsert key) in
@@ -316,7 +317,7 @@ FROM events
 """
 
 
-@register("ingest_status_serving", oracle=STATUS_ORACLE, tags=("ingest", "status", "serving"))
+@register("ingest_status_serving", oracle=STATUS_ORACLE)
 def ingest_status_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row status record (GET "/" shape): last attempt/success
     timestamps, per-run counters, error channel count (R24), plus
@@ -346,7 +347,7 @@ def ingest_status_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     return status.crossJoin(F.broadcast(bars_count))
 
 
-@register("ingest_run_summary", oracle=SUMMARY_ORACLE, tags=("ingest", "agg"))
+@register("ingest_run_summary", oracle=SUMMARY_ORACLE)
 def ingest_run_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return (
@@ -405,11 +406,7 @@ ORDER BY user_id, hour_ts
 """
 
 
-@register(
-    "timeseries_gapfill_interpolate",
-    oracle=GAPFILL_ORACLE,
-    tags=("timeseries", "window", "gapfill"),
-)
+@register("timeseries_gapfill_interpolate", oracle=GAPFILL_ORACLE)
 def timeseries_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly resample of events (users < 20) with synthesized gap buckets,
     filled by LOCF and by linear interpolation between the neighboring
@@ -498,7 +495,7 @@ ORDER BY user_id, island
 """
 
 
-@register("events_scd2_history", oracle=SCD2_ORACLE, tags=("timeseries", "window", "scd2"))
+@register("events_scd2_history", oracle=SCD2_ORACLE)
 def events_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Type-2 slowly-changing-dimension history of each user's event_type
     state: one row per consecutive-state run with half-open validity."""
@@ -559,7 +556,7 @@ FROM s1 JOIN s2 USING (user_id) JOIN s3 USING (user_id)
 """
 
 
-@register("events_funnel_stages", oracle=FUNNEL_ORACLE, tags=("timeseries", "funnel", "window"))
+@register("events_funnel_stages", oracle=FUNNEL_ORACLE)
 def events_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered three-stage funnel (view → click → purchase) with per-user
     stage anchors as chained window minima — no self-joins."""
@@ -617,7 +614,7 @@ ORDER BY e.event_id
 """
 
 
-@register("events_anomaly_zscore", oracle=ANOMALY_ORACLE, tags=("timeseries", "stats"))
+@register("events_anomaly_zscore", oracle=ANOMALY_ORACLE)
 def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     stats = ev.groupBy("event_type").agg(
@@ -658,7 +655,7 @@ ORDER BY cohort_week, week_offset
 """
 
 
-@register("events_retention_cohorts", oracle=RETENTION_ORACLE, tags=("timeseries", "agg"))
+@register("events_retention_cohorts", oracle=RETENTION_ORACLE)
 def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     act = ev.select(
@@ -696,9 +693,7 @@ ORDER BY hour_bucket
 """
 
 
-@register(
-    "events_percentile_bands_hourly", oracle=PCT_BANDS_ORACLE, tags=("timeseries", "percentile")
-)
+@register("events_percentile_bands_hourly", oracle=PCT_BANDS_ORACLE)
 def events_percentile_bands_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return (
@@ -743,7 +738,7 @@ ORDER BY month
 """
 
 
-@register("events_dau_mau_stickiness", oracle=STICKINESS_ORACLE, tags=("timeseries", "agg"))
+@register("events_dau_mau_stickiness", oracle=STICKINESS_ORACLE)
 def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     dau = ev.groupBy(F.date_trunc("day", "ts").alias("d")).agg(
@@ -801,7 +796,7 @@ ORDER BY t.event_type, t.next_type
 """
 
 
-@register("events_markov_transitions", oracle=TRANSITION_ORACLE, tags=("timeseries", "window", "agg"))
+@register("events_markov_transitions", oracle=TRANSITION_ORACLE)
 def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -854,15 +849,13 @@ ORDER BY iso_dow
 """
 
 
-@register(
-    "events_dow_seasonality", oracle=DOW_SEASONALITY_ORACLE, tags=("timeseries", "agg")
-)
+@register("events_dow_seasonality", oracle=DOW_SEASONALITY_ORACLE)
 def events_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     daily = events.groupBy(
         F.date_trunc("day", "ts").cast("date").alias("day")
     ).agg(F.count(F.lit(1)).alias("c"))
-    daily = daily.localCheckpoint(eager=False)  # profile + overall branches
+    daily = materialize(daily)  # profile + overall branches
 
     def _r6(col):
         return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
@@ -924,11 +917,7 @@ FROM cum GROUP BY month ORDER BY month
 """
 
 
-@register(
-    "lineitem_transit_concurrency",
-    oracle=TRANSIT_CONCURRENCY_ORACLE,
-    tags=("timeseries", "interval"),
-)
+@register("lineitem_transit_concurrency", oracle=TRANSIT_CONCURRENCY_ORACLE)
 def lineitem_transit_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_running_sum
 
@@ -996,9 +985,7 @@ SELECT * FROM bands ORDER BY event_type, bar_date
 """
 
 
-@register(
-    "ohlc_bollinger_bands", oracle=BOLLINGER_ORACLE, tags=("timeseries", "ohlc", "window")
-)
+@register("ohlc_bollinger_bands", oracle=BOLLINGER_ORACLE)
 def ohlc_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
@@ -1082,9 +1069,7 @@ ORDER BY event_type, bar_date
 """
 
 
-@register(
-    "ohlc_rsi_drawdown", oracle=RSI_DRAWDOWN_ORACLE, tags=("timeseries", "ohlc", "window")
-)
+@register("ohlc_rsi_drawdown", oracle=RSI_DRAWDOWN_ORACLE)
 def ohlc_rsi_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
@@ -1171,9 +1156,7 @@ ORDER BY sym_a, sym_b
 """
 
 
-@register(
-    "ohlc_symbol_correlation", oracle=SYMBOL_CORR_ORACLE, tags=("timeseries", "ohlc", "agg")
-)
+@register("ohlc_symbol_correlation", oracle=SYMBOL_CORR_ORACLE)
 def ohlc_symbol_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
@@ -1190,7 +1173,7 @@ def ohlc_symbol_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "bar_date")
         .agg(F.max(F.when(F.col("rn_d") == 1, F.col("value"))).alias("close"))
     )
-    bars = bars.localCheckpoint(eager=False)  # both join sides
+    bars = materialize(bars)  # both join sides
     a = bars.select(
         F.col("event_type").alias("sym_a"), "bar_date", F.col("close").alias("ca")
     )
@@ -1260,9 +1243,7 @@ ORDER BY event_type, week_start
 """
 
 
-@register(
-    "ohlc_weekly_rollup", oracle=WEEKLY_BARS_ORACLE, tags=("timeseries", "ohlc", "agg")
-)
+@register("ohlc_weekly_rollup", oracle=WEEKLY_BARS_ORACLE)
 def ohlc_weekly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
@@ -1388,7 +1369,7 @@ FROM tr ORDER BY event_type, bar_date
 """
 
 
-@register("ohlc_atr14", oracle=ATR_ORACLE, tags=("timeseries", "ohlc", "window"))
+@register("ohlc_atr14", oracle=ATR_ORACLE)
 def ohlc_atr14(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Average True Range (14-bar): TR = max(high-low, |high-prev_close|,
     |low-prev_close|) (first bar falls back to high-low), ATR = 14-bar SMA
@@ -1440,9 +1421,7 @@ FROM k ORDER BY event_type, bar_date
 """
 
 
-@register(
-    "ohlc_stochastic_kd", oracle=STOCH_ORACLE, tags=("timeseries", "ohlc", "window")
-)
+@register("ohlc_stochastic_kd", oracle=STOCH_ORACLE)
 def ohlc_stochastic_kd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stochastic oscillator: %K = 100·(close − 14-bar low) / (14-bar range)
     (flat channel pins to 50 — defined, not a divide-by-zero), %D = 3-bar
@@ -1485,7 +1464,7 @@ FROM d ORDER BY event_type, bar_date
 """
 
 
-@register("ohlc_obv", oracle=OBV_ORACLE, tags=("timeseries", "ohlc", "window"))
+@register("ohlc_obv", oracle=OBV_ORACLE)
 def ohlc_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """On-balance volume: running sum of sign(close change) × bar volume —
     the classic volume-flow confirmation indicator. The running sum is an
@@ -1532,11 +1511,7 @@ FROM b ORDER BY event_type, bar_date
 """
 
 
-@register(
-    "ohlc_candlestick_flags",
-    oracle=CANDLE_ORACLE,
-    tags=("timeseries", "ohlc", "window"),
-)
+@register("ohlc_candlestick_flags", oracle=CANDLE_ORACLE)
 def ohlc_candlestick_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candlestick pattern screen per bar: doji (body ≤ 10% of range),
     hammer (long lower shadow, tiny upper), bullish/bearish engulfing
@@ -1622,9 +1597,7 @@ ORDER BY user_id, view_id
 """
 
 
-@register(
-    "events_sequence_detect", oracle=SEQ_ORACLE, tags=("timeseries", "window", "pattern")
-)
+@register("events_sequence_detect", oracle=SEQ_ORACLE)
 def events_sequence_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1686,9 +1659,7 @@ FROM idx GROUP BY event_type ORDER BY event_type
 """
 
 
-@register(
-    "ohlc_trend_forecast", oracle=TREND_ORACLE, tags=("timeseries", "ohlc", "stats")
-)
+@register("ohlc_trend_forecast", oracle=TREND_ORACLE)
 def ohlc_trend_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars = _daily_bars(spark, sf_dir)
     w = W.partitionBy("event_type").orderBy("bar_date")
@@ -1749,11 +1720,7 @@ ORDER BY day
 """
 
 
-@register(
-    "events_seasonal_decomposition",
-    oracle=DECOMP_ORACLE,
-    tags=("timeseries", "window", "stats"),
-)
+@register("events_seasonal_decomposition", oracle=DECOMP_ORACLE)
 def events_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.date_trunc("day", "ts").alias("d")).agg(
@@ -1769,7 +1736,7 @@ def events_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame
         F.avg("y").over(wt).alias("trend"),
         F.dayofweek("d").alias("dow"),
     ).withColumn("detr", F.col("y") - F.col("trend"))
-    det = det.localCheckpoint(eager=False)  # seasonal fit + output join
+    det = materialize(det)  # seasonal fit + output join
     s0 = det.groupBy("dow").agg(F.avg("detr").alias("s_raw"))
     s_mean = s0.agg(F.avg("s_raw").alias("m"))
     s = s0.crossJoin(F.broadcast(s_mean)).select(
@@ -1816,11 +1783,7 @@ GROUP BY event_type ORDER BY event_type
 """
 
 
-@register(
-    "events_seasonal_naive_backtest",
-    oracle=SNAIVE_ORACLE,
-    tags=("timeseries", "forecast", "stats"),
-)
+@register("events_seasonal_naive_backtest", oracle=SNAIVE_ORACLE)
 def events_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
@@ -1867,9 +1830,7 @@ FROM l GROUP BY event_type ORDER BY event_type
 """
 
 
-@register(
-    "events_autocorrelation", oracle=ACF_ORACLE, tags=("timeseries", "stats")
-)
+@register("events_autocorrelation", oracle=ACF_ORACLE)
 def events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
@@ -1934,11 +1895,7 @@ ORDER BY s.event_type
 """
 
 
-@register(
-    "ohlc_theil_sen_trend",
-    oracle=THEIL_SEN_ORACLE,
-    tags=("timeseries", "ohlc", "stats"),
-)
+@register("ohlc_theil_sen_trend", oracle=THEIL_SEN_ORACLE)
 def ohlc_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars = _daily_bars(spark, sf_dir).select(
         "event_type",
@@ -1948,7 +1905,7 @@ def ohlc_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         "close",
     )
     # bars feeds the pair self-join twice plus the intercept pass
-    bars = bars.localCheckpoint(eager=False)
+    bars = materialize(bars)
     a = bars.select("event_type", F.col("x").alias("xa"), F.col("close").alias("ca"))
     b = bars.select("event_type", F.col("x").alias("xb"), F.col("close").alias("cb"))
     slopes = (
@@ -2024,7 +1981,7 @@ ORDER BY period_days
 """
 
 
-@register("events_dft_periodogram", oracle=DFT_ORACLE, tags=("timeseries", "stats"))
+@register("events_dft_periodogram", oracle=DFT_ORACLE)
 def events_dft_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
@@ -2038,7 +1995,7 @@ def events_dft_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = daily.select(
         "y", (F.row_number().over(wd) - 1).cast("double").alias("t")
     )
-    idx = idx.localCheckpoint(eager=False)
+    idx = materialize(idx)
     mu = idx.agg(F.avg("y").alias("my"), F.count(F.lit(1)).alias("n"))
     periods = (
         ev.sparkSession.range(2, 15)
@@ -2101,11 +2058,7 @@ FROM e
 """
 
 
-@register(
-    "asof_join_with_tolerance",
-    oracle=ASOF_TOLERANCE_ORACLE,
-    tags=("timeseries", "asof", "window"),
-)
+@register("asof_join_with_tolerance", oracle=ASOF_TOLERANCE_ORACLE)
 def asof_join_with_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn(
         "us", F.unix_micros("ts")
@@ -2152,11 +2105,7 @@ FROM comp
 """
 
 
-@register(
-    "events_seasonal_strength",
-    oracle=STRENGTH_ORACLE,
-    tags=("timeseries", "stats"),
-)
+@register("events_seasonal_strength", oracle=STRENGTH_ORACLE)
 def events_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = events_seasonal_decomposition(spark, sf_dir)
     return comp.agg(
@@ -2223,11 +2172,7 @@ FROM fit WHERE i = n_days ORDER BY event_type
 """
 
 
-@register(
-    "events_holt_linear_forecast",
-    oracle=HOLT_ORACLE,
-    tags=("timeseries", "forecast", "stats"),
-)
+@register("events_holt_linear_forecast", oracle=HOLT_ORACLE)
 def events_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(

@@ -29,7 +29,7 @@ WHERE l_orderkey % 17 = 0
 """
 
 
-@register("udf_vectorized_scalar", oracle=SCALAR_UDF_ORACLE, tags=("udf",))
+@register("udf_vectorized_scalar", oracle=SCALAR_UDF_ORACLE)
 def udf_vectorized_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     @F.pandas_udf("double")
     def charged(price: pd.Series, disc: pd.Series, tax: pd.Series) -> pd.Series:
@@ -55,7 +55,7 @@ FROM customer
 """
 
 
-@register("udf_grouped_map_zscore", oracle=ZSCORE_ORACLE, tags=("udf", "window"))
+@register("udf_grouped_map_zscore", oracle=ZSCORE_ORACLE)
 def udf_grouped_map_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     def zscore(pdf: pd.DataFrame) -> pd.DataFrame:
         mean, std = pdf["c_acctbal"].mean(), pdf["c_acctbal"].std(ddof=1)
@@ -87,7 +87,7 @@ ORDER BY l_returnflag
 """
 
 
-@register("udf_grouped_agg_weighted_avg", oracle=WAVG_ORACLE, tags=("udf", "agg"))
+@register("udf_grouped_agg_weighted_avg", oracle=WAVG_ORACLE)
 def udf_grouped_agg_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     @F.pandas_udf("double")
     def wavg(price: pd.Series, qty: pd.Series) -> float:
@@ -115,7 +115,7 @@ WHERE doc_id < 20
 """
 
 
-@register("udtf_token_expand", oracle=UDTF_ORACLE, tags=("udf", "udtf"))
+@register("udtf_token_expand", oracle=UDTF_ORACLE)
 def udtf_token_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import udtf
 
@@ -150,7 +150,7 @@ ORDER BY event_id
 """
 
 
-@register("udf_map_in_arrow", oracle=MAP_IN_ARROW_ORACLE, tags=("udf", "arrow"))
+@register("udf_map_in_arrow", oracle=MAP_IN_ARROW_ORACLE)
 def udf_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
 

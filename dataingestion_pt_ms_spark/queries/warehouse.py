@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..session import materialize
 from . import register
 
 
@@ -73,7 +74,7 @@ ORDER BY k
 """
 
 
-@register("cdc_merge_apply", oracle=CDC_ORACLE, tags=("warehouse", "cdc", "merge"))
+@register("cdc_merge_apply", oracle=CDC_ORACLE)
 def cdc_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     cutoff = F.lit("1998-01-01").cast("timestamp")
@@ -116,11 +117,10 @@ def cdc_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # upsert branch — materialize so the 3-way log union + last-wins
     # window runs once per invocation instead of twice (14 parquet scans
     # in the before-plan)
-    final_log = (
+    final_log = materialize(
         log.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn", "seq")
-        .localCheckpoint(eager=False)
     )
     untouched = snap.join(final_log.select("k"), "k", "left_anti").select(
         "k", "price", F.lit("snap").alias("src")
@@ -172,11 +172,7 @@ ORDER BY err.error_id
 _BIN_SEC = 1200  # 20 minutes == interval width => <= 2 bins per interval
 
 
-@register(
-    "join_interval_binned_error_window",
-    oracle=INTERVAL_BINNED_ORACLE,
-    tags=("join", "range", "binned", "scale"),
-)
+@register("join_interval_binned_error_window", oracle=INTERVAL_BINNED_ORACLE)
 def join_interval_binned_error_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     err = events.filter(F.col("event_type") == "error").select(
@@ -270,11 +266,7 @@ ORDER BY p.user_id
 """
 
 
-@register(
-    "events_touch_attribution",
-    oracle=ATTRIBUTION_ORACLE,
-    tags=("timeseries", "window", "attribution"),
-)
+@register("events_touch_attribution", oracle=ATTRIBUTION_ORACLE)
 def events_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
@@ -344,11 +336,7 @@ ORDER BY k
 """
 
 
-@register(
-    "warehouse_snapshot_diff",
-    oracle=SNAPSHOT_DIFF_ORACLE,
-    tags=("warehouse", "diff", "cdc"),
-)
+@register("warehouse_snapshot_diff", oracle=SNAPSHOT_DIFF_ORACLE)
 def warehouse_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     old = orders.filter(
@@ -450,7 +438,7 @@ ORDER BY check_name
 """
 
 
-@register("warehouse_dq_checks", oracle=DQ_ORACLE, tags=("warehouse", "quality"))
+@register("warehouse_dq_checks", oracle=DQ_ORACLE)
 def warehouse_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
@@ -568,7 +556,7 @@ ORDER BY zbucket
 """
 
 
-@register("warehouse_zorder_layout", oracle=ZORDER_ORACLE, tags=("warehouse", "layout"))
+@register("warehouse_zorder_layout", oracle=ZORDER_ORACLE)
 def warehouse_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     dims = orders.select(
@@ -617,11 +605,11 @@ FROM tot CROSS JOIN top
 """
 
 
-@register("warehouse_key_skew_audit", oracle=SKEW_AUDIT_ORACLE, tags=("warehouse", "audit"))
+@register("warehouse_key_skew_audit", oracle=SKEW_AUDIT_ORACLE)
 def warehouse_key_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     kc = events.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
-    kc = kc.localCheckpoint(eager=False)  # three consumers below
+    kc = materialize(kc)  # three consumers below
     tot = kc.agg(
         F.count(F.lit(1)).alias("n_keys"),
         F.sum("c").alias("n_rows"),
@@ -689,7 +677,7 @@ FROM cls GROUP BY abc_class ORDER BY abc_class
 """
 
 
-@register("orders_abc_pareto_classes", oracle=ABC_ORACLE, tags=("warehouse", "agg"))
+@register("orders_abc_pareto_classes", oracle=ABC_ORACLE)
 def orders_abc_pareto_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_running_sum
 
@@ -743,7 +731,7 @@ GROUP BY tier ORDER BY tier
 """
 
 
-@register("join_broadcast_range_lookup", oracle=RANGE_LOOKUP_ORACLE, tags=("join", "range"))
+@register("join_broadcast_range_lookup", oracle=RANGE_LOOKUP_ORACLE)
 def join_broadcast_range_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     tiers = spark.createDataFrame(_TIERS, "tier string, lo double, hi double")
@@ -795,7 +783,7 @@ FROM t ORDER BY digit
 """
 
 
-@register("warehouse_benford_audit", oracle=BENFORD_ORACLE, tags=("warehouse", "dq"))
+@register("warehouse_benford_audit", oracle=BENFORD_ORACLE)
 def warehouse_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     digit = F.substring(
@@ -850,9 +838,7 @@ ORDER BY o_orderpriority, order_month
 """
 
 
-@register(
-    "warehouse_incremental_mv", oracle=INCR_MV_ORACLE, tags=("warehouse", "agg")
-)
+@register("warehouse_incremental_mv", oracle=INCR_MV_ORACLE)
 def warehouse_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     # deterministic split standing in for "yesterday's MV" + "today's delta"
@@ -940,11 +926,7 @@ ORDER BY f.event_id
 """.replace("{TSF}", "%Y-%m-%d %H:%M:%S.%f")
 
 
-@register(
-    "join_scd2_point_in_time",
-    oracle=SCD2_PIT_ORACLE,
-    tags=("warehouse", "join", "scd2"),
-)
+@register("join_scd2_point_in_time", oracle=SCD2_PIT_ORACLE)
 def join_scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     ev = load_table(spark, sf_dir, "events")
@@ -1035,11 +1017,7 @@ FROM j
 """
 
 
-@register(
-    "join_cardinality_estimate",
-    oracle=CARD_EST_ORACLE,
-    tags=("warehouse", "join", "stats"),
-)
+@register("join_cardinality_estimate", oracle=CARD_EST_ORACLE)
 def join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
@@ -1091,11 +1069,7 @@ ORDER BY key_a, key_b
 """
 
 
-@register(
-    "orders_dup_invoice_screen",
-    oracle=DUP_INVOICE_ORACLE,
-    tags=("warehouse", "dq", "join"),
-)
+@register("orders_dup_invoice_screen", oracle=DUP_INVOICE_ORACLE)
 def orders_dup_invoice_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     a = orders.select(
@@ -1154,7 +1128,7 @@ FROM s
 """
 
 
-@register("orders_gini_concentration", oracle=GINI_ORACLE, tags=("warehouse", "stats"))
+@register("orders_gini_concentration", oracle=GINI_ORACLE)
 def orders_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_row_number
 
@@ -1208,11 +1182,7 @@ GROUP BY qs.q ORDER BY qs.q
 """
 
 
-@register(
-    "agg_weighted_percentile",
-    oracle=WEIGHTED_PCTL_ORACLE,
-    tags=("agg", "percentile", "stats"),
-)
+@register("agg_weighted_percentile", oracle=WEIGHTED_PCTL_ORACLE)
 def agg_weighted_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_running_sum
 
@@ -1224,7 +1194,7 @@ def agg_weighted_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("wt"))
     )
     cum = global_running_sum(w, "wt", [F.col("v"), F.col("c_custkey")], out_col="cw")
-    cum = cum.localCheckpoint(eager=False)  # totals + crossing branches
+    cum = materialize(cum)  # totals + crossing branches
     tot = cum.agg(F.sum("wt").alias("tot"))
     qs = F.broadcast(
         cust.sparkSession.createDataFrame([(0.25,), (0.5,), (0.75,)], "q double")
@@ -1268,7 +1238,7 @@ ORDER BY a.custkey
 """
 
 
-@register("orders_pareto_skyline", oracle=SKYLINE_ORACLE, tags=("warehouse", "stats"))
+@register("orders_pareto_skyline", oracle=SKYLINE_ORACLE)
 def orders_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_running_max
 
@@ -1300,9 +1270,9 @@ def orders_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exclusive prefix max over STRICTLY better spend = inclusive prefix of
     # the previous distinct-spend row, fetched by rank EQUI-JOIN (rk = rk−1)
     # on the distributed global row number — no unpartitioned lag window
-    ranked = global_row_number(
-        ranked, [F.col("spend").desc()], out_col="rk"
-    ).localCheckpoint(eager=False)
+    ranked = materialize(
+        global_row_number(ranked, [F.col("spend").desc()], out_col="rk")
+    )
     excl = ranked.select("spend", "best_n", (F.col("rk") - 1).alias("prk")).join(
         ranked.select(F.col("rk").alias("prk"), F.col("prefix_best").alias("excl_best")),
         "prk",
@@ -1348,7 +1318,7 @@ ORDER BY per.event_type
 """
 
 
-@register("events_freshness_lag", oracle=FRESHNESS_ORACLE, tags=("warehouse", "dq"))
+@register("events_freshness_lag", oracle=FRESHNESS_ORACLE)
 def events_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     ev = load_table(spark, sf_dir, "events")
@@ -1399,13 +1369,13 @@ FROM cells
 """
 
 
-@register("part_chi_square_independence", oracle=CHI2_ORACLE, tags=("warehouse", "stats"))
+@register("part_chi_square_independence", oracle=CHI2_ORACLE)
 def part_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
     o = part.groupBy(
         F.col("p_type").alias("a"), F.col("p_brand").alias("b")
     ).agg(F.count(F.lit(1)).cast("double").alias("n"))
-    o = o.localCheckpoint(eager=False)  # marginals + cells branches
+    o = materialize(o)  # marginals + cells branches
     ra = o.groupBy("a").agg(F.sum("n").alias("na"))
     rb = o.groupBy("b").agg(F.sum("n").alias("nb"))
     tot = o.agg(F.sum("n").alias("t"))
@@ -1479,9 +1449,7 @@ ORDER BY class_before, class_after
 """
 
 
-@register(
-    "orders_abc_migration", oracle=ABC_MIGRATION_ORACLE, tags=("warehouse", "agg")
-)
+@register("orders_abc_migration", oracle=ABC_MIGRATION_ORACLE)
 def orders_abc_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_running_sum
 
@@ -1498,7 +1466,7 @@ def orders_abc_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
             [F.col("revenue").desc(), F.col("o_custkey")],
             out_col="cum_rev",
         )
-        cum = cum.localCheckpoint(eager=False)
+        cum = materialize(cum)
         tot = cum.agg(F.sum("revenue").alias("tot_rev"))
         share = F.col("cum_rev").cast("double") / F.col("tot_rev").cast("double")
         return (
@@ -1552,9 +1520,7 @@ FROM lat GROUP BY prio ORDER BY prio
 """
 
 
-@register(
-    "orders_cycle_time", oracle=CYCLE_ORACLE, tags=("warehouse", "percentile")
-)
+@register("orders_cycle_time", oracle=CYCLE_ORACLE)
 def orders_cycle_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
@@ -1616,11 +1582,7 @@ ORDER BY priority, segment
 """
 
 
-@register(
-    "orders_cramers_v_association",
-    oracle=CRAMERS_V_ORACLE,
-    tags=("warehouse", "stats"),
-)
+@register("orders_cramers_v_association", oracle=CRAMERS_V_ORACLE)
 def orders_cramers_v_association(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority")
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
@@ -1628,7 +1590,7 @@ def orders_cramers_v_association(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("a"), F.col("c_mktsegment").alias("b")
     )
     o = j.groupBy("a", "b").agg(F.count(F.lit(1)).cast("double").alias("n"))
-    o = o.localCheckpoint(eager=False)  # marginals + cells branches
+    o = materialize(o)  # marginals + cells branches
     ra = o.groupBy("a").agg(F.sum("n").alias("na"))
     rb = o.groupBy("b").agg(F.sum("n").alias("nb"))
     tot = o.agg(F.sum("n").alias("t"))
@@ -1643,7 +1605,7 @@ def orders_cramers_v_association(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("na") * F.col("nb") / F.col("t")).alias("e"),
         )
     )
-    cells = cells.localCheckpoint(eager=False)  # stat + output branches
+    cells = materialize(cells)  # stat + output branches
     stat = (
         cells.agg(
             F.sum((F.col("n") - F.col("e")) * (F.col("n") - F.col("e")) / F.col("e")).alias("chi_sq"),
@@ -1708,7 +1670,7 @@ ORDER BY priority
 """
 
 
-@register("orders_moments_profile", oracle=MOMENTS_ORACLE, tags=("warehouse", "stats"))
+@register("orders_moments_profile", oracle=MOMENTS_ORACLE)
 def orders_moments_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("prio"),
@@ -1773,7 +1735,7 @@ ORDER BY o_orderkey
 """
 
 
-@register("orders_business_day_due", oracle=BUSDAY_ORACLE, tags=("warehouse", "datetime"))
+@register("orders_business_day_due", oracle=BUSDAY_ORACLE)
 def orders_business_day_due(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -1864,7 +1826,7 @@ ORDER BY layout, column_name
 """
 
 
-@register("warehouse_rle_layout_audit", oracle=RLE_ORACLE, tags=("warehouse", "storage"))
+@register("warehouse_rle_layout_audit", oracle=RLE_ORACLE)
 def warehouse_rle_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -1878,7 +1840,7 @@ def warehouse_rle_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_orderkey").alias("ok"),
         F.col("l_linenumber").alias("ln"),
     )
-    li = li.localCheckpoint(eager=False)  # two layout passes
+    li = materialize(li)  # two layout passes
 
     def runs_for(layout: str, bucket_col: str):
         # ONE window pass computes all four columns' run breaks (the
@@ -1954,9 +1916,7 @@ ORDER BY part, grp
 """
 
 
-@register(
-    "warehouse_compaction_plan", oracle=COMPACTION_PLAN_ORACLE, tags=("warehouse",)
-)
+@register("warehouse_compaction_plan", oracle=COMPACTION_PLAN_ORACLE)
 def warehouse_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     files = orders.groupBy(
@@ -2033,9 +1993,7 @@ ORDER BY nation
 """
 
 
-@register(
-    "warehouse_k_anonymity_audit", oracle=K_ANONYMITY_ORACLE, tags=("warehouse",)
-)
+@register("warehouse_k_anonymity_audit", oracle=K_ANONYMITY_ORACLE)
 def warehouse_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
@@ -2111,11 +2069,7 @@ ORDER BY l.event_id
 """.format(tsfmt="%Y-%m-%d %H:%M:%S.%f")
 
 
-@register(
-    "warehouse_feature_store_pit_matrix",
-    oracle=PIT_MATRIX_ORACLE,
-    tags=("warehouse", "ml", "asof"),
-)
+@register("warehouse_feature_store_pit_matrix", oracle=PIT_MATRIX_ORACLE)
 def warehouse_feature_store_pit_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn("us", F.unix_micros("ts"))
     w_rows = (
@@ -2192,13 +2146,13 @@ ORDER BY part
 """
 
 
-@register("warehouse_deletion_vectors_mor", oracle=DV_MOR_ORACLE, tags=("warehouse",))
+@register("warehouse_deletion_vectors_mor", oracle=DV_MOR_ORACLE)
 def warehouse_deletion_vectors_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     base = orders.select(
         F.date_format("o_orderdate", "yyyy-MM").alias("part"), "o_orderkey"
     )
-    base = base.localCheckpoint(eager=False)  # base + dv branches
+    base = materialize(base)  # base + dv branches
     dv = base.filter(F.col("o_orderkey") % 17 == 3).withColumn("_del", F.lit(1))
     stats = (
         base.join(dv, ["part", "o_orderkey"], "left")
@@ -2266,11 +2220,7 @@ FROM agg ORDER BY region
 """
 
 
-@register(
-    "warehouse_market_concentration",
-    oracle=HHI_ORACLE,
-    tags=("warehouse", "stats"),
-)
+@register("warehouse_market_concentration", oracle=HHI_ORACLE)
 def warehouse_market_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     supp = load_table(spark, sf_dir, "supplier")
@@ -2368,11 +2318,7 @@ ORDER BY 1, 2
 """
 
 
-@register(
-    "kafka_wire_events_parse",
-    oracle=KAFKA_WIRE_ORACLE,
-    tags=("source", "kafka", "streaming"),
-)
+@register("kafka_wire_events_parse", oracle=KAFKA_WIRE_ORACLE)
 def kafka_wire_events_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.kafka import kafka_records, parse_kafka_envelope
 
@@ -2432,11 +2378,7 @@ SELECT * FROM ok UNION ALL SELECT * FROM dead ORDER BY bucket
 """
 
 
-@register(
-    "events_dead_letter_audit",
-    oracle=DEAD_LETTER_ORACLE,
-    tags=("warehouse", "dq", "source"),
-)
+@register("events_dead_letter_audit", oracle=DEAD_LETTER_ORACLE)
 def events_dead_letter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
@@ -2511,11 +2453,7 @@ ORDER BY snapshot
 """
 
 
-@register(
-    "warehouse_txnlog_time_travel",
-    oracle=TXNLOG_TT_ORACLE,
-    tags=("warehouse", "merge", "sink", "audit"),
-)
+@register("warehouse_txnlog_time_travel", oracle=TXNLOG_TT_ORACLE)
 def warehouse_txnlog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
@@ -2606,11 +2544,7 @@ ORDER BY snapshot_label
 """
 
 
-@register(
-    "warehouse_txnlog_checkpoint_travel",
-    oracle=TXNLOG_CKPT_ORACLE,
-    tags=("warehouse", "merge", "sink", "audit"),
-)
+@register("warehouse_txnlog_checkpoint_travel", oracle=TXNLOG_CKPT_ORACLE)
 def warehouse_txnlog_checkpoint_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile

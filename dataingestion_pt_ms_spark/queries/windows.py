@@ -35,7 +35,7 @@ SELECT * FROM (
 """
 
 
-@register("window_rank_top_balances", oracle=RANK_ORACLE, tags=("window", "rank"))
+@register("window_rank_top_balances", oracle=RANK_ORACLE)
 def window_rank_top_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     by_bal = W.partitionBy("c_nationkey").orderBy(F.col("c_acctbal").desc())
@@ -66,7 +66,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 """
 
 
-@register("window_lag_lead_events", oracle=LAG_ORACLE, tags=("window", "timeseries"))
+@register("window_lag_lead_events", oracle=LAG_ORACLE)
 def window_lag_lead_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
@@ -92,7 +92,7 @@ FROM events
 """
 
 
-@register("window_moving_average", oracle=SMA_ORACLE, tags=("window", "timeseries"))
+@register("window_moving_average", oracle=SMA_ORACLE)
 def window_moving_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-4, 0)
@@ -116,7 +116,7 @@ FROM lineitem
 """
 
 
-@register("window_cumulative_range", oracle=CUMSUM_ORACLE, tags=("window",))
+@register("window_cumulative_range", oracle=CUMSUM_ORACLE)
 def window_cumulative_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     w = (
@@ -144,7 +144,7 @@ LIMIT 20
 """
 
 
-@register("topk_global_orders", oracle=TOPK_ORACLE, tags=("topk", "sort"))
+@register("topk_global_orders", oracle=TOPK_ORACLE)
 def topk_global_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     return (
@@ -166,7 +166,7 @@ SELECT * FROM (
 """
 
 
-@register("topk_per_brand_parts", oracle=TOPK_GRP_ORACLE, tags=("topk", "window"))
+@register("topk_per_brand_parts", oracle=TOPK_GRP_ORACLE)
 def topk_per_brand_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
     w = W.partitionBy("p_brand").orderBy(F.col("p_retailprice").desc(), "p_partkey")
@@ -192,7 +192,7 @@ ORDER BY s_acctbal DESC, s_suppkey
 """
 
 
-@register("sort_global_suppliers", oracle=SORT_ORACLE, tags=("sort",))
+@register("sort_global_suppliers", oracle=SORT_ORACLE)
 def sort_global_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load_table(spark, sf_dir, "supplier")
     return supp.select("s_suppkey", "s_name", "s_acctbal").orderBy(
@@ -221,9 +221,7 @@ ORDER BY user_id, event_id
 """
 
 
-@register(
-    "window_range_interval_frame", oracle=RANGE_FRAME_ORACLE, tags=("window", "range")
-)
+@register("window_range_interval_frame", oracle=RANGE_FRAME_ORACLE)
 def window_range_interval_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     # exact microsecond axis on BOTH sides: second-granular unix_timestamp

@@ -20,7 +20,7 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_parallelism() -> int:
@@ -247,12 +247,9 @@ def get_spark(
         # dedup family spends 2.9-6.8 s/invocation BUILDING its DataFrame
         # (vs 0.2-0.8 s executing it at sf0.1) and the flag alone cut
         # builds ~30-40 % (minhash_lsh 4.02->2.86 s, cluster_near_dups
-        # 9.50->5.87 s). Off in production; flip the env on when debugging
-        # a query and you want errors annotated with user-code call sites.
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("SPARK_GRAFT_DF_DEBUGGING", "false"),
-        )
+        # 9.50->5.87 s). Pinned off; a debugging session that wants errors
+        # annotated with user-code call sites passes it in ``extra_conf``.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         # events.ts is parquet TIMESTAMP(NANOS): Spark has no ns timestamp
         # type; read as long and normalize to µs in the catalog (matches
@@ -275,6 +272,29 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Materialize an intermediate and cut its lineage — the engine's one
+    way to do so, so the policy below is decided here and nowhere else.
+
+    Policy: executor-local blocks (``localCheckpoint``). The blocks live in
+    executor block storage and the plan above them is dropped, so a lost
+    executor fails the job instead of recomputing the intermediate.
+
+    ``eager=False`` (the default) stores the blocks on the first action
+    that reads them, so a multi-consumer intermediate is computed once at
+    no extra job. ``eager=True`` runs a job now; it is required where the
+    blocks must exist before the next statement:
+
+    - read-own-input staging (``sources/sinks.py``, ``streaming/jobs.py``):
+      the batch or table is snapshotted before the write that overwrites
+      what it was read from;
+    - iterative loops (``operators/clustering.py``, ``operators/graph.py``):
+      each round's state is stored as the round ends, so the plan stays
+      one round deep and the next probe or round reads stored blocks.
+    """
+    return df.localCheckpoint(eager=eager)
 
 
 if __name__ == "__main__":  # pragma: no cover - exercised via subprocess test

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 
 def _table_exists(spark: SparkSession, path: str) -> bool:
     """True if ``path`` holds a non-empty table, via the Hadoop FileSystem
@@ -117,7 +119,7 @@ def upsert_partitioned_parquet(
     # overwrite starts, so no task can observe the table mid-rewrite —
     # staging without the extra write+read round-trip of a temp
     # directory.
-    deduped = deduped.localCheckpoint(eager=True)
+    deduped = materialize(deduped, eager=True)
     (
         deduped.repartition(*partition_cols)
         .write.mode("overwrite")
@@ -273,7 +275,7 @@ def delete_keys_partitioned_parquet(
     remaining = affected.join(
         F.broadcast(scoped_keys), key_cols + partition_cols, "left_anti"
     )
-    remaining = remaining.localCheckpoint(eager=True)
+    remaining = materialize(remaining, eager=True)
     (
         remaining.repartition(*partition_cols)
         .write.mode("overwrite")
@@ -331,7 +333,7 @@ def seed_if_absent(
         to_insert = to_insert.join(
             F.broadcast(existing.distinct()), key_cols, "left_anti"
         )
-    to_insert = to_insert.localCheckpoint(eager=True)
+    to_insert = materialize(to_insert, eager=True)
     n = to_insert.count()
     if n:
         to_insert.write.mode("append").parquet(path)

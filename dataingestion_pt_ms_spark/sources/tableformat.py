@@ -49,6 +49,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from .sinks import _dedup_last_wins
 
 _LOG_DIR = "_txn_log"
@@ -360,11 +361,9 @@ def merge_into(
     # Materialize the deduped batch once (r10 opt): three consumers —
     # the min/max range probe, repartitionByRange's boundary SAMPLE pass,
     # and the data write — would otherwise each recompute the full batch
-    # lineage (scan + dedup window). Lazy localCheckpoint: the range
+    # lineage (scan + dedup window). Lazy materialize: the range
     # probe materializes it; the sample + write read the stored blocks.
-    batch_d = _dedup_last_wins(batch, key_cols, order_col).localCheckpoint(
-        eager=False
-    )
+    batch_d = materialize(_dedup_last_wins(batch, key_cols, order_col))
     live = live_files(spark, table)
     if not live:
         adds = _write_data_files(spark, batch_d, table, snapshot, stat_col)
@@ -394,12 +393,12 @@ def merge_into(
         )
         # the overlap read + union + last-writer window runs once (the
         # write's repartitionByRange sample pass would re-run it — r10 opt)
-        merged = merged.localCheckpoint(eager=False)
+        merged = materialize(merged)
     else:
         merged = batch_d
     # data files are immutable and invisible until the commit lands, so no
     # read-own-input staging is needed (the parquet upsert's eager
-    # localCheckpoint exists precisely because it rewrites in place)
+    # materialize exists precisely because it rewrites in place)
     adds = _write_data_files(spark, merged, table, snapshot, stat_col)
     _commit(
         spark,
@@ -446,8 +445,8 @@ def delete_keys(
     target = spark.read.option("mergeSchema", "true").parquet(
         *[f"{table}/{f['path']}" for f in overlap]
     )
-    kept = target.join(F.broadcast(keys_d), key_cols, "left_anti").localCheckpoint(
-        eager=False
+    kept = materialize(
+        target.join(F.broadcast(keys_d), key_cols, "left_anti")
     )  # one anti-join pass: the write's sample pass reads blocks (r10 opt)
     # no pre-count probe: _write_data_files returns [] when the rewrite is
     # empty (every row in the overlapping files was doomed)

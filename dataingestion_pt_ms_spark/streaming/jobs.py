@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 
 def tumbling_counts_stream(
     events: DataFrame,
@@ -163,69 +165,6 @@ def windowed_dedup_stream(
     return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
-def running_counts_tws_stream(events: DataFrame, key_col: str = "event_type") -> DataFrame:
-    """Same cumulative per-key aggregate as ``running_counts_stateful_stream``
-    but on the Spark 4 ``transformWithStateInPandas`` API — the successor to
-    applyInPandasWithState: typed composable state (ValueState/ListState/
-    MapState per named handle), explicit init/close lifecycle, timers, and
-    state-schema evolution support. Kept alongside the legacy operator so
-    both stateful surfaces stay exercised.
-
-    State is one (count, total) ValueState per key — O(keys) memory.
-
-    Runtime requirements (beyond applyInPandasWithState): the RocksDB state
-    store provider (`spark.sql.streaming.stateStore.providerClass` →
-    RocksDBStateStoreProvider — the HDFS-backed default lacks the
-    multi-column-family state this API stores handles in) and the
-    `protobuf` python package (the python<->JVM state-server protocol);
-    the engine test skips where protobuf is absent.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    state_schema = StructType(
-        [StructField("count", LongType()), StructField("total", DoubleType())]
-    )
-
-    class RunningCounts(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("agg", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            count, total = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                count += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((count, total))
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]],
-                    "running_count": [count],
-                    "running_total": [round(total, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(F.col(key_col)).transformWithStateInPandas(
-        statefulProcessor=RunningCounts(),
-        outputStructType="key string, running_count long, running_total double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def windowed_histogram_stream(
     events: DataFrame,
     window: str = "6 hours",
@@ -302,10 +241,11 @@ def streaming_incremental_dedup(
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        batch_df = batch_df.select(key_col, text_col).localCheckpoint()
-        sigs = minhash_signature(
-            batch_df, text_col, key_col, base_hash=base_hash
-        ).localCheckpoint()
+        batch_df = materialize(batch_df.select(key_col, text_col), eager=True)
+        sigs = materialize(
+            minhash_signature(batch_df, text_col, key_col, base_hash=base_hash),
+            eager=True,
+        )
         # intra-batch pass: the batch against its own signatures, upper
         # triangle only (ADVICE r3, low — same-trigger near-dups were
         # previously invisible)
@@ -424,12 +364,14 @@ def incremental_mv_stream(
     partials algebra warehouse_incremental_mv attests in batch), so the MV
     is always equal to a from-scratch aggregate over everything ingested.
 
-    Crash discipline: the existing MV is eagerly localCheckpoint'd before
-    the overwrite (read-own-input hazard — same rule as the upsert sink);
-    an epoch replay recomputes the SAME merge because the checkpoint
-    replays the identical batch. DECIMAL sums make the merge result
-    independent of arrival order, so any interleaving of batches converges
-    to the batch-twin answer exactly.
+    Crash discipline: the existing MV is eagerly materialized before the
+    overwrite (read-own-input hazard — same rule as the upsert sink).
+    DECIMAL sums make the merge result independent of arrival order, so
+    any interleaving of batches converges to the batch-twin answer
+    exactly. The merge is NOT replay-safe: foreachBatch is at-least-once,
+    and the MV does not record which epochs it has merged, so an epoch
+    whose MV write landed but whose commit did not is merged a second
+    time on restart and its rows are counted twice.
 
     At 100 TB: per trigger the work is O(batch) + one MV-sized merge; the
     MV itself is group-cardinality-sized (priorities × months), never
@@ -453,7 +395,7 @@ def incremental_mv_stream(
             return
         delta = agg(batch_df)
         if _table_exists(spark, mv_path):
-            existing = spark.read.parquet(mv_path).localCheckpoint(eager=True)
+            existing = materialize(spark.read.parquet(mv_path), eager=True)
             merged = (
                 existing.withColumnsRenamed({"n_orders": "n_b", "revenue": "r_b"})
                 .join(

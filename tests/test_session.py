@@ -7,8 +7,10 @@ JVM's config)."""
 
 from __future__ import annotations
 
+import ast
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -173,3 +175,23 @@ spark.stop()
     assert "spark.executor.cores = 5" in out
     assert "spark.sql.shuffle.partitions = 120" in out  # 2 * 12 * 5
     assert "spark.sql.files.maxPartitionBytes = 128m" in out
+
+
+def test_localcheckpoint_only_inside_materialize():
+    """``session.materialize`` owns the materialization policy: no other
+    code in the package may reach ``localCheckpoint`` directly."""
+    pkg = Path(__file__).resolve().parent.parent / "dataingestion_pt_ms_spark"
+    allowed, stray = [], []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        inside = set()
+        for fn in ast.walk(tree):
+            if isinstance(fn, ast.FunctionDef) and fn.name == "materialize":
+                inside.update(id(n) for n in ast.walk(fn))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr == "localCheckpoint":
+                site = f"{path.relative_to(pkg)}:{node.lineno}"
+                ok = path.name == "session.py" and id(node) in inside
+                (allowed if ok else stray).append(site)
+    assert len(allowed) == 1, allowed
+    assert not stray, f"call session.materialize instead: {stray}"

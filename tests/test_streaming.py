@@ -602,68 +602,6 @@ def test_stream_stream_left_outer_join(spark, tmp_path):
     assert (1, None) not in rows     # matched click must NOT also emit null
 
 
-def test_transform_with_state_running_counts(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 typed-state API): same cumulative
-    per-key counts contract as the applyInPandasWithState test — ValueState
-    carries (count, total) across two single-file micro-batches.
-
-    The API's python<->JVM state protocol is protobuf-based; skip where
-    protobuf isn't installed (this sandbox: no pip install allowed)."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf", reason="transformWithState needs protobuf for its state protocol"
-    )
-    import glob
-    import os
-    import time
-
-    from dataingestion_pt_ms_spark.streaming.jobs import running_counts_tws_stream
-
-    src = str(tmp_path / "tws_src")
-    os.makedirs(src)
-    t0 = dt.datetime(2024, 1, 1, tzinfo=UTC)
-    b0 = [(1, t0, 1, "click", 1.0), (2, t0, 1, "click", 2.0), (3, t0, 1, "buy", 5.0)]
-    b1 = [(4, t0, 1, "click", 3.0)]
-    now = time.time()
-    for i, rows in enumerate([b0, b1]):
-        stage = str(tmp_path / f"tws_st{i}")
-        spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.parquet(stage)
-        dest = f"{src}/{i}.parquet"
-        shutil.copyfile(glob.glob(f"{stage}/part-*.parquet")[0], dest)
-        os.utime(dest, (now - 200 + i * 100, now - 200 + i * 100))
-    stream = stream_from_dir(spark, src, EVENTS_SCHEMA, max_files_per_trigger=1)
-    # transformWithState requires the RocksDB state store (the HDFS-backed
-    # default doesn't implement multi-column-family state)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            running_counts_tws_stream(stream)
-            .writeStream.format("memory")
-            .queryName("tws_out")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    rows = spark.sql("SELECT * FROM tws_out").collect()
-    latest = {}
-    for r in rows:
-        latest[r.key] = max(latest.get(r.key, 0), r.running_count)
-    assert latest == {"click": 3, "buy": 1}
-    totals = {r.key: r.running_total for r in rows if r.running_count == latest[r.key]}
-    assert totals == {"click": 6.0, "buy": 5.0}
-
-
 def test_streaming_state_conf_lands_in_fresh_checkpoint(spark, events_dir, tmp_path):
     """The §17c sizing knob end-to-end (round 10, VERDICT r9 #1): the
     partition count streaming_state_conf selects is what a FRESH
@@ -1119,8 +1057,7 @@ def test_rocksdb_state_store_matches_default(spark, events_dir, tmp_path):
     RocksDB spills to local disk with changelog checkpointing) must be a
     pure swap: the same stateful dedup over the same input produces the
     IDENTICAL result set under both providers. Runs on dropDuplicates
-    state, so it exercises the provider without the protobuf-gated
-    transformWithState path."""
+    state."""
     from dataingestion_pt_ms_spark.streaming.jobs import stateful_dedup_stream
 
     def run(provider, name):
