@@ -493,10 +493,6 @@ def cross_corpus_near_dups(
     rows = num_perm // bands
     if corpus_sigs is None:
         reps, members = collapse_exact(corpus, text_col, key_col)
-        # the (rep, member) map is two longs per doc and column pruning keeps
-        # its collapse shuffle text-free — checkpointing it stops the hit
-        # expansion from re-running the collapse join
-        members = materialize(members)
         sig_c = minhash_signature(reps, text_col, key_col, num_perm, shingle_k, base_hash)
     else:
         members = None

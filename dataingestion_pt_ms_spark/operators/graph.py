@@ -359,7 +359,7 @@ def triangle_counts(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFra
         .join(deg.withColumnsRenamed({"node": "v", "deg": "deg_v"}), "v")
     )
     u_first = F.struct(F.col("deg_u"), F.col("u")) < F.struct(F.col("deg_v"), F.col("v"))
-    oriented = materialize(
+    oriented = (
         with_deg.select(
             F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("d"),
@@ -708,7 +708,7 @@ def personalized_pagerank(
     )
     ns = sd.agg(F.count("*").cast("double").alias("_ns"))
     outw = e.groupBy("_s").agg(F.sum("_w").alias("_wout")).filter(F.col("_wout") != 0)
-    t = materialize(
+    t = (
         nodes.join(sd.withColumn("_is_seed", F.lit(1)), "node", "left")
         .crossJoin(F.broadcast(ns))
         .select(
@@ -855,7 +855,7 @@ def hits(
             "node", F.coalesce("_hr", F.lit(0.0)).alias("_hr")
         )
         h_nrm = h_all.agg(F.sqrt(F.sum(F.col("_hr") * F.col("_hr"))).alias("_n"))
-        h = materialize(
+        h = (
             h_all.crossJoin(F.broadcast(h_nrm))
             .select(
                 "node",

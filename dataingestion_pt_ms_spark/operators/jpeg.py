@@ -60,7 +60,6 @@ def _make_zigzag() -> np.ndarray:
 
 
 ZIGZAG = _make_zigzag()
-UNZIGZAG = np.argsort(ZIGZAG)
 
 # Annex-K base quantization tables (public spec constants).
 QUANT_LUM = np.array(

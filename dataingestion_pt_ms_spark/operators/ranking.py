@@ -413,113 +413,6 @@ def global_islands(
     )
 
 
-def _non_null_values(df: DataFrame, value_col: str) -> DataFrame:
-    """Drop NULL (and, for float/double columns, NaN) ``value_col`` rows —
-    the shared precondition of the histogram k-th selectors: both rank
-    among orderable values only, like SQL's ordered-set aggregates."""
-    v = F.col(value_col)
-    cond = v.isNotNull()
-    if dict(df.dtypes).get(value_col) in ("float", "double"):
-        cond = cond & ~F.isnan(v)
-    return df.where(cond)
-
-
-def histogram_select_kth(
-    df: DataFrame,
-    value_col: str,
-    k_frame: DataFrame,
-    out_col: str = "kth_value",
-    buckets: int = 4096,
-    bounds: DataFrame | None = None,
-) -> DataFrame:
-    """EXACT k-th smallest of ``value_col`` (1-based global rank ``k``
-    taken from the one-row ``k_frame``'s ``k`` column) with NO data-sized
-    sort, range exchange, or sampling job — the order-statistic shape for
-    "one quantile of one column" (round 6, VERDICT r5 #6):
-
-    1. one agg pass → (min, max);
-    2. one grouped pass → counts per fixed-width bucket (``buckets``
-       rows max — bounded, so the cumulative counts come from a
-       triangular broadcast self-join, never a window);
-    3. the bucket containing rank k is identified with its in-bucket
-       residual rank k′; only THAT bucket's rows (n/buckets expected)
-       are ranked, by a window PARTITIONED on the bucket id.
-
-    Compared to global_prefix_scan + filter: no repartitionByRange
-    sample job, no full shuffle, no data-sized ranked materialization —
-    three cheap scans of ``df`` instead (pass a materialized or
-    trivially recomputable frame). Ties share a value, so the selected
-    VALUE is deterministic regardless of tie order. Pathological skew
-    (most rows in one fixed-width bucket) degrades step 3 toward a full
-    single-key window; one extra refinement level bounds that too if a
-    real workload ever hits it.
-
-    ``bounds`` (optional): a one-row frame with ``_lo``/``_hi`` columns
-    that bracket the values (``_lo <= min(v)``, ``_hi >= max(v)``). When
-    the caller can derive bounds algebraically (e.g. interval arithmetic
-    over already-aggregated moments), passing them here eliminates the
-    min/max pass — one fewer full scan of ``df``. Loose bounds only
-    coarsen the effective bucket resolution; correctness is unaffected
-    because the bucket map ``least(floor((v - lo)/w), B-1)`` stays
-    monotone in ``v`` (constant subtract, positive-constant divide,
-    floor, clamp — each IEEE-monotone), which is the only property the
-    LOW / candidate / HIGH rank split relies on.
-
-    NULL / NaN values are filtered before bucketing (ADVICE r6): an
-    unfiltered NULL maps to a NULL bucket whose triangular cumulative
-    join matches nothing (``_before = 0``), which could let two buckets
-    claim rank ``k``. So ``k`` ranks among the non-null, non-NaN values
-    — the same population every SQL ordered-set aggregate
-    (percentile_disc etc.) ranks over.
-    """
-    df = _non_null_values(df, value_col)
-    v = F.col(value_col)
-    stats = F.broadcast(
-        bounds
-        if bounds is not None
-        else df.agg(F.min(value_col).alias("_lo"), F.max(value_col).alias("_hi"))
-    )
-    wid = (F.col("_hi") - F.col("_lo")) / F.lit(float(buckets))
-    bucket = (
-        F.when(
-            F.col("_hi") > F.col("_lo"),
-            F.least(F.floor((v - F.col("_lo")) / wid), F.lit(buckets - 1)),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
-    )
-    hist = (
-        df.crossJoin(stats)
-        .groupBy(bucket.alias("_b"))
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
-    h2 = hist.select(F.col("_b").alias("_b2"), F.col("_c").alias("_c2"))
-    cum = (
-        hist.join(F.broadcast(h2), F.col("_b2") < F.col("_b"), "left")
-        .groupBy("_b", "_c")
-        .agg(F.coalesce(F.sum("_c2"), F.lit(0)).alias("_before"))
-    )
-    target = F.broadcast(
-        cum.crossJoin(F.broadcast(k_frame))
-        .where(
-            (F.col("k") > F.col("_before"))
-            & (F.col("k") <= F.col("_before") + F.col("_c"))
-        )
-        .select(F.col("_b").alias("_tb"), (F.col("k") - F.col("_before")).alias("_kin"))
-    )
-    cand = (
-        df.crossJoin(stats)
-        .withColumn("_b", bucket)
-        .join(target, F.col("_b") == F.col("_tb"))
-    )
-    wloc = W.partitionBy("_b").orderBy(v)
-    return (
-        cand.withColumn("_rn", F.row_number().over(wloc))
-        .where(F.col("_rn") == F.col("_kin"))
-        .select(v.alias(out_col))
-    )
-
-
 def histogram_select_kth_eager(
     df: DataFrame,
     value_col: str,
@@ -536,19 +429,19 @@ def histogram_select_kth_eager(
     bucket id. Returns a one-row DataFrame (``out_col``), or an empty one
     when ``k`` is out of range — so callers compose it like any frame.
 
-    Use this over :func:`histogram_select_kth` when the caller is already
-    driver-orchestrated (coefficients / k computed from a bounded collect)
-    and the lazy triangular-join machinery would just add small-job
-    overhead; the lazy variant remains the fully-declarative composable
-    form. ``lo``/``hi`` bracket the values the same way as its ``bounds``
-    frame — and as there, a loose or even undershooting ``hi`` only
-    coarsens buckets: ``least(floor((v - lo)/w), B-1)`` stays monotone in
-    ``v``, the only property the LOW / candidate split needs for an exact
-    rank. NULL / NaN values are filtered first, same as the lazy variant
-    (ADVICE r6): ``k`` ranks among non-null, non-NaN values.
+    ``lo``/``hi`` bracket the values (``lo <= min(v)``, ``hi >= max(v)``);
+    a loose or even undershooting ``hi`` only coarsens buckets:
+    ``least(floor((v - lo)/w), B-1)`` stays monotone in ``v``, the only
+    property the LOW / candidate split needs for an exact rank. NULL / NaN
+    values are filtered first (ADVICE r6): an unfiltered NULL would map to
+    a NULL bucket, so ``k`` ranks among non-null, non-NaN values — the same
+    population every SQL ordered-set aggregate ranks over.
     """
-    df = _non_null_values(df, value_col)
     v = F.col(value_col)
+    cond = v.isNotNull()
+    if dict(df.dtypes).get(value_col) in ("float", "double"):
+        cond = cond & ~F.isnan(v)
+    df = df.where(cond)
     if hi > lo:
         wid = (hi - lo) / float(buckets)
         bucket = F.least(F.floor((v - F.lit(lo)) / F.lit(wid)), F.lit(buckets - 1)).cast(

@@ -440,7 +440,6 @@ def docs_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # threshold join + pure-projection filter — no shuffle of the kept rows.
 # Beyond-reference [NS] (SURVEY.md §2.B sampling/data mixing).
 # --------------------------------------------------------------------------
-_TMIX_ALPHA = 0.5
 _TMIX_MOD = 10_000
 
 TEMP_APPLY_ORACLE = f"""
@@ -738,7 +737,6 @@ FROM w ORDER BY w.lang
 def sample_importance_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     cur = docs.groupBy("lang").agg(F.count(F.lit(1)).cast("double").alias("n"))
-    cur = materialize(cur)  # totals + weights branches
     tot = cur.agg(F.sum("n").alias("t"))
     tgt = F.broadcast(
         docs.sparkSession.createDataFrame(
@@ -756,7 +754,6 @@ def sample_importance_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("wt"),
         )
     )
-    w = materialize(w)
     ess = w.agg(
         (
             F.pow(F.sum(F.col("n") * F.col("wt")), 2)

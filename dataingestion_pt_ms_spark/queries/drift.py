@@ -1098,7 +1098,6 @@ def events_exponential_fit_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 1e6
         ).alias("gap"),
     ).where(F.col("gap").isNotNull() & (F.col("gap") > 0))
-    g = materialize(g)  # lambda fit + CDF branches
     lam = g.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         (1.0 / F.avg("gap")).alias("l"),
@@ -1389,7 +1388,6 @@ def events_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = steps.groupBy("s_from", "s_to").agg(
         F.count(F.lit(1)).cast("double").alias("n")
     )
-    c = materialize(c)  # totals + entropy branches
     t = c.groupBy("s_from").agg(F.sum("n").alias("tot"))
     p = F.col("n") / F.col("tot")
     return (
@@ -2304,7 +2302,6 @@ def events_evalue_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("diff")
         )
     )
-    daily = materialize(daily)  # sigma + cum branches
     sigma = daily.agg(F.var_samp("diff").alias("s2"))
     # day-axis cumulative windows (bounded day-grain exemption)
     wd = W.orderBy("d").rowsBetween(W.unboundedPreceding, 0)
@@ -2448,7 +2445,6 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("ts") < cut, F.col("value")).otherwise(0.0)).alias("x"),
         F.sum(F.when(F.col("ts") >= cut, F.col("value")).otherwise(0.0)).alias("y"),
     ).withColumn("arm", F.col("user_id") % 2)
-    peruser = materialize(peruser)  # theta + adjust branches
     theta = peruser.agg(
         (F.covar_samp("x", "y") / F.var_samp("x")).alias("th"),
         F.avg("x").alias("mx"),
@@ -2605,7 +2601,6 @@ def orders_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     rn = global_prefix_scan(d, ["nb", "nc"], ["v"], rn_col="rn").select(
         "v", F.col("nb_cum").alias("cb"), F.col("nc_cum").alias("cc"), "rn"
     )
-    rn = materialize(rn)  # both sides of the neighbor join
     nxt = rn.select((F.col("rn") - 1).alias("rn"), F.col("v").alias("v_next"))
     return (
         rn.join(nxt, "rn")
@@ -2664,7 +2659,6 @@ def orders_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["x", "o_orderkey"],
         out_col="rn",
     )
-    ranked = materialize(ranked)  # n + xmin + tail branches
     n = ranked.agg(F.max("rn").alias("n"))
     xmin = (
         ranked.crossJoin(F.broadcast(n))
@@ -2725,7 +2719,6 @@ def events_imr_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     mr = daily.withColumn(
         "mr", F.abs(F.col("x") - F.lag("x").over(W.orderBy("d")))
     )
-    mr = materialize(mr)  # limits + output branches
     lim = mr.agg(F.avg("x").alias("xbar"), F.avg("mr").alias("mrbar"))
     ucl = F.col("xbar") + 2.66 * F.col("mrbar")
     lcl = F.col("xbar") - 2.66 * F.col("mrbar")

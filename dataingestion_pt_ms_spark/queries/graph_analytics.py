@@ -952,7 +952,6 @@ def graph_trade_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("double").alias("w"))
         .filter(F.col("src") != F.col("dst"))
     )
-    edges = materialize(edges)  # both sides of the dyad join
     rev = edges.select(
         F.col("dst").alias("src"), F.col("src").alias("dst"), F.col("w").alias("w_rev")
     )

@@ -671,7 +671,7 @@ def dedup_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", "doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "t")
     )
     wd = W.partitionBy("doc_id").orderBy("pos")
-    sh = materialize(
+    sh = (
         tok.select(
             "source",
             F.concat_ws(
@@ -931,9 +931,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         F.concat_ws(" ", F.slice(tokens(F.col("text")), 1, 3)).alias("fkey"),
     )
-    ordered = materialize(
-        global_row_number(fp, [F.col("fkey"), F.col("doc_id")], out_col="pos")
-    )  # both join sides
+    ordered = global_row_number(fp, [F.col("fkey"), F.col("doc_id")], out_col="pos")
     # neighbour pairs by RANK ARITHMETIC, not a global-ordering window
     # (lead() over an unpartitioned window is the single-reducer
     # anti-pattern): explode the w−1 offsets and equi-join pos+j = pos —
@@ -952,7 +950,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2×(w−1)×n times — measured 31 s at sf0.1; this form is ~1 s)
     wd = W.partitionBy("doc_id").orderBy("_pos")
     l1, l2 = F.lead("_t", 1).over(wd), F.lead("_t", 2).over(wd)
-    sh_sets = materialize(
+    sh_sets = (
         docs.select("doc_id", F.posexplode(tokens(F.col("text"))).alias("_pos", "_t"))
         .select(
             "doc_id",
@@ -962,7 +960,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("_g").isNotNull())
         .groupBy("doc_id")
         .agg(F.collect_set("sh").alias("shset"))
-    )  # both pair sides
+    )
     inter = F.size(F.array_intersect("sha", "shb")).cast("double")
     union = F.size("sha") + F.size("shb") - inter
     return (
@@ -1106,7 +1104,6 @@ def dedup_survivorship_bias_audit(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.count(F.lit(1)).cast("double").alias("k"))
     )
     cur = docs.groupBy("lang").agg(F.count(F.lit(1)).cast("double").alias("n"))
-    cur = materialize(cur)
     kp = materialize(kp)
     tot = cur.agg(F.sum("n").alias("tn")).crossJoin(kp.agg(F.sum("k").alias("tk")))
     return (
@@ -1465,7 +1462,6 @@ def dedup_blocking_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = D.minhash_signature(docs, "text", "doc_id")
     sig = materialize(sig)  # two banding passes share it
     cand8 = D.lsh_candidate_pairs(sig, "doc_id", bands=8, rows_per_band=8)
-    cand8 = materialize(cand8)  # counted + joined
     cand16 = D.lsh_candidate_pairs(sig, "doc_id", bands=16, rows_per_band=4)
     truth = (
         D.jaccard_pairs(docs, cand16, "text", "doc_id")

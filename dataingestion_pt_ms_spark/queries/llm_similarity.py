@@ -1680,11 +1680,9 @@ def sim_pq_refine_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     query = emb.filter(F.col("vec_id") == _QID)
-    # r11 opt (guide §1.2 #1): the shortlist feeds the exact-rerank
-    # semi-join AND the final join — materialize the ≤_REFINE_SHORT rows
-    # so the PQ train/encode/ADC pipeline runs once, not twice (12 parquet
-    # scans in the before-plan)
-    short = materialize(pq_adc_topk(emb, query, k=_REFINE_SHORT, train_mod=4))
+    # the shortlist feeds the exact-rerank semi-join AND the final join;
+    # exchange reuse runs the PQ train/encode/ADC pipeline once
+    short = pq_adc_topk(emb, query, k=_REFINE_SHORT, train_mod=4)
     qv = F.broadcast(
         query.select(F.col("embedding").cast("array<double>").alias("qv"))
     )
@@ -1744,7 +1742,7 @@ def sim_pq_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import _sub_dims, pq_codebooks, pq_encode
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cb = materialize(pq_codebooks(emb, train_mod=4))
+    cb = pq_codebooks(emb, train_mod=4)
     enc = pq_encode(emb, cb)
     dims = _sub_dims(emb, "embedding", "vec_id", 16)
     recon = (
@@ -2059,7 +2057,6 @@ def sim_lof_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     kd = knn.filter(F.col("rnk") == _KNN_K).select(
         "vec_id", (F.lit(1.0) - F.col("cosine_sim")).alias("k_dist")
     )
-    kd = materialize(kd)  # feeds reach + final join
     reach = knn.join(
         kd.select(F.col("vec_id").alias("nb"), F.col("k_dist").alias("kd_nb")),
         "nb",
@@ -2079,7 +2076,6 @@ def sim_lof_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    lrd = materialize(lrd)  # neighbour + self branches
     lof = (
         knn.join(
             lrd.select(F.col("vec_id").alias("nb"), F.col("lrd").alias("lrd_nb")),
@@ -4161,7 +4157,6 @@ def emb_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.posexplode(F.col("embedding").cast("array<double>")).alias("d", "x"),
     )
-    dims = materialize(dims)  # dstats + vnorms branches
     dstats = dims.groupBy("d").agg(
         F.avg("x").alias("mu"), F.var_samp("x").alias("v")
     )

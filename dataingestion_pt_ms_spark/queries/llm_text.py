@@ -988,10 +988,9 @@ ORDER BY doc_id
 @register("text_ccnet_ppl_buckets", oracle=CCNET_BUCKETS_ORACLE)
 def text_ccnet_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # r11 opt (guide §1.2 #1): the per-doc NLL table feeds the tertile
-    # aggregate AND the final bucket projection — materialize so the
-    # unigram-LM pipeline runs once, not twice
-    pp = materialize(T.unigram_logprob(docs).select("doc_id", "nll"))
+    # the per-doc NLL table feeds the tertile aggregate AND the final
+    # bucket projection; exchange reuse runs the unigram-LM pipeline once
+    pp = T.unigram_logprob(docs).select("doc_id", "nll")
     th = pp.agg(
         F.percentile("nll", F.lit(1.0 / 3)).alias("t1"),
         F.percentile("nll", F.lit(2.0 / 3)).alias("t2"),
@@ -1179,7 +1178,6 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ops, never per-doc array building. Beyond-reference [NS] (chunking
 # family; non-overlapping twin = text_chunk_documents).
 # --------------------------------------------------------------------------
-_OVL_WINDOW = 64
 _OVL_STRIDE = 32
 
 OVERLAP_CHUNK_ORACLE = f"""
@@ -1366,7 +1364,6 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("t"))
-    tok = materialize(tok)  # dl + tf branches
     dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).cast("double").alias("dlen"))
     dl = materialize(dl)  # avgdl + join-back
     n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n"))
@@ -1525,7 +1522,6 @@ def text_trigram_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lang", "g")
         .agg(F.count(F.lit(1)).cast("double").alias("tc"))
     )
-    train = materialize(train)
     tnorm = train.groupBy("lang").agg(F.sqrt(F.sum(F.col("tc") * F.col("tc"))).alias("tn"))
     doc = (
         tri.where(F.col("doc_id") % 2 == 1)
@@ -1605,7 +1601,6 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("t"))
-    tok = materialize(tok)  # per-doc counts + first-seen
     per_doc = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
     new_vocab = (
         tok.groupBy("t")
@@ -1691,7 +1686,6 @@ def text_tfidf_centroid_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tok",
         (F.col("tf") * F.log((1.0 + n_docs) / (1.0 + F.col("df")))).alias("w"),
     )
-    w = materialize(w)  # norms + both join sides
     norms = w.groupBy("source").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
     a = w.select(F.col("source").alias("source_a"), "tok", F.col("w").alias("wa"))
     b = w.select(F.col("source").alias("source_b"), "tok", F.col("w").alias("wb"))
@@ -2391,7 +2385,6 @@ def text_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("phrase"),
         F.count(F.lit(1)).cast("long").alias("plen"),
     )
-    phrases = materialize(phrases)  # wordstats join + scoring
     wordstats = (
         members.join(phrases.select("doc_id", "island", "plen"), ["doc_id", "island"])
         .groupBy("t")
@@ -2480,7 +2473,6 @@ def text_burrows_delta_stylometry(spark: SparkSession, sf_dir: str) -> DataFrame
 
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("source", F.explode(tokens(F.col("text"))).alias("t"))
-    tok = materialize(tok)  # totals + counts branches
     stot = tok.groupBy("source").agg(F.count(F.lit(1)).cast("double").alias("n"))
     wc = tok.groupBy("source", "t").agg(F.count(F.lit(1)).cast("long").alias("c"))
     wc = materialize(wc)  # top-word rank + freq join
@@ -2506,7 +2498,6 @@ def text_burrows_delta_stylometry(spark: SparkSession, sf_dir: str) -> DataFrame
         "t",
         ((F.col("f") - F.avg("f").over(wt)) / F.stddev_samp("f").over(wt)).alias("z"),
     )
-    z = materialize(z)  # both sides of the pair join
     a = z.select(F.col("source").alias("source_a"), "t", F.col("z").alias("za"))
     b = z.select(F.col("source").alias("source_b"), "t", F.col("z").alias("zb"))
     return (

@@ -58,7 +58,6 @@ from . import register
 # point, on bit-identical operands.
 # --------------------------------------------------------------------------
 
-_HLL_M = 64
 _HLL_ALPHA = 0.709
 _TWO55 = 1 << 55
 
@@ -273,9 +272,6 @@ def sketch_cm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(_CM_W),
         ),
     )
-    # hashed feeds the cell sums AND the estimate join (same two-consumer
-    # shape the per-source variant already materializes)
-    hashed = materialize(hashed)
     cells = hashed.groupBy("j", "bucket").agg(F.sum("c").alias("cell"))
     est = (
         hashed.join(cells, ["j", "bucket"])
@@ -830,7 +826,7 @@ def sketch_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("l_extendedprice").alias("mn"), F.max("l_extendedprice").alias("mx")
     )
     w_expr = (F.col("mx") - F.col("mn")) / float(_HQ_BINS)
-    b = materialize(
+    b = (
         li.crossJoin(F.broadcast(stats))
         .select(
             F.col("l_returnflag").alias("g"),
@@ -843,7 +839,7 @@ def sketch_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("g", "bin")
         .agg(F.count(F.lit(1)).alias("c"))
-    )  # cum walk + group totals
+    )
     wc = W.partitionBy("g").orderBy("bin").rowsBetween(W.unboundedPreceding, 0)
     cum = b.select("g", "bin", "c", F.sum("c").over(wc).alias("cc"))
     ng = b.groupBy("g").agg(F.sum("c").cast("double").alias("n"))
@@ -1036,7 +1032,6 @@ def sketch_cm_heavy_hitters_per_source(spark: SparkSession, sf_dir: str) -> Data
         ).cast("long")
         % _CM_W,
     )
-    hashed = materialize(hashed)
     cells = hashed.groupBy("source", "j", "bucket").agg(
         F.sum("c").cast("long").alias("cell")
     )
@@ -1293,7 +1288,6 @@ def sketch_ams_f2_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = orders.select(
         "o_custkey", F.md5(F.col("o_custkey").cast("string")).alias("h")
     )
-    hashed = materialize(hashed)  # sums + exact branches
 
     def sign(j: int):
         nib = F.conv(F.substring(F.col("h"), j // 4 + 1, 1), 16, 10).cast("long")

@@ -855,7 +855,6 @@ def events_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = events.groupBy(
         F.date_trunc("day", "ts").cast("date").alias("day")
     ).agg(F.count(F.lit(1)).alias("c"))
-    daily = materialize(daily)  # profile + overall branches
 
     def _r6(col):
         return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
@@ -1736,7 +1735,6 @@ def events_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame
         F.avg("y").over(wt).alias("trend"),
         F.dayofweek("d").alias("dow"),
     ).withColumn("detr", F.col("y") - F.col("trend"))
-    det = materialize(det)  # seasonal fit + output join
     s0 = det.groupBy("dow").agg(F.avg("detr").alias("s_raw"))
     s_mean = s0.agg(F.avg("s_raw").alias("m"))
     s = s0.crossJoin(F.broadcast(s_mean)).select(
@@ -1995,7 +1993,6 @@ def events_dft_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = daily.select(
         "y", (F.row_number().over(wd) - 1).cast("double").alias("t")
     )
-    idx = materialize(idx)
     mu = idx.agg(F.avg("y").alias("my"), F.count(F.lit(1)).alias("n"))
     periods = (
         ev.sparkSession.range(2, 15)

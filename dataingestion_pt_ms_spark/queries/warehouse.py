@@ -609,7 +609,6 @@ FROM tot CROSS JOIN top
 def warehouse_key_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     kc = events.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
-    kc = materialize(kc)  # three consumers below
     tot = kc.agg(
         F.count(F.lit(1)).alias("n_keys"),
         F.sum("c").alias("n_rows"),
@@ -1194,7 +1193,6 @@ def agg_weighted_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("wt"))
     )
     cum = global_running_sum(w, "wt", [F.col("v"), F.col("c_custkey")], out_col="cw")
-    cum = materialize(cum)  # totals + crossing branches
     tot = cum.agg(F.sum("wt").alias("tot"))
     qs = F.broadcast(
         cust.sparkSession.createDataFrame([(0.25,), (0.5,), (0.75,)], "q double")
@@ -1270,7 +1268,7 @@ def orders_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exclusive prefix max over STRICTLY better spend = inclusive prefix of
     # the previous distinct-spend row, fetched by rank EQUI-JOIN (rk = rk−1)
     # on the distributed global row number — no unpartitioned lag window
-    ranked = materialize(
+    ranked = (
         global_row_number(ranked, [F.col("spend").desc()], out_col="rk")
     )
     excl = ranked.select("spend", "best_n", (F.col("rk") - 1).alias("prk")).join(
@@ -1466,7 +1464,6 @@ def orders_abc_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
             [F.col("revenue").desc(), F.col("o_custkey")],
             out_col="cum_rev",
         )
-        cum = materialize(cum)
         tot = cum.agg(F.sum("revenue").alias("tot_rev"))
         share = F.col("cum_rev").cast("double") / F.col("tot_rev").cast("double")
         return (
@@ -1605,7 +1602,6 @@ def orders_cramers_v_association(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("na") * F.col("nb") / F.col("t")).alias("e"),
         )
     )
-    cells = materialize(cells)  # stat + output branches
     stat = (
         cells.agg(
             F.sum((F.col("n") - F.col("e")) * (F.col("n") - F.col("e")) / F.col("e")).alias("chi_sq"),
@@ -1840,7 +1836,6 @@ def warehouse_rle_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_orderkey").alias("ok"),
         F.col("l_linenumber").alias("ln"),
     )
-    li = materialize(li)  # two layout passes
 
     def runs_for(layout: str, bucket_col: str):
         # ONE window pass computes all four columns' run breaks (the

@@ -282,10 +282,18 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
     executor block storage and the plan above them is dropped, so a lost
     executor fails the job instead of recomputing the intermediate.
 
-    ``eager=False`` (the default) stores the blocks on the first action
-    that reads them, so a multi-consumer intermediate is computed once at
-    no extra job. ``eager=True`` runs a job now; it is required where the
-    blocks must exist before the next statement:
+    ``eager=False`` (the default) does not wait for the blocks, but with
+    AQE on (the engine default) it is not free: the call plans the subtree
+    adaptively, which runs its shuffle and broadcast stages now, and only
+    the final stage waits for the first action that reads the blocks (with
+    AQE off the call runs no job). So a lazy call saves one job, not the
+    work, and Spark's exchange reuse already shares a repeated subtree
+    within one plan: a lazy site stays only where removing it costs wall
+    time, CPU, shuffle bytes or an extra table-scan stage on the queries
+    that reach it.
+
+    ``eager=True`` runs every stage now. It is required where the blocks
+    must exist before the next statement:
 
     - read-own-input staging (``sources/sinks.py``, ``streaming/jobs.py``):
       the batch or table is snapshotted before the write that overwrites

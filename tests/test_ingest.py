@@ -43,6 +43,21 @@ def _assets(spark):
     )
 
 
+def _table_rows(spark, path):
+    """Every stored row, ordered, without ``updated_at`` (the write time,
+    which a replay refreshes by design)."""
+    df = spark.read.parquet(path).drop("updated_at")
+    return df.orderBy(*df.columns).collect()
+
+
+def _partition_files(table):
+    """{partition dir: {parquet file name: size}}."""
+    return {
+        pdir.name: {f.name: f.stat().st_size for f in pdir.glob("*.parquet")}
+        for pdir in table.glob("bar_date=*")
+    }
+
+
 def test_normalize_bars_shape(spark):
     bars = normalize_bars(_raw_bars(spark), _assets(spark))
     rows = bars.collect()
@@ -71,12 +86,15 @@ def test_upsert_idempotent_run_twice_count_once(spark, tmp_path):
     path = str(tmp_path / "bars")
     raw, assets = _raw_bars(spark), _assets(spark)
     r1 = run_batch_ingest(spark, raw, assets, path)
+    first = _table_rows(spark, path)
     r2 = run_batch_ingest(spark, raw, assets, path)
     assert r1.total_bars_saved == 10
     assert r2.total_bars_saved == 10  # idempotent
     written = spark.read.parquet(path)
     assert written.count() == 10
     assert written.select("symbol", "timeframe", "ts").distinct().count() == 10
+    # the replay leaves every row's values unchanged, not only the count
+    assert _table_rows(spark, path) == first
 
 
 def test_upsert_last_wins_on_key_collision(spark, tmp_path):
@@ -95,12 +113,18 @@ def test_upsert_touches_only_affected_partitions(spark, tmp_path):
     path = str(tmp_path / "bars")
     assets = _assets(spark)
     run_batch_ingest(spark, _raw_bars(spark, days=5), assets, path)
+    before = _partition_files(tmp_path / "bars")
     # a batch covering only day 1 must leave days 2-5 intact
     one_day = _raw_bars(spark, days=1).withColumn("c", F.col("c") + 50)
     run_batch_ingest(spark, one_day, assets, path)
     written = spark.read.parquet(path)
     assert written.count() == 10
     assert written.filter(F.col("close") > 150).count() == 2  # 2 symbols × day 1
+    # days 2-5 are not rewritten: same file names and sizes
+    after = _partition_files(tmp_path / "bars")
+    untouched = sorted(d for d in before if d != "bar_date=2024-01-01")
+    assert len(untouched) == 4
+    assert {d: after[d] for d in untouched} == {d: before[d] for d in untouched}
 
 
 def test_ingest_events_payload(spark):

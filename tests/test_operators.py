@@ -2155,18 +2155,14 @@ def test_global_prefix_scan_matches_chained_singletons(spark):
 
 
 def test_histogram_select_kth_exact_vs_sort(spark):
-    """Both selector variants (lazy triangular-join and eager bounded-
-    collect) must return the EXACT k-th smallest for ranks across the
-    whole range — including duplicates, negatives, and a skewed tail —
-    and agree with a plain sort. The eager variant is additionally
+    """The bounded-collect selector must return the EXACT k-th smallest
+    for ranks across the whole range — including duplicates, negatives,
+    and a skewed tail — and agree with a plain sort. It is additionally
     probed with a deliberately UNDERSHOT upper bound: the clamped bucket
     map stays monotone, so the selection must still be exact."""
     from pyspark.sql import functions as F
 
-    from dataingestion_pt_ms_spark.operators.ranking import (
-        histogram_select_kth,
-        histogram_select_kth_eager,
-    )
+    from dataingestion_pt_ms_spark.operators.ranking import histogram_select_kth_eager
 
     df = spark.range(0, 1500).select(
         (
@@ -2178,9 +2174,6 @@ def test_histogram_select_kth_exact_vs_sort(spark):
     want = sorted(r["v"] for r in df.collect())
     lo, hi = want[0], want[-1]
     for k in (1, 2, 750, 1350, 1499, 1500):
-        kf = spark.createDataFrame([(k,)], "k long")
-        got_lazy = histogram_select_kth(df, "v", kf, buckets=64).collect()
-        assert [r["kth_value"] for r in got_lazy] == [want[k - 1]], k
         got_eager = histogram_select_kth_eager(df, "v", k, lo, hi, buckets=64).collect()
         assert [r["kth_value"] for r in got_eager] == [want[k - 1]], k
         # undershooting hi clamps the tail into the top bucket — still exact
@@ -2199,24 +2192,16 @@ def test_histogram_select_kth_exact_vs_sort(spark):
 def test_histogram_select_kth_ignores_null_and_nan(spark):
     """ADVICE r6: a NULL/NaN value used to map to a NULL (or NaN) bucket
     whose triangular cumulative join matched nothing (_before = 0),
-    letting two buckets claim rank k. Both selectors now rank among the
+    letting two buckets claim rank k. The selector ranks among the
     non-null, non-NaN values only — the same population SQL's ordered-set
     aggregates rank over."""
-    from pyspark.sql import functions as F
-
-    from dataingestion_pt_ms_spark.operators.ranking import (
-        histogram_select_kth,
-        histogram_select_kth_eager,
-    )
+    from dataingestion_pt_ms_spark.operators.ranking import histogram_select_kth_eager
 
     vals = [7.0, None, 3.0, float("nan"), 11.0, 5.0, None, 2.0, float("nan"), 9.0]
     df = spark.createDataFrame([(v,) for v in vals], "v double")
     clean = sorted(v for v in vals if v is not None and v == v)
     lo, hi = clean[0], clean[-1]
     for k in (1, 3, len(clean)):
-        kf = spark.createDataFrame([(k,)], "k long")
-        got_lazy = [r["kth_value"] for r in histogram_select_kth(df, "v", kf, buckets=8).collect()]
-        assert got_lazy == [clean[k - 1]], (k, got_lazy)
         got_eager = [
             r["kth_value"]
             for r in histogram_select_kth_eager(df, "v", k, lo, hi, buckets=8).collect()
@@ -2231,11 +2216,11 @@ def test_histogram_select_kth_plan_has_no_global_window(spark):
     id) — the whole point versus a bare row_number() OVER (ORDER BY v)."""
     from pyspark.sql import functions as F
 
-    from dataingestion_pt_ms_spark.operators.ranking import histogram_select_kth
+    from dataingestion_pt_ms_spark.operators.ranking import histogram_select_kth_eager
 
     df = spark.range(0, 100).select(F.col("id").cast("double").alias("v"))
-    kf = spark.createDataFrame([(50,)], "k long")
-    plan = histogram_select_kth(df, "v", kf)._jdf.queryExecution().optimizedPlan().toString()
+    got = histogram_select_kth_eager(df, "v", 50, 0.0, 99.0)
+    plan = got._jdf.queryExecution().optimizedPlan().toString()
     assert "windowspecdefinition(_b#" in plan, plan
 
 

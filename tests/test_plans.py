@@ -164,6 +164,11 @@ def test_dynamic_partition_pruning(spark, sf_dir, tmp_path):
 # (events_error_bursts → operators/ranking.global_islands).
 GLOBAL_WINDOW_ALLOWLIST = {
     "events_evalue_sequential",  # daily series (calendar-bounded)
+    "events_imr_control_chart",  # daily series
+    "events_seasonal_decomposition",  # daily series
+    "events_seasonal_strength",  # daily series (the decomposition's)
+    "events_dft_periodogram",  # daily series
+    "sim_pq_error_audit",  # PQ seed ranks (limit-bounded, `codes` rows)
     "sample_neyman_stratified",  # per-stratum rows (≤ #langs)
     "sim_pq_refine_rerank",  # k-bounded shortlist
     "sketch_ams_f2_selfjoin",  # sketch grid (m×g, fixed)

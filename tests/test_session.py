@@ -195,3 +195,32 @@ def test_localcheckpoint_only_inside_materialize():
                 (allowed if ok else stray).append(site)
     assert len(allowed) == 1, allowed
     assert not stray, f"call session.materialize instead: {stray}"
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_lazy_materialize_runs_shuffle_stages_at_call_under_aqe(spark, aqe):
+    """The timing ``session.materialize`` documents: with AQE on (the
+    engine default) a lazy call runs the subtree's shuffle stage at the
+    call and defers only the final stage; with AQE off it runs no job."""
+    from pyspark.sql import functions as F
+
+    from dataingestion_pt_ms_spark.session import materialize
+
+    sc = spark.sparkContext
+    group = f"lazy-materialize-aqe-{aqe}"
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        sc.setJobGroup(group, group)
+        agg = spark.range(0, 1000).groupBy((F.col("id") % 10).alias("k")).count()
+        df = materialize(agg)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events reach the tracker
+        at_call = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert df.count() == 10
+    finally:
+        sc.setJobGroup("", "")
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    if aqe == "true":
+        assert at_call >= 1
+    else:
+        assert at_call == 0

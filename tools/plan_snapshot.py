@@ -94,7 +94,8 @@ def main() -> int:
         baseline.update({n: current[n] for n in named} if named else current)
         BASELINE_PATH.write_text(json.dumps(baseline, indent=2, sort_keys=True) + "\n")
         print(f"wrote {BASELINE_PATH}")
-    return 0
+        return 0
+    return 1 if diffs else 0
 
 
 if __name__ == "__main__":
