@@ -16,9 +16,12 @@ Scale notes (100 TB discipline):
 from __future__ import annotations
 
 import os
+import warnings
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .session import CODEGEN_CACHE_MAX_ENTRIES
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -51,7 +54,10 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     - AQE + partition coalescing so a session built with default
       shuffle.partitions=200 doesn't pay 200 near-empty tasks per shuffle
       at oracle SF (and picks broadcast/skew plans adaptively at any SF).
-    All are runtime-settable SQL confs."""
+    All are runtime-settable SQL confs. The codegen cache size is static
+    (read once per JVM, before its first codegen), so a smaller one is only
+    reported, once."""
+    _warn_small_codegen_cache(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -65,6 +71,26 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     # oracle (r10 opt). CPU-dense Python stages get explicit repartition()
     # at the operator instead.
     spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
+
+
+# One warning per process: a PySpark process drives one JVM, and the
+# codegen cache is one per JVM.
+_codegen_cache_warned = False
+
+
+def _warn_small_codegen_cache(spark: SparkSession) -> None:
+    global _codegen_cache_warned
+    have = int(spark.conf.get("spark.sql.codegen.cache.maxEntries"))
+    if have < CODEGEN_CACHE_MAX_ENTRIES and not _codegen_cache_warned:
+        _codegen_cache_warned = True
+        warnings.warn(
+            f"spark.sql.codegen.cache.maxEntries is {have}, below the engine's "
+            f"{CODEGEN_CACHE_MAX_ENTRIES}: repeated queries recompile their "
+            "generated classes. It is a static conf; set it when the session "
+            "is built (session.get_spark does).",
+            RuntimeWarning,
+            stacklevel=3,
+        )
 
 
 # Memoized (session → {(sf_dir, table) → DataFrame}). A DataFrame is just an

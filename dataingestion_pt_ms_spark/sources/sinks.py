@@ -6,22 +6,27 @@ engine (SURVEY.md §4): the reference gets merge-by-key from Firestore
 (``batch.set(ref, row, merge=True)``, ``app/alpaca_service.py:190-209``);
 plain parquet has no MERGE, so we reproduce exactly-once-by-key with
 
-    dedup(new ∪ affected-partition-old) + dynamic partition overwrite
+    dedup(new ∪ touched-partition-old) + dynamic partition overwrite
 
 Re-running the same batch rewrites the same partitions with the same rows —
-idempotent (tests/test_ingest.py proves run-twice ⇒ same counts). The
+idempotent (tests/test_ingest.py proves run-twice ⇒ same counts), which is
+the replay safety Structured Streaming's sink contract asks of a sink. The
 transactional form of the same merge is ``tableformat.merge_into``.
 
 Scale notes: dynamic overwrite touches only partitions present in the batch
-(a day of data rewrites a day, not the table); the dedup shuffles the batch +
-affected partitions on the upsert key only. The reference's 490-op write
+(a day of data rewrites a day, not the table), and the old rows are read
+with a literal partition predicate, so only those partitions are listed
+and scanned. One shuffle, on the partition columns, feeds both the
+last-wins dedup and the partitioned write. The reference's 490-op write
 chunking (R17, ``:211-221``) is unnecessary — Spark writers batch per
 partition natively; file sizing is controlled with maxRecordsPerFile.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..session import materialize
@@ -83,6 +88,24 @@ def _dedup_last_wins(
     )
 
 
+def _partition_predicate(partition_cols: list[str], touched: list[tuple]) -> Column:
+    """A literal predicate that holds on exactly the ``touched`` partition
+    value tuples, one conjunct per partition column (null-safe, so a
+    ``__HIVE_DEFAULT_PARTITION__`` null matches too). It references
+    partition columns only, so Spark prunes the listing and the scan with
+    it at planning time."""
+    return reduce(
+        Column.__or__,
+        (
+            reduce(
+                Column.__and__,
+                (F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(partition_cols, t)),
+            )
+            for t in touched
+        ),
+    )
+
+
 def upsert_partitioned_parquet(
     spark: SparkSession,
     batch: DataFrame,
@@ -90,53 +113,91 @@ def upsert_partitioned_parquet(
     key_cols: list[str],
     partition_cols: list[str],
     order_col: str,
+    touched: list[tuple] | None = None,
 ) -> None:
     """Idempotent keyed upsert into a parquet table partitioned by
     ``partition_cols`` (reference R16 re-expressed for Spark).
 
-    1. read existing rows of only the partitions the batch touches
-       (partition pruning via semi-join on partition values);
-    2. union with the batch, dedup last-wins on ``key_cols``;
-    3. dynamic-partition-overwrite those partitions only (a per-write
+    1. read the stored rows of only the partitions the batch touches, with
+       the batch's schema pinned (no schema-inference job) and a literal
+       partition predicate (planning-time pruning, no semi-join);
+    2. union them with the batch, shuffle once on ``partition_cols`` and
+       keep the newest row per ``(*partition_cols, *key_cols)``: the
+       window's distribution is satisfied by that one exchange;
+    3. dynamic-partition-overwrite the touched partitions (a per-write
        option: the session's own overwrite mode is never touched).
 
-    No transaction log, so atomicity is per partition; the transactional
-    form with the same key semantics is ``tableformat.merge_into``.
+    Contract: a key's partition value is a function of the key (bars:
+    ``bar_date = to_date(ts)``). Every stored row of a key the batch
+    carries then lives in a partition the batch touches, so deduping per
+    partition and key is deduping per key. A caller that breaks it and
+    sends a stored key with another partition value keeps one row per
+    partition for that key.
+
+    ``touched`` lists the batch's distinct partition value tuples, in
+    ``partition_cols`` order; a caller that already aggregated the batch
+    passes them, otherwise one job collects them. A batch that touches no
+    partition writes nothing.
+
+    The write reads its own target without staging a copy: dynamic
+    partition overwrite writes into a staging directory and replaces the
+    partitions only at job commit, after every task (and so every read of
+    the old files) has finished. That is why Spark's analyzer, which
+    refuses a static overwrite of a table its query reads
+    (``UNSUPPORTED_OVERWRITE``), allows a dynamic one. A path write gets no
+    such check: a static overwrite here would delete the partitions before
+    the job reads them. No transaction log, so atomicity is per partition;
+    the transactional form with the same key semantics is
+    ``tableformat.merge_into``.
     """
+    if touched is None:
+        touched = [tuple(r) for r in batch.select(*partition_cols).distinct().collect()]
+    if not touched:
+        return
     merged = batch
     if _table_exists(spark, path):
-        current = spark.read.parquet(path)
-        touched = batch.select(*partition_cols).distinct()
-        affected_old = current.join(
-            F.broadcast(touched), partition_cols, "left_semi"
+        old = (
+            spark.read.schema(batch.schema)
+            .parquet(path)
+            .filter(_partition_predicate(partition_cols, touched))
         )
-        merged = affected_old.withColumn("_prio", F.lit(0)).unionByName(
+        merged = old.withColumn("_prio", F.lit(0)).unionByName(
             batch.withColumn("_prio", F.lit(1))
         )
-    deduped = _dedup_last_wins(merged, key_cols, order_col)
-    # The merged plan READS the same path the write overwrites.
-    # Materialize the deduped rows (executor-local blocks) before the
-    # overwrite starts, so no task can observe the table mid-rewrite —
-    # staging without the extra write+read round-trip of a temp
-    # directory.
-    deduped = materialize(deduped, eager=True)
+    deduped = _dedup_last_wins(
+        merged.repartition(*partition_cols), [*partition_cols, *key_cols], order_col
+    )
     (
-        deduped.repartition(*partition_cols)
-        .write.mode("overwrite")
+        deduped.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*partition_cols)
         .parquet(path)
     )
 
 
-def emit_ingest_events(batch: DataFrame, group_cols: list[str], ts_col: str) -> DataFrame:
+def emit_ingest_events(
+    batch: DataFrame,
+    group_cols: list[str],
+    ts_col: str,
+    partition_cols: list[str] | None = None,
+) -> DataFrame:
     """Per-group JSON summary events — R20 with R19's first/last fixed to
-    order-independent min/max. Returns one JSON string row per group."""
+    order-independent min/max. Returns one JSON string row per group.
+
+    With ``partition_cols``, each row also carries ``partitions``: the
+    group's distinct partition value structs, so one collect yields both
+    the events and the partitions the batch touches."""
     iso = "yyyy-MM-dd'T'HH:mm:ss'Z'"
+    touched = (
+        [F.collect_set(F.struct(*partition_cols)).alias("partitions")]
+        if partition_cols
+        else []
+    )
     summary = batch.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("bars_count"),
         F.date_format(F.min(ts_col), iso).alias("start_timestamp_utc"),
         F.date_format(F.max(ts_col), iso).alias("end_timestamp_utc"),
+        *touched,
     )
     payload = F.struct(
         *[F.col(c) for c in group_cols],
@@ -150,7 +211,8 @@ def emit_ingest_events(batch: DataFrame, group_cols: list[str], ts_col: str) -> 
                 F.lit("HistoricalDataUpdated").alias("event_type"),
                 payload.alias("payload"),
             )
-        ).alias("event_json")
+        ).alias("event_json"),
+        *(["partitions"] if partition_cols else []),
     )
 
 
@@ -181,9 +243,8 @@ def compact_parquet_dir(
     The rewrite stages through a sibling temp directory and swaps with FS
     renames, so the source files exist untouched until the compacted copy
     is fully written — executor loss mid-write loses only the temp dir
-    (an executor-local-checkpoint staging, as the upsert sink uses for its
-    partition-scoped rewrite, would leave a whole-table delete exposed to
-    lost-block failure here).
+    (an executor-local-checkpoint staging would leave a whole-table delete
+    exposed to lost-block failure here).
 
     The swap itself is NOT atomic for concurrent readers: between
     rename(path → path_compact_old) and rename(tmp → path) the table path
@@ -254,9 +315,9 @@ def delete_keys_partitioned_parquet(
     Deletion is scoped to the exact (partition, key) pairs listed: the
     anti-join includes the partition columns, so a key listed for one
     partition never disappears from another partition that happens to
-    reuse the same key value. The rewrite stages through the same
-    materialize-before-overwrite discipline as the upsert sink
-    (read-own-input hazard).
+    reuse the same key value. The remaining rows are materialized before
+    the overwrite: the ``exceptAll`` below reads them again after the
+    write has replaced the partitions they were read from.
 
     Partitions whose every row matched a deletion key produce no output
     rows, and dynamic partition overwrite only rewrites partitions present

@@ -10,7 +10,7 @@ Spark's scheduler parallelizes by partition — no driver-side loops over keys
 (the reference's event-loop-blocking mistake, SURVEY.md §3.1).
 
 Batch entry: ``run_batch_ingest``. Streaming entry: ``streaming_ingest``
-(file source + foreachBatch reusing the same upsert writer, ``availableNow``
+(file source + foreachBatch calling the same one-pass core, ``availableNow``
 reproducing R23's catch-up-then-steady-state).
 
 Bar schema: FIXTURES.md A1 (from the Firestore write shape,
@@ -105,36 +105,55 @@ class IngestResult:
     events: list[str]
 
 
+def _ingest_batch(
+    spark: SparkSession,
+    raw: DataFrame,
+    assets: DataFrame,
+    table_path: str,
+) -> tuple[DataFrame, list[str]]:
+    """The one-pass core both entry points share: normalize the raw batch,
+    collect its events and the partitions it touches with one aggregate,
+    and upsert it. Returns the normalized bars and the event JSON rows.
+
+    Driver-side collect is SINK-side only and bounded by the ingest event
+    grain: one row per (symbol, timeframe) group — the reference publishes
+    exactly one Pub/Sub event per asset ingest (R20,
+    app/alpaca_service.py:239-254), so cardinality tracks the assets
+    dimension (thousands), never the bar data; each row's partition set is
+    bounded by the batch's days. No bar row is ever collected
+    (tests/test_ingest.py::test_ingest_event_collect_is_group_bounded)."""
+    bars = normalize_bars(raw, assets)
+    rows = emit_ingest_events(
+        bars, ["symbol", "timeframe"], "ts", partition_cols=["bar_date"]
+    ).collect()
+    touched = sorted({tuple(p) for r in rows for p in r["partitions"]})
+    upsert_partitioned_parquet(
+        spark, bars, table_path, BAR_KEY, ["bar_date"], BAR_ORDER, touched=touched
+    )
+    return bars, [r["event_json"] for r in rows]
+
+
 def run_batch_ingest(
     spark: SparkSession,
     raw: DataFrame,
     assets: DataFrame,
     table_path: str,
 ) -> IngestResult:
-    bars = normalize_bars(raw, assets)
-    upsert_partitioned_parquet(
-        spark, bars, table_path, BAR_KEY, ["bar_date"], BAR_ORDER
+    bars, events = _ingest_batch(spark, raw, assets, table_path)
+    # The run status counts the whole table, so it reads the symbol column
+    # of every file (the pinned schema spares the inference job); per
+    # symbol, so the collect is bounded by the assets dimension like the
+    # events.
+    per_symbol = (
+        spark.read.schema(bars.schema)
+        .parquet(table_path)
+        .groupBy("symbol")
+        .count()
+        .collect()
     )
-    written = spark.read.parquet(table_path)
-    # Driver-side collect is SINK-side only and bounded by the ingest
-    # event grain: one JSON row per (symbol, timeframe) group — the
-    # reference publishes exactly one Pub/Sub event per asset ingest
-    # (R20, app/alpaca_service.py:239-254), so cardinality tracks the
-    # assets dimension (thousands), never the bar data. No bar row is
-    # ever collected (tests/test_ingest.py::test_ingest_event_collect_is_
-    # group_bounded asserts the row count == group count on a many-group
-    # batch).
-    events = [
-        r["event_json"]
-        for r in emit_ingest_events(bars, ["symbol", "timeframe"], "ts").collect()
-    ]
-    status = written.agg(
-        F.countDistinct("symbol").alias("assets"),
-        F.count(F.lit(1)).alias("bars"),
-    ).first()
     return IngestResult(
-        assets_processed_count=int(status["assets"]),
-        total_bars_saved=int(status["bars"]),
+        assets_processed_count=sum(r["symbol"] is not None for r in per_symbol),
+        total_bars_saved=sum(r["count"] for r in per_symbol),
         events=events,
     )
 
@@ -147,8 +166,9 @@ def streaming_ingest(
     checkpoint_path: str,
     processing_time: str | None = None,
 ):
-    """Streaming variant: foreachBatch reuses the same idempotent upsert
-    (R16) per micro-batch.
+    """Streaming variant: foreachBatch runs the same one-pass core as
+    ``run_batch_ingest``, and so the same idempotent upsert (R16), per
+    micro-batch.
 
     Trigger = the reference's R23 scheduler (``app/main.py:53-66``,
     ``app/config.py:38-41``) mapped to Structured Streaming:
@@ -161,12 +181,7 @@ def streaming_ingest(
     """
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        bars = normalize_bars(batch_df, assets)
-        upsert_partitioned_parquet(
-            spark, bars, table_path, BAR_KEY, ["bar_date"], BAR_ORDER
-        )
+        _ingest_batch(spark, batch_df, assets, table_path)
 
     return _start_foreach_batch(raw_stream, sink, checkpoint_path, processing_time)
 

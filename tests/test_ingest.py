@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+from types import SimpleNamespace
 
+import pytest
 from pyspark.sql import functions as F
 
 from dataingestion_pt_ms_spark.sources.sinks import (
@@ -394,3 +396,167 @@ def test_ingest_event_collect_is_group_bounded(spark):
     )
     events = emit_ingest_events(batch, ["symbol", "timeframe"], "ts")
     assert events.count() == 200
+
+
+def _multi_day_batch(spark):
+    """Three days of two timeframes for two symbols, plus an in-batch
+    duplicate key and a null-symbol row (R4)."""
+    rows = []
+    for s in ("SPY", "QQQ"):
+        for d in range(3):
+            for tf in ("Day", "Hour"):
+                t = dt.datetime(2024, 1, 1 + d, 14, 30, tzinfo=UTC)
+                rows.append((s, tf, t, 100.0 + d, 102.0 + d, 99.0 + d, 101.0 + d, 1000 + d))
+    t = dt.datetime(2024, 1, 2, 14, 30, tzinfo=UTC)
+    rows.append(("SPY", "Day", t, 1.0, 2.0, 0.5, 1.5, 7))
+    rows.append((None, "Day", t, 1.0, 2.0, 0.5, 1.5, 7))
+    return spark.createDataFrame(rows, RAW_BAR_SCHEMA)
+
+
+def _node_names(graph):
+    nodes = graph.allNodes()
+    return [nodes.apply(i).name() for i in range(nodes.size())]
+
+
+@pytest.fixture(scope="module")
+def second_ingest(spark, tmp_path_factory):
+    """Ingest the multi-day batch twice into one table; the second call
+    runs in its own job group and reports its jobs, its write's executed
+    plan nodes and the RDD blocks it left stored."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execution_ids():
+        it = store.executionsList().iterator()
+        ids = []
+        while it.hasNext():
+            ids.append(it.next().executionId())
+        return ids
+
+    def stored_rdds():
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    path = str(tmp_path_factory.mktemp("ingest") / "bars")
+    raw, assets = _multi_day_batch(spark), _assets(spark)
+    run_batch_ingest(spark, raw, assets, path)
+    bus.waitUntilEmpty()
+    seen, blocks = set(execution_ids()), stored_rdds()
+    group = "second-ingest"
+    sc.setJobGroup(group, group)
+    try:
+        result = run_batch_ingest(spark, raw, assets, path)
+    finally:
+        sc.setJobGroup("", "")
+    bus.waitUntilEmpty()
+    plans = [
+        _node_names(store.planGraph(i)) for i in execution_ids() if i not in seen
+    ]
+    return SimpleNamespace(
+        raw=raw,
+        result=result,
+        jobs=len(sc.statusTracker().getJobIdsForGroup(group)),
+        writes=[p for p in plans if "Execute InsertIntoHadoopFsRelationCommand" in p],
+        new_blocks=stored_rdds() - blocks,
+    )
+
+
+def test_second_ingest_runs_at_most_nine_jobs(second_ingest):
+    """One aggregate for events and touched partitions, one upsert write
+    and one status aggregate: no second normalize, no semi-join, no
+    schema inference and no staging job."""
+    assert second_ingest.jobs <= 9, second_ingest.jobs
+    assert second_ingest.result.total_bars_saved == 12
+    assert second_ingest.result.assets_processed_count == 2
+
+
+def test_upsert_write_has_one_exchange(second_ingest):
+    """The write's executed plan shuffles once, on the partition column:
+    the last-wins window partitioned by (bar_date, *key) reuses it."""
+    (nodes,) = second_ingest.writes
+    assert nodes.count("Exchange") == 1, nodes
+    assert "Window" in nodes
+
+
+def test_ingest_leaves_no_stored_blocks(second_ingest):
+    """The upsert stages nothing in executor-local blocks: a lost executor
+    cannot fail a later read of them."""
+    assert not second_ingest.new_blocks
+
+
+# The events a multi-day batch produced before the ingest ran in one pass;
+# bars_count counts the batch's valid rows, in-batch duplicates included.
+_GOLDEN_EVENTS = [
+    '{"event_type":"HistoricalDataUpdated","payload":{"symbol":"QQQ","timeframe":"Day",'
+    '"bars_count":3,"start_timestamp_utc":"2024-01-01T14:30:00Z","end_timestamp_utc":"2024-01-03T14:30:00Z"}}',
+    '{"event_type":"HistoricalDataUpdated","payload":{"symbol":"QQQ","timeframe":"Hour",'
+    '"bars_count":3,"start_timestamp_utc":"2024-01-01T14:30:00Z","end_timestamp_utc":"2024-01-03T14:30:00Z"}}',
+    '{"event_type":"HistoricalDataUpdated","payload":{"symbol":"SPY","timeframe":"Day",'
+    '"bars_count":4,"start_timestamp_utc":"2024-01-01T14:30:00Z","end_timestamp_utc":"2024-01-03T14:30:00Z"}}',
+    '{"event_type":"HistoricalDataUpdated","payload":{"symbol":"SPY","timeframe":"Hour",'
+    '"bars_count":3,"start_timestamp_utc":"2024-01-01T14:30:00Z","end_timestamp_utc":"2024-01-03T14:30:00Z"}}',
+]
+
+
+def test_ingest_events_byte_identical_on_multi_day_batch(spark, second_ingest):
+    assert sorted(second_ingest.result.events) == _GOLDEN_EVENTS
+    bars = normalize_bars(second_ingest.raw, _assets(spark))
+    alone = emit_ingest_events(bars, ["symbol", "timeframe"], "ts").collect()
+    assert sorted(r.event_json for r in alone) == _GOLDEN_EVENTS
+
+
+def test_upsert_prunes_by_every_partition_column(spark, tmp_path):
+    """Two partition columns, one of them null for a key: the batch
+    rewrites exactly the (region, day) pairs it touches, and a pair that
+    shares only one value with a touched pair keeps its files."""
+    path = tmp_path / "t"
+    schema = "k long, v string, ver long, region string, day date"
+    d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 1, 2)
+    first = [
+        (1, "a", 1, "eu", d1),
+        (2, "b", 1, "eu", d2),
+        (3, "c", 1, "us", d1),
+        (4, "d", 1, None, d1),
+    ]
+    upsert_partitioned_parquet(
+        spark, spark.createDataFrame(first, schema), str(path), ["k"], ["region", "day"], "ver"
+    )
+
+    def files():
+        return {
+            p.relative_to(path).as_posix(): p.stat().st_size
+            for p in path.glob("region=*/day=*/*.parquet")
+        }
+
+    before = files()
+    batch = [(1, "a2", 2, "eu", d1), (4, "d2", 2, None, d1), (5, "e", 1, "us", d2)]
+    upsert_partitioned_parquet(
+        spark, spark.createDataFrame(batch, schema), str(path), ["k"], ["region", "day"], "ver"
+    )
+    got = {(r.k, r.v) for r in spark.read.parquet(str(path)).collect()}
+    assert got == {(1, "a2"), (2, "b"), (3, "c"), (4, "d2"), (5, "e")}
+    after = files()
+    for untouched in ("region=eu/day=2024-01-02/", "region=us/day=2024-01-01/"):
+        kept = {f: s for f, s in before.items() if f.startswith(untouched)}
+        assert kept and kept == {f: s for f, s in after.items() if f.startswith(untouched)}
+
+
+def test_upsert_key_partition_contract(spark, tmp_path):
+    """The upsert dedups per (partition, key) and reads only touched
+    partitions, which is per-key last-wins because a key's partition value
+    is a function of the key: a re-sent key replaces its row. A caller
+    that moves a stored key to another partition breaks the contract and
+    keeps one row per partition, as the docstring states."""
+    path = str(tmp_path / "t")
+    schema = "k long, v string, ver long, dt date"
+    d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 1, 2)
+    for rows in ([(1, "a", 1, d1), (2, "b", 1, d2)], [(1, "a2", 2, d1)]):
+        upsert_partitioned_parquet(
+            spark, spark.createDataFrame(rows, schema), path, ["k"], ["dt"], "ver"
+        )
+    got = sorted((r.k, r.v, r.dt) for r in spark.read.parquet(path).collect())
+    assert got == [(1, "a2", d1), (2, "b", d2)]
+    moved = spark.createDataFrame([(2, "b2", 2, d1)], schema)
+    upsert_partitioned_parquet(spark, moved, path, ["k"], ["dt"], "ver")
+    got = sorted((r.k, r.v, r.dt) for r in spark.read.parquet(path).collect())
+    assert got == [(1, "a2", d1), (2, "b", d2), (2, "b2", d1)]

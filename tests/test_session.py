@@ -11,10 +11,12 @@ import ast
 import subprocess
 import sys
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
 from dataingestion_pt_ms_spark.session import (
+    CODEGEN_CACHE_MAX_ENTRIES,
     STATE_STORES_PER_OP,
     cluster_profile_conf,
     interval_join_state_gb,
@@ -41,11 +43,14 @@ def test_cluster_profile_conf_formulas():
         "spark.sql.shuffle.partitions": "4800",
         "spark.sql.files.maxPartitionBytes": "256m",
         "spark.driver.memory": "16g",
+        # fixed: every executor JVM sizes its own codegen cache from it
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_MAX_ENTRIES),
     }
     # defaults hold when the env is empty
     d = cluster_profile_conf({})
     assert d["spark.sql.shuffle.partitions"] == str(3 * 8 * 4)
     assert d["spark.executor.memory"] == "16g"
+    assert d["spark.sql.codegen.cache.maxEntries"] == str(CODEGEN_CACHE_MAX_ENTRIES)
 
 
 def test_streaming_state_conf_formulas():
@@ -137,6 +142,7 @@ def test_submit_conf_cli_emits_profile_flags():
     assert "--conf spark.executor.instances=50" in out
     assert "--conf spark.sql.shuffle.partitions=600" in out  # 3*50*4
     assert "--conf spark.sql.files.maxPartitionBytes=128m" in out
+    assert f"--conf spark.sql.codegen.cache.maxEntries={CODEGEN_CACHE_MAX_ENTRIES}" in out
 
 
 def test_profile_built_session_carries_confs():
@@ -224,3 +230,47 @@ def test_lazy_materialize_runs_shuffle_stages_at_call_under_aqe(spark, aqe):
         assert at_call >= 1
     else:
         assert at_call == 0
+
+
+def _llm_curation_queries() -> tuple[str, ...]:
+    """The llm_curation benchmark workload's queries, read from
+    ``perfbench/workloads.py`` without importing it."""
+    src = Path(__file__).resolve().parent.parent / "perfbench" / "workloads.py"
+    for node in ast.parse(src.read_text()).body:
+        if isinstance(node, ast.Assign) and any(
+            getattr(t, "id", None) == "LLM_CURATION" for t in node.targets
+        ):
+            return ast.literal_eval(node.value)
+    raise AssertionError("LLM_CURATION not found")
+
+
+def test_repeated_llm_curation_pass_compiles_nothing(spark, sf_dir):
+    """The codegen cache holds a whole llm_curation pass: built and drained
+    again, the ten queries reuse every generated class. At Spark's default
+    size (100) the second pass recompiled about 240."""
+    from dataingestion_pt_ms_spark.queries import registry
+
+    specs, names = registry(), _llm_curation_queries()
+    compiles = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    counts = []
+    for _ in range(2):
+        for name in names:
+            specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        counts.append(compiles.METRIC_COMPILATION_TIME().getCount())
+    assert counts[1] == counts[0], f"second pass compiled {counts[1] - counts[0]} classes"
+
+
+def test_small_codegen_cache_warns_once(monkeypatch):
+    """A session built elsewhere with a smaller codegen cache cannot be
+    resized (static conf): the catalog names both sizes, once."""
+    from dataingestion_pt_ms_spark import catalog
+
+    conf = {"spark.sql.codegen.cache.maxEntries": "100"}
+    stub = SimpleNamespace(conf=SimpleNamespace(get=conf.__getitem__))
+    monkeypatch.setattr(catalog, "_codegen_cache_warned", False)
+    with pytest.warns(RuntimeWarning) as caught:
+        catalog._warn_small_codegen_cache(stub)
+        catalog._warn_small_codegen_cache(stub)
+    assert len(caught) == 1
+    msg = str(caught[0].message)
+    assert "100" in msg and str(CODEGEN_CACHE_MAX_ENTRIES) in msg
